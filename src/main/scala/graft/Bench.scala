@@ -66,21 +66,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = {
-      var b = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.extensions", classOf[GraftExtensions].getName)
-        .config("spark.ui.enabled", "false")
-      // Fork-free local-FS permission stamping (round 18, guide §7.3):
-      // without hadoop native IO, every file create/mkdir shells out a
-      // chmod — a process fork per written file from a multi-GB JVM,
-      // measured dominating warm write commits. Engine-level, applies
-      // to every query identically; see graft.util.LocalFs.
-      graft.util.EngineDefaults.confs.foreach { case (k, v) => b = b.config(k, v) }
-      b.getOrCreate()
-    }
+    val spark = graft.util.EngineDefaults.session(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
 
     def load1m(): Double =

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.catalog.Snaplog
@@ -17,18 +17,7 @@ object Lab {
   def main(args: Array[String]): Unit = {
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = {
-      var b = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.extensions", classOf[GraftExtensions].getName)
-        .config("spark.ui.enabled", "false")
-      graft.util.EngineDefaults.confs.foreach { case (k, v) => b = b.config(k, v) }
-      sys.env.get("GRAFT_LAB_CKSUM").foreach(v =>
-        b = b.config("spark.sql.streaming.checkpoint.fileChecksum.enabled", v))
-      b.getOrCreate()
-    }
+    val spark = graft.util.EngineDefaults.session(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
 

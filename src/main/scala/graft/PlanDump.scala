@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: write `.explain("formatted")` for named `SparkEntry.queries`
   * (all of them with no args) to one file per query under an output dir.
   *
@@ -19,16 +17,7 @@ object PlanDump {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val outDir = args.headOption.getOrElse("target/plans")
-    val spark = {
-      var b = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.extensions", classOf[GraftExtensions].getName)
-        .config("spark.ui.enabled", "false")
-      graft.util.EngineDefaults.confs.foreach { case (k, v) => b = b.config(k, v) }
-      b.getOrCreate()
-    }
+    val spark = graft.util.EngineDefaults.session(cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
 

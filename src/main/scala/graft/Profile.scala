@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: time named `SparkEntry.queries` cold and warm inside ONE JVM.
   *
   * Bench variance on a shared VM is huge run-to-run; the only trustworthy
@@ -16,16 +14,7 @@ object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = {
-      var b = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.extensions", classOf[GraftExtensions].getName)
-        .config("spark.ui.enabled", "false")
-      graft.util.EngineDefaults.confs.foreach { case (k, v) => b = b.config(k, v) }
-      b.getOrCreate()
-    }
+    val spark = graft.util.EngineDefaults.session(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     // absorb engine bring-up so the first timed query isn't charged for it
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,17 +11,7 @@ object Verify {
     def keep(name: String): Boolean =
       prefixes.forall(_.exists(name.startsWith))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = {
-      var b = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.extensions", classOf[GraftExtensions].getName)
-        .config("spark.ui.enabled", "false")
-      // fork-free local-FS permission stamping (round 18, guide §7.3)
-      graft.util.EngineDefaults.confs.foreach { case (k, v) => b = b.config(k, v) }
-      b.getOrCreate()
-    }
+    val spark = graft.util.EngineDefaults.session(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>

@@ -204,24 +204,6 @@ trait Catalog {
     windowSnapshots(ns, t, asOf).filterNot(Snaplog.isWapStaged)
       .flatMap(_.files).filterNot(_.deleteFile.contains(true))
 
-  /** Data files added on MAIN lineage in `(fromSnapshot, toSnapshot]` —
-    * the strict (file-adds-only) incremental delta. Exact for
-    * append/add_files chains (checkpoint folds are content no-ops and
-    * cross silently; WAP-staged branch commits are not main history); a
-    * reset commit, merge-on-read delete or equality delete in the range
-    * fails loudly because its delta is not expressible as file adds.
-    * Consumers that can JOIN (scanIncremental, any DataFrame reader)
-    * should use [[addedEntriesBetween]] instead, which admits equality
-    * deletes and returns the sequence needed to net them out. */
-  final def addedDataFilesBetween(ns: String, t: String,
-      fromSnapshot: Long, toSnapshot: Long): Seq[DataFileEntry] = {
-    val entries = addedEntriesBetween(ns, t, fromSnapshot, toSnapshot)
-    require(entries.forall(e => !e.deleteFile.contains(true)),
-      "incremental read across an equality delete is not expressible as " +
-        "file-adds — use addedEntriesBetween and subtract the keys")
-    entries
-  }
-
   /** Replay-ordered entries added on MAIN lineage in `(fromSnapshot,
     * toSnapshot]`: data files interleaved with EQUALITY-delete key
     * files, in the order the log committed them — the NET-delta
@@ -405,17 +387,6 @@ trait Catalog {
       }
     }
     (Some(cur.snapshotId), staged)
-  }
-
-  /** A branch's full content as (data files, delete vectors): main as
-    * of the fork point + the branch's staged appends. */
-  final def branchFilesSplit(ns: String, t: String,
-      branch: String): (Seq[DataFileEntry], Seq[DataFileEntry]) = {
-    val (base, staged) = branchLineage(ns, t, branch)
-    val (baseData, baseDels) = base
-      .map(b => liveFilesSplit(ns, t, Some(b)))
-      .getOrElse((Seq.empty, Seq.empty))
-    (baseData ++ staged.flatMap(_.files), baseDels)
   }
 
   /** Persist the complete ref map (implementation storage). */

@@ -29,10 +29,4 @@ object VectorFunctions {
 
   /** Cosine similarity of two double vectors. */
   def cosine(a: Column, b: Column): Column = dot(a, b) / (l2Norm(a) * l2Norm(b))
-
-  /** Cosine given precomputed norms (avoids recomputing the norm of a
-    * broadcast query vector per candidate row — the form the top-k
-    * operators use). */
-  def cosinePrenormed(a: Column, b: Column, normA: Column, normB: Column): Column =
-    dot(a, b) / (normA * normB)
 }

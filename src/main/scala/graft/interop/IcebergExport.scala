@@ -579,15 +579,10 @@ object IcebergExport {
       else {
         // parallel footer probe (no data pages), ONE open per file for
         // ALL defaulted columns — same shape as the rename gate's probe
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.DurationInt
-        implicit val ec: ExecutionContext = ExecutionContext.global
         val wanted = defaultedCols.map(Seq(_))
-        Await.result(
-          Future.traverse(defaultLivePaths)(p =>
-            Future(scala.concurrent.blocking((p,
-              graft.types.FieldIds.fileContainsAll(table.spark, p, wanted))))),
-          30.minutes).filter(_._2).map(_._1).toSet
+        defaultLivePaths.zip(graft.util.Par.map(defaultLivePaths)(p =>
+          graft.types.FieldIds.fileContainsAll(table.spark, p, wanted)))
+          .filter(_._2).map(_._1).toSet
       }
     locally {
       lazy val missing = defaultLivePaths.filterNot(defaultSafePaths)

@@ -559,18 +559,11 @@ object IcebergImport {
   }
   // manifests read in PARALLEL (driver-side Avro IO — a large tree
   // carries one manifest per commit, and import latency must be one
-  // round trip, not one per manifest); Future.traverse preserves
+  // round trip, not one per manifest); Par.map preserves
   // manifest ORDER, so the stable sequence sort below keeps its
   // deterministic within-sequence tiebreak
-  private def allEntries(mfs: Seq[GenericRecord]): Seq[(GenericRecord, Long)] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.DurationInt
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    Await.result(
-      Future.traverse(mfs)(mf =>
-        Future(scala.concurrent.blocking(manifestEntries(mf)))),
-      30.minutes).flatten
-  }
+  private def allEntries(mfs: Seq[GenericRecord]): Seq[(GenericRecord, Long)] =
+    graft.util.Par.map(mfs)(manifestEntries).flatten
 
   /** Walk one snapshot's manifest list into validated data entries and
     * MOR delete plans, all sequence-attributed.
@@ -607,16 +600,8 @@ object IcebergImport {
       if (mf.getSchema.getField("partition_spec_id") == null) tree.defaultSpecId
       else Option(mf.get("partition_spec_id")).map(_.asInstanceOf[Int])
         .getOrElse(tree.defaultSpecId)
-    val dataPerManifest: Seq[(Int, Seq[(GenericRecord, Long)])] = {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.DurationInt
-      implicit val ec: ExecutionContext = ExecutionContext.global
-      Await.result(
-        Future.traverse(dataManifests)(mf =>
-          Future(scala.concurrent.blocking(
-            (mfSpecId(mf), manifestEntries(mf))))),
-        30.minutes)
-    }
+    val dataPerManifest: Seq[(Int, Seq[(GenericRecord, Long)])] =
+      graft.util.Par.map(dataManifests)(mf => (mfSpecId(mf), manifestEntries(mf)))
     val dataWithSeq: Seq[(DataFileEntry, Long)] =
       dataPerManifest.flatMap { case (specId, entries) =>
         entries.map { case (e, seq) =>
@@ -839,17 +824,13 @@ object IcebergImport {
     * pass. */
   private def validateEq(spark: SparkSession,
       eqPlans: Seq[EqPlan]): Map[String, DataFileEntry] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.DurationInt
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val probed = Await.result(
-      Future.traverse(eqPlans)(p => Future(scala.concurrent.blocking {
-        val carries = graft.types.FieldIds.fileContainsAll(spark, p.path,
-          p.keyNames.map(Seq(_)))
-        (p, carries,
-          if (carries) Some(FileStats.stat(spark, p.path, Map.empty))
-          else None)
-      })), 30.minutes)
+    val probed = graft.util.Par.map(eqPlans) { p =>
+      val carries = graft.types.FieldIds.fileContainsAll(spark, p.path,
+        p.keyNames.map(Seq(_)))
+      (p, carries,
+        if (carries) Some(FileStats.stat(spark, p.path, Map.empty))
+        else None)
+    }
     probed.map { case (p, carries, stOpt) =>
       require(carries,
         s"${p.path}: equality delete file does not carry all key " +
@@ -1341,15 +1322,10 @@ object IcebergImport {
       paths: Seq[String]): Unit = {
     if (!meta.properties.get(graft.types.FieldIds.InteriorByIdProp)
         .contains("true")) return
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.DurationInt
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val bad = Await.result(
-      Future.traverse(paths)(p => Future(scala.concurrent.blocking(
-        (p, graft.types.FieldIds.fileCarriesInteriorIds(spark, p))))),
-      30.minutes).filterNot(_._2)
-    require(bad.isEmpty,
-      s"cannot refresh $ns.$name: ${bad.size} new source data file(s) " +
+    val bad = graft.util.Par.map(paths)(p =>
+      graft.types.FieldIds.fileCarriesInteriorIds(spark, p)).count(!_)
+    require(bad == 0,
+      s"cannot refresh $ns.$name: $bad new source data file(s) " +
         "carry no interior field ids, but the mirror resolves list/map " +
         "interiors BY ID (an interior rename was adopted) — rewrite the " +
         "source files interior-stamped or re-register")
@@ -1360,14 +1336,8 @@ object IcebergImport {
     * mixed. */
   private def idProbe(spark: SparkSession,
       paths: Seq[String]): Option[Boolean] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.DurationInt
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val probed = Await.result(
-      Future.traverse(paths)(p =>
-        Future(scala.concurrent.blocking(
-          graft.types.FieldIds.fileCarriesIds(spark, p)))),
-      30.minutes)
+    val probed = graft.util.Par.map(paths)(p =>
+      graft.types.FieldIds.fileCarriesIds(spark, p))
     if (probed.forall(identity)) Some(true)
     else if (!probed.exists(identity)) Some(false)
     else None
@@ -1541,16 +1511,11 @@ object IcebergImport {
       // interior-by-id reads need every mirror file interior-stamped
       val paths = catalog.snapshots(ns, name).flatMap(_.files)
         .filterNot(_.deleteFile.contains(true)).map(_.path).distinct
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.DurationInt
-      implicit val ec: ExecutionContext = ExecutionContext.global
-      val bad = Await.result(
-        Future.traverse(paths)(p => Future(scala.concurrent.blocking(
-          (p, FieldIds.fileCarriesInteriorIds(spark, p))))),
-        30.minutes).filterNot(_._2)
-      if (bad.nonEmpty)
+      val bad = graft.util.Par.map(paths)(p =>
+        FieldIds.fileCarriesInteriorIds(spark, p)).count(!_)
+      if (bad > 0)
         refuse(s"the source renamed a list/map interior member but " +
-          s"${bad.size} mirror file(s) carry no interior field ids — " +
+          s"$bad mirror file(s) carry no interior field ids — " +
           "interior-by-id resolution cannot serve them")
     }
     // rewrite the OLD schema's nested member names to the source's

@@ -60,12 +60,6 @@ object Similarity {
       .select(col("query_id"), col("rank"), col("id").as("vec_id"), col("cosine"))
   }
 
-  /** Deterministic random-hyperplane sign sketch (`planeBits` bits) as
-    * an int bucket key — native fused expression; plane (b,i) is ±1 by
-    * the parity of byteswap64((b<<32)|i). */
-  def hyperplaneBucket(df: DataFrame, vec: Column, planeBits: Int): Column =
-    VectorOps.hyperplaneSketch(df.sparkSession, vec, planeBits)
-
   /** Lloyd k-means coarse quantizer for [[ivfTopK]], trained
     * distributed: assignment is the native ivf_cells expression mapped
     * over the corpus; the update step is an exact decimal per-dimension

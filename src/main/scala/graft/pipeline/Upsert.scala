@@ -17,12 +17,9 @@ import graft.table.LakehouseTable
   * make the within-batch tie deterministic via an explicit `tiebreak`
   * column (documented deviation, SURVEY.md §7.4).
   *
-  * Formulation: `existing LEFT ANTI JOIN incoming ON keys` ∪ `incoming`
-  * — the idiomatic distributed MERGE. One shuffle on the key for the
-  * anti join (or zero when `incoming` is broadcast-small, which AQE
-  * decides at runtime); no window over the full table, so the big side
-  * is never sorted. The alternative union+row_number formulation windows
-  * over |existing|+|incoming| rows — strictly worse at scale.
+  * Formulation: the deduplicated batch lands as ONE merge-on-read
+  * commit ([[LakehouseTable.mergeDelta]]) — the existing table is never
+  * scanned, joined or rewritten, so the per-call cost is batch-sized.
   */
 object Upsert {
 
@@ -37,15 +34,6 @@ object Upsert {
       incoming.withColumn("__rn", row_number().over(w))
         .filter(col("__rn") === 1).drop("__rn")
     case None => incoming.dropDuplicates(keys)
-  }
-
-  /** Pure-DataFrame merge (no table involved). */
-  def merge(existing: DataFrame, incoming: DataFrame, keys: Seq[String],
-      tiebreak: Option[String] = None): DataFrame = {
-    val newRows = dedupIncoming(incoming, keys, tiebreak)
-    val keep = existing.join(
-      newRows.select(keys.map(col): _*), keys, "left_anti")
-    keep.unionByName(newRows.select(existing.columns.map(col).toIndexedSeq: _*))
   }
 
   /** Table-level upsert — DELTA-SIZED (merge-on-read): one commit
@@ -64,23 +52,6 @@ object Upsert {
       summary: Map[String, String] = Map.empty): Snapshot =
     table.mergeDelta(keys, dedupIncoming(incoming, keys, tiebreak),
       summary = summary)
-
-  /** The COPY-ON-WRITE form of [[upsertTable]]: scan current snapshot →
-    * merge → overwrite commit (reference `table.overwrite(merged)`
-    * `upsert.py:84`, `upsert_parquet-lazy-polars.py:97`). Rewrites the
-    * whole table per call — use when the batch is table-sized or as the
-    * compaction-triggered consolidation of the delta tier; the default
-    * path for per-batch calls is [[upsertTable]]. */
-  def upsertTableCow(table: LakehouseTable, incoming: DataFrame,
-      keys: Seq[String], tiebreak: Option[String] = None,
-      summary: Map[String, String] = Map.empty): Snapshot = {
-    // the merged content derives from this scan — make the overwrite
-    // conditional on it so a racing commit conflicts instead of
-    // silently vanishing under the merge result
-    val base = table.currentSnapshotId
-    val merged = merge(table.scan(), incoming, keys, tiebreak)
-    table.overwrite(merged, summary, expectedSnapshotId = Some(base))
-  }
 
   /** CDC apply — MERGE with a delete clause: `changes` carries `opCol`
     * where 'D' rows delete their key and every other op (including a
@@ -123,22 +94,5 @@ object Upsert {
           winners.filter(isDelete).select(keys.map(col): _*)),
         cacheFeed = false)
     } finally winners.unpersist(false)
-  }
-
-  /** The COPY-ON-WRITE form of [[applyChanges]] — scan → anti-join →
-    * full overwrite in one conditional commit. Table-sized per call;
-    * kept for table-scale change sets and as the consolidation path. */
-  def applyChangesCow(table: LakehouseTable, changes: DataFrame,
-      keys: Seq[String], opCol: String = "op",
-      tiebreak: Option[String] = None): Snapshot = {
-    val base = table.currentSnapshotId
-    val existing = table.scan()
-    val winners = dedupIncoming(changes, keys, tiebreak)
-    val keep = existing.join(
-      winners.select(keys.map(col): _*), keys, "left_anti")
-    val upserts = winners
-      .filter(!coalesce(col(opCol) === "D", lit(false)))
-      .select(existing.columns.map(col).toIndexedSeq: _*)
-    table.overwrite(keep.unionByName(upserts), expectedSnapshotId = Some(base))
   }
 }

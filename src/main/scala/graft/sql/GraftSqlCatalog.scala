@@ -1885,7 +1885,6 @@ class GraftSqlCatalog extends TableCatalog with SupportsNamespaces
     val renames = Seq.newBuilder[TableChange.RenameColumn]
     val drops = Seq.newBuilder[TableChange.DeleteColumn]
     val widens = Seq.newBuilder[TableChange.UpdateColumnType]
-    val nestedWidens = Seq.newBuilder[TableChange.UpdateColumnType]
     val setDefaults = Seq.newBuilder[TableChange.UpdateColumnDefaultValue]
     val setProps = Map.newBuilder[String, String]
     val unsetProps = Seq.newBuilder[String]
@@ -1921,11 +1920,8 @@ class GraftSqlCatalog extends TableCatalog with SupportsNamespaces
           if ud.fieldNames().length == 1 => setDefaults += ud
       case rn: TableChange.RenameColumn => renames += rn
       case dc: TableChange.DeleteColumn => drops += dc
-      case ut: TableChange.UpdateColumnType
-          if ut.fieldNames().length == 1 => widens += ut
-      // `ALTER COLUMN parent.child TYPE bigint` — the struct-leaf widen
-      case ut: TableChange.UpdateColumnType
-          if ut.fieldNames().length > 1 => nestedWidens += ut
+      // `ALTER COLUMN c TYPE bigint`, or `parent.child` for a struct leaf
+      case ut: TableChange.UpdateColumnType => widens += ut
       case sp: TableChange.SetProperty =>
         // Spark-reserved bookkeeping keys are not table properties a
         // log reader should see (mirrors createTable's filter); the
@@ -1963,7 +1959,7 @@ class GraftSqlCatalog extends TableCatalog with SupportsNamespaces
       }
     val addList = adds.result()
     val nestedAddList = nestedAdds.result()
-    val nestedWidenList = nestedWidens.result()
+    val widenList = widens.result()
     val setDefaultList = setDefaults.result()
     val renameList = renames.result()
     // honor IF EXISTS: a missing drop target with the flag is a no-op
@@ -2014,7 +2010,7 @@ class GraftSqlCatalog extends TableCatalog with SupportsNamespaces
         nestedAddList.foreach { a =>
           sch = SchemaInfer.addInnerField(sch, a.fieldNames().toSeq, a.dataType())
         }
-        nestedWidenList.foreach { w =>
+        widenList.filter(_.fieldNames().length > 1).foreach { w =>
           require(SchemaInfer.innerType(sch, w.fieldNames().toSeq).isDefined,
             s"no struct leaf '${w.fieldNames().mkString(".")}' in $ns.$t")
         }
@@ -2049,22 +2045,12 @@ class GraftSqlCatalog extends TableCatalog with SupportsNamespaces
     // runs the foreign-file probe inside the evolution lock)
     nestedAddList.foreach(a =>
       tbl.addStructField(a.fieldNames().mkString("."), a.dataType()))
-    // RENAME/DROP are metadata-only via field-id indirection — the
-    // table-side ops re-run every eligibility gate before mutating;
-    // struct-chain targets route to the inner tier (round 13)
-    renameList.foreach(rn =>
-      if (rn.fieldNames().length == 1)
-        tbl.renameColumn(rn.fieldNames()(0), rn.newName())
-      else tbl.renameStructField(rn.fieldNames().mkString("."), rn.newName()))
-    dropList.foreach(dc =>
-      if (dc.fieldNames().length == 1) tbl.dropColumn(dc.fieldNames()(0))
-      else tbl.dropStructField(dc.fieldNames().mkString(".")))
-    // widening is metadata-only and re-validated per-op (promotion
-    // rules + the bucket-source refusal) inside widenColumn
-    widens.result().foreach(ut =>
-      tbl.widenColumn(ut.fieldNames()(0), ut.newDataType()))
-    nestedWidenList.foreach(ut =>
-      tbl.widenStructField(ut.fieldNames().mkString("."), ut.newDataType()))
+    // RENAME/DROP are metadata-only via field-id indirection and
+    // widening is metadata-only too — the table-side path ops re-run
+    // every eligibility gate of the path's depth before mutating
+    renameList.foreach(rn => tbl.renameField(rn.fieldNames().toSeq, rn.newName()))
+    dropList.foreach(dc => tbl.dropField(dc.fieldNames().toSeq))
+    widenList.foreach(ut => tbl.widenField(ut.fieldNames().toSeq, ut.newDataType()))
     val (set, unset) = (setProps.result(), unsetProps.result())
     if (set.nonEmpty || unset.nonEmpty)
       backing.updateProperties(ns, t, set, unset)

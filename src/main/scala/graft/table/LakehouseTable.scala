@@ -1638,11 +1638,11 @@ final class LakehouseTable(
     * broadcast anti-join; [[compact]] (any reset commit) materializes
     * outstanding vectors and retires them.
     *
-    * Already position-deleted rows are never recorded twice, so
-    * `deleted-rows` stays exact; with outstanding EQUALITY deletes the
-    * count instead comes from the fully MOR-applied scan (positions for
-    * eq-deleted rows may still enter the vector — harmless, both
-    * subtractions remove the row — but they must not be counted). */
+    * One pass: positions come from the MOR-applied scan, so the vector
+    * records only currently VISIBLE matches — rows an outstanding
+    * position vector or equality delete already removed never enter it
+    * — and `deleted-rows` is the vector's row count, exact by
+    * construction. */
   def deleteMor(condition: Column): Snapshot = {
     val base = currentSnapshotId
     val ordered = catalog.liveEntriesOrdered(namespace, name)
@@ -1674,7 +1674,6 @@ final class LakehouseTable(
       statFile(p, Map.empty).copy(deleteFile = Some(true))
     }
     val recorded = vecFiles.map(_.rowCount).sum
-    val deletedRows = recorded
     if (recorded == 0) {
       // no matches: clean up the empty vector, commit an audit no-op
       graft.util.Fs.deleteTree(vecDir)
@@ -1682,7 +1681,7 @@ final class LakehouseTable(
         Map("deleted-rows" -> "0"), expectedSnapshotId = Some(base))
     }
     catalog.commit(namespace, name, Snaplog.OpMorDelete, vecFiles,
-      Map("deleted-rows" -> deletedRows.toString,
+      Map("deleted-rows" -> recorded.toString,
         "delete-vectors" -> vecFiles.size.toString),
       expectedSnapshotId = Some(base))
   }
@@ -2219,9 +2218,7 @@ final class LakehouseTable(
     m.properties.get(FieldIds.RegistryProp).map(FieldIds.decode) match {
       case Some(reg) if cols.forall(c =>
           !c._1.contains(",") && !c._1.contains(":")) =>
-        val last = m.properties.get(FieldIds.LastIdProp).map(_.toInt)
-          .getOrElse(if (reg.isEmpty) 0 else reg.values.max)
-        var next = last
+        var next = lastFieldId(m, reg)
         val topIds = cols.map { case (n, _, _) => next += 1; n -> next }
         // new STRUCT columns get dotted inner ids too (round 13), so
         // their files stamp inner ids from birth; same encodability
@@ -2348,22 +2345,14 @@ final class LakehouseTable(
       val foreign = catalog.snapshots(namespace, name).flatMap(_.files)
         .filterNot(_.deleteFile.contains(true)).map(_.path).distinct
         .filterNot(_.startsWith(prefix))
-      if (foreign.nonEmpty) {
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.DurationInt
-        implicit val ec: ExecutionContext = ExecutionContext.global
-        val holding = Await.result(
-          Future.traverse(foreign)(p =>
-            Future(scala.concurrent.blocking(
-              (p, FieldIds.fileContainsPath(spark, p, parts))))),
-          30.minutes).filter(_._2).map(_._1)
-        require(holding.isEmpty,
-          s"cannot add '$dottedPath' to $namespace.$name: " +
-            s"${holding.size} foreign file(s) (add_files/import) already " +
-            "hold a field at that path — their bytes would resurrect " +
-            "under the new name (nested children resolve by name); " +
-            "compact() first")
-      }
+      val holding = graft.util.Par.map(foreign)(p =>
+        FieldIds.fileContainsPath(spark, p, parts)).count(identity)
+      require(holding == 0,
+        s"cannot add '$dottedPath' to $namespace.$name: " +
+          s"$holding foreign file(s) (add_files/import) already " +
+          "hold a field at that path — their bytes would resurrect " +
+          "under the new name (nested children resolve by name); " +
+          "compact() first")
     }
     val freedHere = FieldIds.namesSet(
       m.properties, FieldIds.FreedNamesProp)(lower)
@@ -2376,23 +2365,15 @@ final class LakehouseTable(
     if (freedHere && !innerIdsActive(m)) {
       val all = catalog.snapshots(namespace, name).flatMap(_.files)
         .filterNot(_.deleteFile.contains(true)).map(_.path).distinct
-      if (all.nonEmpty) {
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.DurationInt
-        implicit val ec: ExecutionContext = ExecutionContext.global
-        val holding = Await.result(
-          Future.traverse(all)(p =>
-            Future(scala.concurrent.blocking(
-              (p, FieldIds.fileContainsPath(spark, p, parts))))),
-          30.minutes).filter(_._2).map(_._1)
-        require(holding.isEmpty,
-          s"cannot re-add freed inner field '$dottedPath' to " +
-            s"$namespace.$name: ${holding.size} file(s) still hold bytes " +
-            "at that path and inner resolution is by NAME — the dropped " +
-            "values would resurrect (time travel included); compact() " +
-            "drops the field physically, expireSnapshots() retires the " +
-            "pre-drop history, then retry")
-      }
+      val holding = graft.util.Par.map(all)(p =>
+        FieldIds.fileContainsPath(spark, p, parts)).count(identity)
+      require(holding == 0,
+        s"cannot re-add freed inner field '$dottedPath' to " +
+          s"$namespace.$name: $holding file(s) still hold bytes " +
+          "at that path and inner resolution is by NAME — the dropped " +
+          "values would resurrect (time travel included); compact() " +
+          "drops the field physically, expireSnapshots() retires the " +
+          "pre-drop history, then retry")
     }
     if (freedHere)
       catalog.updateProperties(namespace, name,
@@ -2407,11 +2388,7 @@ final class LakehouseTable(
     val encodable = parts.forall(c =>
       !c.contains(",") && !c.contains(":") && !c.contains("."))
     val reg2: Option[Map[String, Int]] = regProp.collect {
-      case reg if encodable =>
-        var next = m.properties.get(FieldIds.LastIdProp).flatMap(_.toIntOption)
-          .getOrElse(0).max(if (reg.isEmpty) 0 else reg.values.max)
-        next += 1
-        reg + (dottedPath -> next)
+      case reg if encodable => reg + (dottedPath -> (lastFieldId(m, reg) + 1))
     }
     val stored = reg2 match {
       case Some(r) if innerIdsActive(m) => FieldIds.attachAll(evolved, r)
@@ -2425,27 +2402,6 @@ final class LakehouseTable(
         Seq.empty)
     }
     catalog.updateSchema(namespace, name, stored)
-  }
-
-  /** [[widenColumn]] for a struct LEAF (`parent.child[...]`): the same
-    * Iceberg promotions (int→bigint, float→double, decimal precision),
-    * metadata-only — parquet's column readers are per-LEAF, so the
-    * read-time value-preserving promotion that widens a flat column
-    * widens a nested one identically. Inner fields are never partition
-    * or equality-delete sources (both refuse nested), and struct-leaf
-    * stat bounds compare numerically, so no bucket-source refusal
-    * applies below the top level. */
-  def widenStructField(dottedPath: String, to: DataType): TableMetadata =
-      catalog.withEvolutionLock(namespace, name) {
-    import graft.types.SchemaInfer
-    val parts = dottedPath.split('.').toSeq
-    val m = meta
-    val cur = SchemaInfer.innerType(m.schema, parts).getOrElse(
-      throw new IllegalArgumentException(
-        s"no struct leaf '$dottedPath' in $namespace.$name"))
-    requireWidening(cur, to)
-    catalog.updateSchema(namespace, name,
-      SchemaInfer.replaceInnerType(m.schema, parts, to))
   }
 
   /** LIST/MAP INTERIOR id-map updates for an evolved schema (round 14):
@@ -2485,9 +2441,7 @@ final class LakehouseTable(
         .filterNot(reg.contains)
     if (missing.isEmpty) reg
     else {
-      var next = m.properties.get(graft.types.FieldIds.LastIdProp)
-        .flatMap(_.toIntOption).getOrElse(0)
-        .max(if (reg.isEmpty) 0 else reg.values.max)
+      var next = lastFieldId(m, reg)
       reg ++ missing.map { k => next += 1; k -> next }
     }
   }
@@ -2499,93 +2453,6 @@ final class LakehouseTable(
     * files never silently change how nested content resolves. */
   private def innerIdsActive(m: TableMetadata): Boolean =
     graft.types.FieldIds.collectIds(m.schema).keys.exists(_.contains('.'))
-
-  /** INNER struct-field RENAME (round 13) — Iceberg's nested rename,
-    * metadata-only at any table size, by parquet field-id indirection
-    * one level down. The stored schema flips to carry ids on EVERY
-    * struct-chain field ([[graft.types.FieldIds.attachAll]]); Spark's
-    * reader then resolves inner fields strictly by id in every plan
-    * shape (full read, nested-pruned read, MOR subtraction, time
-    * travel — Spark 4.1's pruning preserves inner id metadata,
-    * verified in FieldEvolutionSpec), so files written under the OLD
-    * inner name keep serving the renamed field's values.
-    *
-    * Eligibility is the price of the flip: EVERY live-history data
-    * file must carry ids on every struct leaf — one id-less inner
-    * field in one file would silently null that file's leaves under an
-    * id-bearing request (strict-by-id goes per file). Managed files
-    * stamp inner ids from birth once the registry carries dotted
-    * entries (fresh r13+ tables always; older tables backfill the
-    * registry HERE, metadata-only, then compact() once). Foreign files
-    * refuse like every id evolution. Renaming a struct CONTAINER
-    * re-keys its whole subtree; the old dotted names are FREED and
-    * their stats poisoned on reuse, exactly the flat contract. */
-  def renameStructField(dottedPath: String, newLeaf: String): TableMetadata =
-      catalog.withEvolutionLock(namespace, name) {
-    import graft.types.{FieldIds, SchemaInfer}
-    val m = meta
-    val parts = dottedPath.split('.').toSeq
-    require(parts.length >= 2,
-      s"renameStructField needs parent.child[...], got '$dottedPath' — " +
-        "use renameColumn for top-level columns")
-    val cur = m.schema
-    SchemaInfer.innerType(cur, parts).getOrElse(
-      throw new IllegalArgumentException(
-        s"no struct field '$dottedPath' in $namespace.$name"))
-    val parent = SchemaInfer.innerType(cur, parts.init)
-      .collect { case st: StructType => st }
-      .getOrElse(throw new IllegalArgumentException(
-        s"'${parts.init.mkString(".")}' is not a struct"))
-    require(!parent.fieldNames.exists(_.equalsIgnoreCase(newLeaf)),
-      s"field '$newLeaf' already exists under '${parts.init.mkString(".")}'")
-    require(newLeaf.nonEmpty && !newLeaf.contains(",") &&
-      !newLeaf.contains(":") && !newLeaf.contains("."),
-      s"illegal field name '$newLeaf'")
-    val oldKey = parts.mkString(".")
-    val newKey = (parts.init :+ newLeaf).mkString(".")
-    // backfill + PERSIST dotted registry ids first (metadata-only, and
-    // always safe — more stamped ids never change name-resolution):
-    // if the file gate below refuses, the user's compact() must stamp
-    // these very ids, or the retry could never succeed
-    val reg = withInnerIds(m, fieldRegistry(m, "rename"))
-    if (reg.size > fieldRegistry(m, "rename").size)
-      catalog.updateProperties(namespace, name,
-        Map(FieldIds.RegistryProp -> FieldIds.encode(reg),
-          FieldIds.LastIdProp -> reg.values.max.toString),
-        Seq.empty)
-    val id = reg.getOrElse(oldKey, throw new UnsupportedOperationException(
-      s"cannot rename '$dottedPath' of $namespace.$name: the field has no " +
-        "id (a component name the registry cannot encode, or a list/map " +
-        "interior — those stay name-bound)"))
-    requireIdBearingFiles("rename (inner)", nested = true)
-    val prefix = oldKey + "."
-    val reg2 = reg.map {
-      case (k, v) if k == oldKey => newKey -> v
-      case (k, v) if k.startsWith(prefix) =>
-        (newKey + "." + k.stripPrefix(prefix)) -> v
-      case kv => kv
-    }
-    val renamed = SchemaInfer.editInnerField(cur, parts,
-      f => Some(f.copy(name = newLeaf)))
-    // schema first, registry second — the flat rename's crash ordering
-    catalog.updateSchema(namespace, name, FieldIds.attachAll(renamed, reg2))
-    val lowNew = newKey.toLowerCase(java.util.Locale.ROOT)
-    val reboundProps: Map[String, String] =
-      if (!FieldIds.namesSet(m.properties, FieldIds.FreedNamesProp)(lowNew))
-        Map.empty
-      else Map(FieldIds.StatsUnsafeProp ->
-        FieldIds.addNames(m.properties, FieldIds.StatsUnsafeProp,
-          Seq(lowNew, parts.head.toLowerCase(java.util.Locale.ROOT))))
-    catalog.updateProperties(namespace, name,
-      Map(FieldIds.RegistryProp -> FieldIds.encode(reg2),
-        FieldIds.LastIdProp -> reg2.values.max.toString,
-        FieldIds.FreedNamesProp ->
-          FieldIds.addNames(m.properties, FieldIds.FreedNamesProp,
-            (reg.keys.filter(k => k == oldKey || k.startsWith(prefix))
-              .toSeq :+ oldKey).distinct))
-        ++ reboundProps,
-      Seq.empty)
-  }
 
   /** LIST/MAP INTERIOR field RENAME (round 15) — the name-mapping
     * evolution the interior-id stamping (round 14) was laid down for:
@@ -2668,10 +2535,7 @@ final class LakehouseTable(
       Map(FieldIds.InteriorProp -> FieldIds.encode(interior2),
         FieldIds.RegistryProp -> FieldIds.encode(reg),
         FieldIds.LastIdProp ->
-          (m.properties.get(FieldIds.LastIdProp).flatMap(_.toIntOption)
-            .getOrElse(0)
-            .max(if (reg.isEmpty) 0 else reg.values.max)
-            .max(interior2.values.max)).toString,
+          lastFieldId(m, reg).max(interior2.values.max).toString,
         FieldIds.InteriorByIdProp -> "true",
         FieldIds.FreedNamesProp ->
           FieldIds.addNames(m.properties, FieldIds.FreedNamesProp, freed)),
@@ -2685,67 +2549,13 @@ final class LakehouseTable(
   private def requireInteriorIdFiles(): Unit = {
     val paths = catalog.snapshots(namespace, name).flatMap(_.files)
       .filterNot(_.deleteFile.contains(true)).map(_.path).distinct
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.DurationInt
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val bad = Await.result(
-      Future.traverse(paths)(p =>
-        Future(scala.concurrent.blocking(
-          (p, graft.types.FieldIds.fileCarriesInteriorIds(spark, p))))),
-      30.minutes).filterNot(_._2).map(_._1)
-    require(bad.isEmpty,
-      s"cannot rename an interior field of $namespace.$name: ${bad.size} " +
+    val bad = graft.util.Par.map(paths)(p =>
+      graft.types.FieldIds.fileCarriesInteriorIds(spark, p)).count(!_)
+    require(bad == 0,
+      s"cannot rename an interior field of $namespace.$name: $bad " +
         "file(s) carry no field ids inside list/map interiors (written " +
         "before interior stamping) — compact() rewrites the live set " +
         "interior-stamped and expireSnapshots() retires old history")
-  }
-
-  /** INNER struct-field DROP (round 13) — metadata-only removal from
-    * the stored schema; data files untouched (a removed field is never
-    * requested again), and NO id flip or file gate: dropping cannot
-    * misresolve anything. The dotted name (and, for a container, its
-    * whole subtree) is FREED and the ids retired behind the high-water
-    * mark; the GUARDED operation is re-adding a freed inner name —
-    * [[addStructField]] refuses it while inner resolution is by NAME
-    * (old bytes would resurrect) and assigns a FRESH id once the table
-    * has flipped to inner-by-id (old bytes then stay unreachable,
-    * the Iceberg id-reuse rule one level down). */
-  def dropStructField(dottedPath: String): TableMetadata =
-      catalog.withEvolutionLock(namespace, name) {
-    import graft.types.{FieldIds, SchemaInfer}
-    val m = meta
-    val parts = dottedPath.split('.').toSeq
-    require(parts.length >= 2,
-      s"dropStructField needs parent.child[...], got '$dottedPath' — " +
-        "use dropColumn for top-level columns")
-    SchemaInfer.innerType(m.schema, parts).getOrElse(
-      throw new IllegalArgumentException(
-        s"no struct field '$dottedPath' in $namespace.$name"))
-    val reg = withInnerIds(m, fieldRegistry(m, "drop"))
-    val oldKey = parts.mkString(".")
-    val prefix = oldKey + "."
-    val freedKeys = reg.keys.filter(k =>
-      k == oldKey || k.startsWith(prefix)).toSeq
-    val last = m.properties.get(FieldIds.LastIdProp).flatMap(_.toIntOption)
-      .getOrElse(0).max(if (reg.isEmpty) 0 else reg.values.max)
-    val reg2 = reg -- freedKeys
-    val evolved = SchemaInfer.editInnerField(m.schema, parts, _ => None)
-    // preserve the EXACT stamping shape: inner-flipped tables re-attach
-    // everything, flat-flipped tables top-level only (attachAll here
-    // would flip inner resolution without the nested file gate —
-    // nulling pre-r13 files' nested content), virgin schemas stay bare
-    val stored =
-      if (innerIdsActive(m)) FieldIds.attachAll(evolved, reg2)
-      else if (FieldIds.hasIds(m.schema)) FieldIds.attach(evolved, reg2)
-      else evolved
-    catalog.updateSchema(namespace, name, stored)
-    catalog.updateProperties(namespace, name,
-      Map(FieldIds.RegistryProp -> FieldIds.encode(reg2),
-        FieldIds.LastIdProp -> last.toString,
-        FieldIds.FreedNamesProp ->
-          FieldIds.addNames(m.properties, FieldIds.FreedNamesProp,
-            (freedKeys :+ oldKey).distinct)),
-      Seq.empty)
   }
 
   /** AUTO SCHEMA EVOLUTION ON WRITE (Delta's `mergeSchema`, Iceberg's
@@ -2795,12 +2605,10 @@ final class LakehouseTable(
       (stored, in) match {
         case (s, i) if s == i => ()
         case (IntegerType, LongType) | (FloatType, DoubleType) =>
-          if (path.length == 1) widenColumn(path.head, in)
-          else widenStructField(path.mkString("."), in)
+          widenField(path, in)
         case (d1: DecimalType, d2: DecimalType)
             if d2.precision > d1.precision && d1.scale == d2.scale =>
-          if (path.length == 1) widenColumn(path.head, in)
-          else widenStructField(path.mkString("."), in)
+          widenField(path, in)
         case (s: StructType, i: StructType) =>
           i.fields.foreach { f =>
             s.fields.find(_.name.equalsIgnoreCase(f.name)) match {
@@ -2853,6 +2661,278 @@ final class LakehouseTable(
     * refuse — their name is baked into per-file partition tuples and
     * layout directories, so renaming them is a spec rewrite, not a
     * schema edit. */
+  def renameColumn(from: String, to: String): TableMetadata =
+    renameField(Seq(from), to)
+
+  /** INNER struct-field RENAME (round 13) — Iceberg's nested rename,
+    * metadata-only at any table size, by parquet field-id indirection
+    * one level down. The stored schema flips to carry ids on EVERY
+    * struct-chain field ([[graft.types.FieldIds.attachAll]]); Spark's
+    * reader then resolves inner fields strictly by id in every plan
+    * shape (full read, nested-pruned read, MOR subtraction, time
+    * travel — Spark 4.1's pruning preserves inner id metadata,
+    * verified in FieldEvolutionSpec), so files written under the OLD
+    * inner name keep serving the renamed field's values.
+    *
+    * Eligibility is the price of the flip: EVERY live-history data
+    * file must carry ids on every struct leaf — one id-less inner
+    * field in one file would silently null that file's leaves under an
+    * id-bearing request (strict-by-id goes per file). Managed files
+    * stamp inner ids from birth once the registry carries dotted
+    * entries (fresh r13+ tables always; older tables backfill the
+    * registry HERE, metadata-only, then compact() once). Foreign files
+    * refuse like every id evolution. Renaming a struct CONTAINER
+    * re-keys its whole subtree; the old dotted names are FREED and
+    * their stats poisoned on reuse, exactly the flat contract. */
+  def renameStructField(dottedPath: String, newLeaf: String): TableMetadata =
+    renameField(structPath("renameStructField", dottedPath, "renameColumn"),
+      newLeaf)
+
+  /** Column DROP — metadata-only removal from the schema; data files
+    * are untouched (scans simply stop requesting the column). Flips the
+    * table to read-by-id and RETIRES the dropped id behind the
+    * high-water mark, so re-adding the same name later takes a fresh id
+    * and old values stay unreachable instead of resurrecting — the
+    * field-id-reuse hazard Iceberg's evolution rules exist for. Same
+    * eligibility gates as [[renameColumn]]. */
+  def dropColumn(colName: String): TableMetadata = dropField(Seq(colName))
+
+  /** INNER struct-field DROP (round 13) — metadata-only removal from
+    * the stored schema; data files untouched (a removed field is never
+    * requested again), and NO id flip or file gate: dropping cannot
+    * misresolve anything. The dotted name (and, for a container, its
+    * whole subtree) is FREED and the ids retired behind the high-water
+    * mark; the GUARDED operation is re-adding a freed inner name —
+    * [[addStructField]] refuses it while inner resolution is by NAME
+    * (old bytes would resurrect) and assigns a FRESH id once the table
+    * has flipped to inner-by-id (old bytes then stay unreachable,
+    * the Iceberg id-reuse rule one level down). */
+  def dropStructField(dottedPath: String): TableMetadata =
+    dropField(structPath("dropStructField", dottedPath, "dropColumn"))
+
+  /** TYPE WIDENING — Iceberg's safe schema promotions (`int` →
+    * `bigint`, `float` → `double`, `decimal(p,s)` → `decimal(p',s)`
+    * with p' > p), metadata-only at any table size:
+    * the stored schema's type changes and nothing else moves. Old
+    * files keep their narrower physical values — Spark's vectorized
+    * parquet reader widens them at read time (value-preserving IEEE /
+    * integral promotion), new writes land the wide type, and the
+    * Iceberg metadata export stays spec-valid (Iceberg permits exactly
+    * these promotions). Stat bounds compare numerically, so [min,max]
+    * pruning and the delete tier's bounds arithmetic are unaffected;
+    * an outstanding equality delete keyed on the column still
+    * subtracts (the scan's anti-join coerces the narrow key file).
+    *
+    * One refusal: a column that is the SOURCE of a `bucket` partition
+    * field. The bucket transform hashes the value AS ITS TYPE
+    * (xxhash64 of an int and a long differ for equal values), so
+    * widening a bucket source would silently invalidate every
+    * retained file's recorded bucket index — mis-pruning, not an
+    * error. Identity and truncate sources are value-stable (external
+    * text / floor arithmetic unchanged) and pass — as do `mbucket`
+    * sources: the Iceberg spec hashes ints WIDENED TO LONG and
+    * decimals by unscaled value precisely so `bucket[n]` survives
+    * int→bigint and decimal-precision promotion with indexes intact. */
+  def widenColumn(colName: String, to: DataType): TableMetadata =
+    widenField(Seq(colName), to)
+
+  /** [[widenColumn]] for a struct LEAF (`parent.child[...]`): the same
+    * Iceberg promotions (int→bigint, float→double, decimal precision),
+    * metadata-only — parquet's column readers are per-LEAF, so the
+    * read-time value-preserving promotion that widens a flat column
+    * widens a nested one identically. Inner fields are never partition
+    * or equality-delete sources (both refuse nested), and struct-leaf
+    * stat bounds compare numerically, so no bucket-source refusal
+    * applies below the top level. */
+  def widenStructField(dottedPath: String, to: DataType): TableMetadata =
+    widenField(structPath("widenStructField", dottedPath, "widenColumn"), to)
+
+  /** `parent.child[...]` split for the struct-field ops, which refuse a
+    * one-segment path — top-level columns go through their own ops. */
+  private def structPath(op: String, dottedPath: String,
+      flatOp: String): Seq[String] = {
+    val parts = dottedPath.split('.').toSeq
+    require(parts.length >= 2,
+      s"$op needs parent.child[...], got '$dottedPath' — " +
+        s"use $flatOp for top-level columns")
+    parts
+  }
+
+  /** The field at `parts` (root first, each step case-insensitive,
+    * struct chains only) and the struct holding it. */
+  private def fieldAt(m: TableMetadata,
+      parts: Seq[String]): (StructType, StructField) =
+    graft.types.SchemaInfer.innerType(m.schema, parts.init)
+      .collect { case st: StructType => st }
+      .flatMap(st => st.fields.find(_.name.equalsIgnoreCase(parts.last))
+        .map(st -> _))
+      .getOrElse(throw new IllegalArgumentException(
+        s"no ${if (parts.length == 1) "column" else "struct field"} " +
+          s"'${parts.mkString(".")}' in $namespace.$name"))
+
+  /** RENAME of the field at `parts` (root first): one segment is a
+    * top-level column ([[renameColumn]]'s gates), more is a struct-chain
+    * field ([[renameStructField]]'s). Both depths re-key the id
+    * registry (a container's subtree moves with it), free the old
+    * names, poison stats on a freed new name, and write the schema
+    * before the registry. */
+  private[graft] def renameField(parts: Seq[String],
+      newLeaf: String): TableMetadata =
+      catalog.withEvolutionLock(namespace, name) {
+    import graft.types.{FieldIds, SchemaInfer}
+    val m = meta
+    val top = parts.length == 1
+    val what = if (top) "column" else "struct field"
+    val (parent, f) = fieldAt(m, parts)
+    if (top) {
+      require(!isNestedType(f.dataType),
+        s"cannot rename nested (struct/map/array) column '${f.name}' of " +
+          s"$namespace.$name: nested schema pruning drops field-id " +
+          "metadata from the pruned read schema, so pruned reads of a " +
+          "renamed nested root silently miss old files (name fallback) " +
+          "— add a fresh nested column and backfill instead")
+      require(!PartitionTransforms.parseAll(m.partitionColumns)
+          .exists(_.source.equalsIgnoreCase(f.name)),
+        s"cannot rename partition column '${f.name}' — partition tuples " +
+          "and directory layout are keyed by it (a partition-spec " +
+          "rewrite, not a schema edit)")
+    }
+    require(!parent.fieldNames.exists(_.equalsIgnoreCase(newLeaf)),
+      s"$what '$newLeaf' already exists" +
+        (if (top) "" else s" under '${parts.init.mkString(".")}'"))
+    // a dotted top-level name is legal; a dotted inner leaf would alias
+    // a deeper path
+    require(newLeaf.nonEmpty && !newLeaf.contains(",") &&
+      !newLeaf.contains(":") && (top || !newLeaf.contains(".")),
+      s"illegal $what name '$newLeaf'")
+    val flatReg = fieldRegistry(m, "rename")
+    val reg = if (top) flatReg else withInnerIds(m, flatReg)
+    // backfill + PERSIST dotted registry ids first (metadata-only, and
+    // always safe — more stamped ids never change name-resolution):
+    // if the file gate below refuses, the user's compact() must stamp
+    // these very ids, or the retry could never succeed
+    if (reg.size > flatReg.size)
+      catalog.updateProperties(namespace, name,
+        Map(FieldIds.RegistryProp -> FieldIds.encode(reg),
+          FieldIds.LastIdProp -> lastFieldId(m, reg).toString),
+        Seq.empty)
+    val oldKey = if (top) f.name else parts.mkString(".")
+    if (!reg.contains(oldKey)) throw new UnsupportedOperationException(
+      s"cannot rename '$oldKey' of $namespace.$name: the $what has no " +
+        "field id (the table holds a name the id registry cannot " +
+        "encode) — recreate the table to make it renameable")
+    requireIdBearingFiles(if (top) "rename" else "rename (inner)",
+      nested = !top)
+    val newKey = (parts.init :+ newLeaf).mkString(".")
+    val moved = reg.keys.filter(k =>
+      k == oldKey || (!top && k.startsWith(oldKey + "."))).toSeq
+    val reg2 = reg -- moved ++
+      moved.map(k => (newKey + k.stripPrefix(oldKey)) -> reg(k))
+    val renamed = SchemaInfer.editInnerField(m.schema, parts,
+      f => Some(f.copy(name = newLeaf)))
+    // SCHEMA first, registry second: the id-bearing schema alone is
+    // enough for a concurrent writer to stamp correct ids (attach is a
+    // no-op for registry names absent from the schema), so a writer or
+    // crash between the two metadata writes never strands a file that
+    // read-by-id cannot resolve; fieldRegistry treats an id-bearing
+    // schema as authoritative, healing a stale registry on next use
+    catalog.updateSchema(namespace, name,
+      if (top) FieldIds.attach(renamed, reg2)
+      else FieldIds.attachAll(renamed, reg2))
+    // the new name may be a FREED one: old files' name-keyed stats
+    // describe the previously-bound field — poison it and its root
+    val lowNew = newKey.toLowerCase(java.util.Locale.ROOT)
+    val reboundProps: Map[String, String] =
+      if (!FieldIds.namesSet(m.properties, FieldIds.FreedNamesProp)(lowNew))
+        Map.empty
+      else Map(FieldIds.StatsUnsafeProp ->
+        FieldIds.addNames(m.properties, FieldIds.StatsUnsafeProp,
+          Seq(lowNew, (parts.init :+ newLeaf).head)))
+    catalog.updateProperties(namespace, name,
+      Map(FieldIds.RegistryProp -> FieldIds.encode(reg2),
+        FieldIds.LastIdProp -> lastFieldId(m, reg2).toString,
+        // the old names are freed: a later field reusing one would
+        // inherit poisoned name-keyed stats
+        FieldIds.FreedNamesProp ->
+          FieldIds.addNames(m.properties, FieldIds.FreedNamesProp, moved))
+        ++ reboundProps,
+      Seq.empty)
+  }
+
+  /** DROP of the field at `parts` (root first): one segment is a
+    * top-level column ([[dropColumn]]'s gates), more is a struct-chain
+    * field ([[dropStructField]]'s — no file gate). Both depths retire
+    * the field's ids (a container's subtree included) behind the
+    * high-water mark, free its names, and write the schema before the
+    * registry. */
+  private[graft] def dropField(parts: Seq[String]): TableMetadata =
+      catalog.withEvolutionLock(namespace, name) {
+    import graft.types.{FieldIds, SchemaInfer}
+    val m = meta
+    val top = parts.length == 1
+    val (_, f) = fieldAt(m, parts)
+    if (top) {
+      require(!PartitionTransforms.parseAll(m.partitionColumns)
+          .exists(_.source.equalsIgnoreCase(f.name)),
+        s"cannot drop partition column '${f.name}'")
+      require(m.schema.fields.length > 1, "cannot drop the only column")
+    }
+    val flatReg = fieldRegistry(m, "drop")
+    val reg = if (top) flatReg else withInnerIds(m, flatReg)
+    if (top) requireIdBearingFiles("drop")
+    // a dropped STRUCT retires its dotted subtree entries too — orphaned
+    // dotted ids under a re-added name would rebind old inner ids to
+    // new content
+    val oldKey = if (top) f.name else parts.mkString(".")
+    val freed = reg.keys.filter(k =>
+      k == oldKey || k.startsWith(oldKey + ".")).toSeq
+    val reg2 = reg -- freed
+    val evolved = SchemaInfer.editInnerField(m.schema, parts, _ => None)
+    // top-level drops stamp top-level ids. Inner drops preserve the
+    // EXACT stamping shape: inner-flipped tables re-attach everything,
+    // flat-flipped tables top-level only (attachAll here would flip
+    // inner resolution without the nested file gate — nulling pre-r13
+    // files' nested content), virgin schemas stay bare
+    val stored =
+      if (top) FieldIds.attach(evolved, reg2)
+      else if (innerIdsActive(m)) FieldIds.attachAll(evolved, reg2)
+      else if (FieldIds.hasIds(m.schema)) FieldIds.attach(evolved, reg2)
+      else evolved
+    // schema first, registry second — see renameField's ordering note
+    catalog.updateSchema(namespace, name, stored)
+    catalog.updateProperties(namespace, name,
+      Map(FieldIds.RegistryProp -> FieldIds.encode(reg2),
+        FieldIds.LastIdProp -> lastFieldId(m, reg).toString,
+        // the dropped names are freed: re-adding one must not inherit
+        // old files' name-keyed stats
+        FieldIds.FreedNamesProp ->
+          FieldIds.addNames(m.properties, FieldIds.FreedNamesProp,
+            (oldKey +: freed).distinct)),
+      Seq.empty)
+  }
+
+  /** Type WIDENING of the field at `parts` (root first): one segment is
+    * a top-level column (with [[widenColumn]]'s bucket-source refusal),
+    * more is a struct leaf. Metadata-only at both depths. */
+  private[graft] def widenField(parts: Seq[String],
+      to: DataType): TableMetadata =
+      catalog.withEvolutionLock(namespace, name) {
+    val m = meta
+    val (_, f) = fieldAt(m, parts)
+    requireWidening(f.dataType, to)
+    if (parts.length == 1)
+      require(!PartitionTransforms.parseAll(m.partitionColumns).exists {
+          case BucketField(_, src) => src.equalsIgnoreCase(f.name)
+          case _ => false
+        },
+        s"cannot widen bucket-partition source '${f.name}': the bucket " +
+          "transform hashes the value as its type, so retained files' " +
+          "recorded indexes would silently mis-prune — rewrite the spec " +
+          "or compact first")
+    catalog.updateSchema(namespace, name, graft.types.SchemaInfer
+      .editInnerField(m.schema, parts, f => Some(f.copy(dataType = to))))
+  }
+
   /** Shared gate for the id-indirection evolutions on nested-TYPED
     * targets. Spark's parquet reader resolves each requested top-level
     * field independently — BY ID when the StructField carries
@@ -2878,93 +2958,6 @@ final class LakehouseTable(
     case _ => false
   }
 
-  private def requireFlatRenameTarget(f: StructField): Unit =
-    require(!isNestedType(f.dataType),
-      s"cannot rename nested (struct/map/array) column '${f.name}' of " +
-        s"$namespace.$name: nested schema pruning drops field-id " +
-        "metadata from the pruned read schema, so pruned reads of a " +
-        "renamed nested root silently miss old files (name fallback) — " +
-        "add a fresh nested column and backfill instead")
-
-  def renameColumn(from: String, to: String): TableMetadata =
-      catalog.withEvolutionLock(namespace, name) {
-    import graft.types.FieldIds
-    val m = meta
-    val cur = m.schema
-    val f = cur.fields.find(_.name.equalsIgnoreCase(from)).getOrElse(
-      throw new IllegalArgumentException(s"no column '$from' in $namespace.$name"))
-    requireFlatRenameTarget(f)
-    require(!PartitionTransforms.parseAll(m.partitionColumns)
-        .exists(_.source.equalsIgnoreCase(from)),
-      s"cannot rename partition column '$from' — partition tuples and " +
-        "directory layout are keyed by it (a partition-spec rewrite, not " +
-        "a schema edit)")
-    require(!cur.fields.exists(_.name.equalsIgnoreCase(to)),
-      s"column '$to' already exists")
-    require(to.nonEmpty && !to.contains(",") && !to.contains(":"),
-      s"illegal column name '$to'")
-    val reg = fieldRegistry(m, "rename")
-    requireIdBearingFiles("rename")
-    val id = reg.getOrElse(f.name, throw new UnsupportedOperationException(
-      s"cannot rename '${f.name}' of $namespace.$name: the column has no " +
-        "field id (added alongside a registry-ineligible column) — " +
-        "compact() after fixing the registry, or recreate the table"))
-    val reg2 = reg - f.name + (to -> id)
-    val renamed = StructType(cur.fields.map(x =>
-      if (x.name == f.name) x.copy(name = to) else x))
-    // SCHEMA first, registry second: the id-bearing schema alone is
-    // enough for a concurrent writer to stamp correct ids (attach is a
-    // no-op for registry names absent from the schema), so a writer or
-    // crash between the two metadata writes never strands a file that
-    // read-by-id cannot resolve; fieldRegistry treats an id-bearing
-    // schema as authoritative, healing a stale registry on next use
-    catalog.updateSchema(namespace, name, FieldIds.attach(renamed, reg2))
-    val lowTo = to.toLowerCase(java.util.Locale.ROOT)
-    val reboundProps: Map[String, String] =
-      if (!FieldIds.namesSet(m.properties, FieldIds.FreedNamesProp)(lowTo))
-        Map.empty
-      else Map(FieldIds.StatsUnsafeProp ->
-        FieldIds.addNames(m.properties, FieldIds.StatsUnsafeProp, Seq(lowTo)))
-    catalog.updateProperties(namespace, name,
-      Map(FieldIds.RegistryProp -> FieldIds.encode(reg2),
-        // 'from' is now a freed name: a later column reusing it would
-        // inherit poisoned name-keyed stats
-        FieldIds.FreedNamesProp ->
-          FieldIds.addNames(m.properties, FieldIds.FreedNamesProp, Seq(f.name)))
-        ++ reboundProps,
-      Seq.empty)
-  }
-
-  /** Column DROP — metadata-only removal from the schema; data files
-    * are untouched (scans simply stop requesting the column). Flips the
-    * table to read-by-id and RETIRES the dropped id behind the
-    * high-water mark, so re-adding the same name later takes a fresh id
-    * and old values stay unreachable instead of resurrecting — the
-    * field-id-reuse hazard Iceberg's evolution rules exist for. Same
-    * eligibility gates as [[renameColumn]]. */
-  /** TYPE WIDENING — Iceberg's safe schema promotions (`int` →
-    * `bigint`, `float` → `double`, `decimal(p,s)` → `decimal(p',s)`
-    * with p' > p), metadata-only at any table size:
-    * the stored schema's type changes and nothing else moves. Old
-    * files keep their narrower physical values — Spark's vectorized
-    * parquet reader widens them at read time (value-preserving IEEE /
-    * integral promotion), new writes land the wide type, and the
-    * Iceberg metadata export stays spec-valid (Iceberg permits exactly
-    * these promotions). Stat bounds compare numerically, so [min,max]
-    * pruning and the delete tier's bounds arithmetic are unaffected;
-    * an outstanding equality delete keyed on the column still
-    * subtracts (the scan's anti-join coerces the narrow key file).
-    *
-    * One refusal: a column that is the SOURCE of a `bucket` partition
-    * field. The bucket transform hashes the value AS ITS TYPE
-    * (xxhash64 of an int and a long differ for equal values), so
-    * widening a bucket source would silently invalidate every
-    * retained file's recorded bucket index — mis-pruning, not an
-    * error. Identity and truncate sources are value-stable (external
-    * text / floor arithmetic unchanged) and pass — as do `mbucket`
-    * sources: the Iceberg spec hashes ints WIDENED TO LONG and
-    * decimals by unscaled value precisely so `bucket[n]` survives
-    * int→bigint and decimal-precision promotion with indexes intact. */
   /** Iceberg's legal type promotions, shared by the flat and nested
     * widen paths. Precision may grow, scale may not change (a scale
     * change rewrites values, not just their range). */
@@ -2982,57 +2975,16 @@ final class LakehouseTable(
         "decimal(p,s) -> decimal(p',s) with p' > p")
   }
 
-  def widenColumn(colName: String, to: DataType): TableMetadata =
-      catalog.withEvolutionLock(namespace, name) {
-    val m = meta
-    val f = m.schema.fields.find(_.name.equalsIgnoreCase(colName)).getOrElse(
-      throw new IllegalArgumentException(
-        s"no column '$colName' in $namespace.$name"))
-    requireWidening(f.dataType, to)
-    require(!PartitionTransforms.parseAll(m.partitionColumns).exists {
-        case BucketField(_, src) => src.equalsIgnoreCase(colName)
-        case _ => false
-      },
-      s"cannot widen bucket-partition source '$colName': the bucket " +
-        "transform hashes the value as its type, so retained files' " +
-        "recorded indexes would silently mis-prune — rewrite the spec " +
-        "or compact first")
-    catalog.updateSchema(namespace, name, StructType(m.schema.fields.map(fd =>
-      if (fd.name.equalsIgnoreCase(colName)) fd.copy(dataType = to) else fd)))
-  }
-
-  def dropColumn(colName: String): TableMetadata =
-      catalog.withEvolutionLock(namespace, name) {
-    import graft.types.FieldIds
-    val m = meta
-    val cur = m.schema
-    val f = cur.fields.find(_.name.equalsIgnoreCase(colName)).getOrElse(
-      throw new IllegalArgumentException(s"no column '$colName' in $namespace.$name"))
-    require(!PartitionTransforms.parseAll(m.partitionColumns)
-        .exists(_.source.equalsIgnoreCase(colName)),
-      s"cannot drop partition column '$colName'")
-    require(cur.fields.length > 1, "cannot drop the only column")
-    val reg = fieldRegistry(m, "drop")
-    requireIdBearingFiles("drop")
-    val last = m.properties.get(FieldIds.LastIdProp).map(_.toInt)
-      .getOrElse(0).max(reg.values.max)
-    // a dropped STRUCT root retires its dotted subtree entries too —
-    // orphaned dotted ids under a re-added root would rebind old inner
-    // ids to new content
-    val subtree = reg.keys.filter(_.startsWith(f.name + ".")).toSeq
-    val reg2 = reg - f.name -- subtree
-    // schema first, registry second — see renameColumn's ordering note
-    catalog.updateSchema(namespace, name,
-      FieldIds.attach(StructType(cur.fields.filterNot(_.name == f.name)), reg2))
-    catalog.updateProperties(namespace, name,
-      Map(FieldIds.RegistryProp -> FieldIds.encode(reg2),
-        FieldIds.LastIdProp -> last.toString,
-        // the dropped name (and its inner paths) is freed: re-adding it
-        // must not inherit old files' name-keyed stats
-        FieldIds.FreedNamesProp ->
-          FieldIds.addNames(m.properties, FieldIds.FreedNamesProp,
-            f.name +: subtree)),
-      Seq.empty)
+  /** The field-id high-water mark: the recorded LastIdProp or the
+    * registry's largest id, whichever is higher. The property parses
+    * strictly — a corrupt value fails loudly instead of falling back to
+    * a lower mark that would re-issue retired ids. */
+  private def lastFieldId(m: TableMetadata, reg: Map[String, Int]): Int = {
+    import graft.types.FieldIds.LastIdProp
+    val recorded = m.properties.get(LastIdProp).fold(0)(v =>
+      v.toIntOption.getOrElse(throw new IllegalStateException(
+        s"$namespace.$name: corrupt $LastIdProp '$v'")))
+    recorded.max(reg.values.maxOption.getOrElse(0))
   }
 
   /** The name→id map evolutions resolve through. An id-bearing stored
@@ -3075,16 +3027,10 @@ final class LakehouseTable(
         "(add_files/import) and their field ids are absent or numbered " +
         "by another system — compact() and expire the foreign history " +
         "first")
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.DurationInt
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val idless = Await.result(
-      Future.traverse(paths)(p =>
-        Future(scala.concurrent.blocking(
-          (p, graft.types.FieldIds.fileCarriesIds(spark, p, nested))))),
-      30.minutes).filterNot(_._2).map(_._1)
-    require(idless.isEmpty,
-      s"cannot $op a column of $namespace.$name: ${idless.size} file(s) " +
+    val idless = graft.util.Par.map(paths)(p =>
+      graft.types.FieldIds.fileCarriesIds(spark, p, nested)).count(!_)
+    require(idless == 0,
+      s"cannot $op a column of $namespace.$name: $idless file(s) " +
         (if (nested) "carry no parquet field ids on every struct leaf "
          else "carry no parquet field ids ") +
         "(written before id stamping) — compact() rewrites the live set " +
@@ -3333,15 +3279,7 @@ object FileStats {
       pv: String => Map[String, String]): Seq[DataFileEntry] = {
     val conf = spark.sessionState.newHadoopConf()
     if (paths.size <= 4) paths.map(p => stat(spark, p, pv(p), Some(conf)))
-    else {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.DurationInt
-      implicit val ec: ExecutionContext = ExecutionContext.global
-      Await.result(
-        Future.traverse(paths)(p =>
-          Future(scala.concurrent.blocking(stat(spark, p, pv(p), Some(conf))))),
-        30.minutes)
-    }
+    else graft.util.Par.map(paths)(p => stat(spark, p, pv(p), Some(conf)))
   }
 
   /** Row count + size + per-column bounds from the parquet footer —

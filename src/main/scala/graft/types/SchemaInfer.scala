@@ -205,115 +205,64 @@ object SchemaInfer {
     // properties a poisoned dotted path may need to enter
     require(!leaf.contains(",") && !leaf.contains(":"),
       s"illegal inner field name '$leaf'")
-    def patch(st: StructType, rest: Seq[String], done: String): StructType =
-      rest match {
-        case Seq(last) =>
-          require(!st.fieldNames.exists(_.equalsIgnoreCase(last)),
-            s"field '$done.$last' already exists")
-          StructType(st.fields :+ field)
-        case head +: tail =>
-          val idx = st.fields.indexWhere(_.name.equalsIgnoreCase(head))
-          require(idx >= 0, s"no field '$head' under '$done'")
-          val f = st.fields(idx)
-          f.dataType match {
-            case inner: StructType =>
-              StructType(st.fields.updated(idx,
-                f.copy(dataType = patch(inner, tail, s"$done.${f.name}"))))
-            case other => throw new IllegalArgumentException(
-              s"'$done.${f.name}' is ${other.catalogString}, not a " +
-                "struct — only struct chains take inner fields")
-          }
-      }
-    val rootIdx = schema.fields.indexWhere(_.name.equalsIgnoreCase(parts.head))
-    require(rootIdx >= 0, s"no column '${parts.head}'")
-    val root = schema.fields(rootIdx)
-    val newRoot = root.dataType match {
-      case inner: StructType =>
-        root.copy(dataType = patch(inner, parts.tail, root.name))
-      case other => throw new IllegalArgumentException(
-        s"'${root.name}' is ${other.catalogString}, not a struct — " +
-          "only struct chains take inner fields")
-    }
-    StructType(schema.fields.updated(rootIdx, newRoot))
-  }
-
-  /** Schema with the type of the struct LEAF a dotted path names
-    * replaced — the pure patch under `LakehouseTable.widenStructField`.
-    * Same path rules as [[addInnerField]], except the leaf must EXIST;
-    * the promotion-legality check is the caller's. */
-  def replaceInnerType(schema: StructType, parts: Seq[String],
-      to: DataType): StructType = {
-    require(parts.length >= 2 && parts.forall(_.nonEmpty),
-      s"nested widen needs parent.child[...], got '${parts.mkString(".")}'")
-    def patch(st: StructType, rest: Seq[String], done: String): StructType = {
-      val idx = st.fields.indexWhere(_.name.equalsIgnoreCase(rest.head))
-      require(idx >= 0, s"no field '${rest.head}' under '$done'")
-      val f = st.fields(idx)
-      (rest, f.dataType) match {
-        case (Seq(_), _) =>
-          StructType(st.fields.updated(idx, f.copy(dataType = to)))
-        case (_ +: tail, inner: StructType) =>
-          StructType(st.fields.updated(idx,
-            f.copy(dataType = patch(inner, tail, s"$done.${f.name}"))))
-        case (_, other) => throw new IllegalArgumentException(
-          s"'$done.${f.name}' is ${other.catalogString}, not a struct")
-      }
-    }
-    val rootIdx = schema.fields.indexWhere(_.name.equalsIgnoreCase(parts.head))
-    require(rootIdx >= 0, s"no column '${parts.head}'")
-    val root = schema.fields(rootIdx)
-    root.dataType match {
-      case inner: StructType => StructType(schema.fields.updated(rootIdx,
-        root.copy(dataType = patch(inner, parts.tail, root.name))))
-      case other => throw new IllegalArgumentException(
-        s"'${root.name}' is ${other.catalogString}, not a struct")
+    patchStruct(schema, parts.init) { (st, done) =>
+      require(!st.fieldNames.exists(_.equalsIgnoreCase(leaf)),
+        s"field '$done.$leaf' already exists")
+      StructType(st.fields :+ field)
     }
   }
 
-  /** Schema with the struct field a dotted path names TRANSFORMED:
-    * `edit` returns the replacement field, or None to REMOVE it. Pure
-    * patch under `LakehouseTable.{renameStructField, dropStructField}`;
-    * same path rules as [[replaceInnerType]] (chain through structs,
-    * target must exist). Removing the last field of a struct refuses —
-    * an empty struct is unwritable in parquet. */
+  /** Schema with the field a dotted path names TRANSFORMED: `edit`
+    * returns the replacement field, or None to REMOVE it. A one-step
+    * path names a top-level column; longer paths chain through structs.
+    * The target must exist. Pure patch under `LakehouseTable`'s rename,
+    * drop and widen. Removing the last field of a struct refuses — an
+    * empty struct is unwritable in parquet. */
   def editInnerField(schema: StructType, parts: Seq[String],
       edit: StructField => Option[StructField]): StructType = {
-    require(parts.length >= 2 && parts.forall(_.nonEmpty),
-      s"inner edit needs parent.child[...], got '${parts.mkString(".")}'")
-    def patch(st: StructType, rest: Seq[String], done: String): StructType = {
-      val idx = st.fields.indexWhere(_.name.equalsIgnoreCase(rest.head))
-      require(idx >= 0, s"no field '${rest.head}' under '$done'")
-      val f = st.fields(idx)
-      rest match {
-        case Seq(_) => edit(f) match {
-          case Some(nf) => StructType(st.fields.updated(idx, nf))
-          case None =>
-            require(st.fields.length > 1,
-              s"cannot drop the only field of struct '$done'")
-            StructType(st.fields.patch(idx, Nil, 1))
-        }
-        case _ +: tail => f.dataType match {
-          case inner: StructType =>
-            StructType(st.fields.updated(idx,
-              f.copy(dataType = patch(inner, tail, s"$done.${f.name}"))))
-          case other => throw new IllegalArgumentException(
-            s"'$done.${f.name}' is ${other.catalogString}, not a struct")
-        }
+    require(parts.nonEmpty && parts.forall(_.nonEmpty),
+      s"field edit needs a non-empty path, got '${parts.mkString(".")}'")
+    patchStruct(schema, parts.init) { (st, done) =>
+      val idx = st.fields.indexWhere(_.name.equalsIgnoreCase(parts.last))
+      require(idx >= 0, missingField(parts.last, done))
+      edit(st.fields(idx)) match {
+        case Some(nf) => StructType(st.fields.updated(idx, nf))
+        case None =>
+          require(st.fields.length > 1,
+            s"cannot drop the only field of struct '$done'")
+          StructType(st.fields.patch(idx, Nil, 1))
       }
-    }
-    val rootIdx = schema.fields.indexWhere(_.name.equalsIgnoreCase(parts.head))
-    require(rootIdx >= 0, s"no column '${parts.head}'")
-    val root = schema.fields(rootIdx)
-    root.dataType match {
-      case inner: StructType => StructType(schema.fields.updated(rootIdx,
-        root.copy(dataType = patch(inner, parts.tail, root.name))))
-      case other => throw new IllegalArgumentException(
-        s"'${root.name}' is ${other.catalogString}, not a struct")
     }
   }
 
-  /** The type of the field a dotted struct path names, if the chain
-    * resolves (case-insensitive per step, structs only). */
+  private def missingField(name: String, under: String): String =
+    if (under.isEmpty) s"no column '$name'" else s"no field '$name' under '$under'"
+
+  /** `schema` with the struct at the end of the chain `parents` (root
+    * first, struct steps only, each matched case-insensitively)
+    * replaced by `patch(struct, its dotted path)`; an empty chain
+    * patches the schema itself. */
+  private def patchStruct(schema: StructType, parents: Seq[String])(
+      patch: (StructType, String) => StructType): StructType = {
+    def walk(st: StructType, rest: Seq[String], done: String): StructType =
+      rest match {
+        case Seq() => patch(st, done)
+        case head +: tail =>
+          val idx = st.fields.indexWhere(_.name.equalsIgnoreCase(head))
+          require(idx >= 0, missingField(head, done))
+          val f = st.fields(idx)
+          val here = if (done.isEmpty) f.name else s"$done.${f.name}"
+          f.dataType match {
+            case inner: StructType => StructType(st.fields.updated(idx,
+              f.copy(dataType = walk(inner, tail, here))))
+            case other => throw new IllegalArgumentException(
+              s"'$here' is ${other.catalogString}, not a struct — only " +
+                "struct chains take inner fields")
+          }
+      }
+    walk(schema, parents, "")
+  }
+
   /** Navigate a NAME-MAPPING token path (`arr.element.a`, `m.value.x`
     * — `element`/`key`/`value` step through list/map interiors, other
     * tokens through struct fields, all case-insensitive for struct
@@ -379,6 +328,8 @@ object SchemaInfer {
     StructType(walk(schema, tokens, "").asInstanceOf[StructType].fields)
   }
 
+  /** The type of the field a dotted struct path names, if the chain
+    * resolves (case-insensitive per step, structs only). */
   def innerType(schema: StructType, parts: Seq[String]): Option[DataType] = {
     def walk(dt: DataType, rest: Seq[String]): Option[DataType] = rest match {
       case Seq() => Some(dt)

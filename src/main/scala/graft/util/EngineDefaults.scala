@@ -1,11 +1,28 @@
 package graft.util
 
+import org.apache.spark.sql.SparkSession
+
 /** Session-builder engine defaults shared by every graft entry point
   * (Bench / Verify / PlanDump / Profile / Lab / tests). Each entry is an
   * ENGINE-LEVEL setting that applies to every query identically — never
   * a per-query tune.
   */
 object EngineDefaults {
+
+  /** The one local session every entry point runs on: `local[cpus]`
+    * with as many shuffle partitions, UTC session time, the graft SQL
+    * extensions, no UI, plus [[confs]]. */
+  def session(cpus: Int): SparkSession = {
+    val b = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.extensions", classOf[graft.GraftExtensions].getName)
+      .config("spark.ui.enabled", "false")
+    confs.foreach { case (k, v) => b.config(k, v) }
+    b.getOrCreate()
+  }
+
   /** All conf pairs, in one place so the bench/verify/test sessions
     * cannot drift apart. */
   val confs: Seq[(String, String)] = LocalFs.confs ++ Seq(

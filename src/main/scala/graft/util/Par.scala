@@ -1,9 +1,23 @@
 package graft.util
 
+import scala.concurrent.{Await, ExecutionContext, Future, blocking}
+import scala.concurrent.duration.DurationInt
+
 import org.apache.spark.sql.DataFrame
 
-/** Parallelism plumbing shared by the CPU-heavy operators. */
+/** Parallelism plumbing shared by the CPU-heavy operators and the
+  * driver-side metadata I/O. */
 object Par {
+
+  /** `f` over `xs` in parallel on the global pool, each call marked
+    * `blocking` (the pool grows past its core count while calls wait
+    * on I/O) — footer probes and stats, Avro manifest reads — so a list
+    * of N files costs one round-trip latency, not N. Results keep input
+    * order; fails on the first exception, or after 30 minutes. */
+  def map[A, B](xs: Seq[A])(f: A => B): Seq[B] = {
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    Await.result(Future.traverse(xs)(x => Future(blocking(f(x)))), 30.minutes)
+  }
 
   /** Decouple compute parallelism from input split count.
     *

@@ -6,18 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared session for all suites (one JVM-wide session, local[4]). */
 object SparkSpec {
   lazy val spark: SparkSession = {
-    val s = {
-      var b = SparkSession.builder()
-        .master("local[4]")
-        .appName("graft-test")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.extensions", classOf[GraftExtensions].getName)
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-      graft.util.EngineDefaults.confs.foreach { case (k, v) => b = b.config(k, v) }
-      b.getOrCreate()
-    }
+    val s = graft.util.EngineDefaults.session(4)
     s.sparkContext.setLogLevel("WARN")
     s
   }

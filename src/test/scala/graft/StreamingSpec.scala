@@ -119,6 +119,45 @@ class StreamingSpec extends SparkSpec {
     assert(table.scan().count() == 4)
   }
 
+  test("checkpoint file checksums on: a stateful upsert stream lands the same table") {
+    // every engine session runs with checkpoint checksums OFF
+    // (EngineDefaults.confs); this runs the same stream with them ON.
+    // The dedup keeps streaming state, so each micro-batch commits
+    // state-store files — the files the checksums cover.
+    val drop = Files.createTempDirectory("graft-stream-drop-ck").toString
+    // keys disjoint across files plus one cross-file duplicate: the
+    // result is the same in either file order
+    Seq((1L, "a", 10.0), (2L, "b", 20.0)).toDF("id", "k", "v")
+      .coalesce(1).write.mode("append").parquet(drop)
+    Seq((3L, "c", 30.0), (2L, "b", 20.0)).toDF("id", "k", "v")
+      .coalesce(1).write.mode("append").parquet(drop)
+    def run(s: org.apache.spark.sql.SparkSession) = {
+      val ckpt = Files.createTempDirectory("graft-stream-ckpt-ck")
+      val cat = new Snaplog(Files.createTempDirectory("graft-stream-wh-ck").toString)
+      val schema = spark.read.parquet(drop).schema
+      val table = LakehouseTable.create(cat, s, "ns", "t", schema)
+      val stream = StreamingIngest.readParquetStream(s, drop, schema,
+        maxFilesPerTrigger = 1).dropDuplicates("id", "k", "v")
+      assert(StreamingIngest.upsertEachBatch(stream, table, Seq("id"),
+        checkpointLocation = Some(ckpt.toString)) == 2L)
+      val rows = table.scan().orderBy("id").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSeq
+      // Spark's checkpoint checksum files end in .crc; Hadoop's local
+      // file system also writes hidden ".name.crc" files — skip those
+      val checksums = graft.util.Fs.walkList(ckpt).map(_.getFileName.toString)
+        .filter(n => n.endsWith(".crc") && !n.startsWith("."))
+      (rows, checksums)
+    }
+    val checked = spark.newSession()
+    checked.conf.set("spark.sql.streaming.checkpoint.fileChecksum.enabled", "true")
+    val (plain, plainSums) = run(spark)
+    val (withSums, sums) = run(checked)
+    assert(plain == Seq((1L, "a", 10.0), (2L, "b", 20.0), (3L, "c", 30.0)))
+    assert(withSums == plain)
+    assert(plainSums.isEmpty, plainSums)
+    assert(sums.nonEmpty, "the checksum-enabled run must write checksum files")
+  }
+
   test("uncheckpointed re-invocation never skips new data against a stale mark") {
     val drop = Files.createTempDirectory("graft-stream-drop2").toString
     val df = Seq((1L, "a", 10.0), (2L, "b", 20.0), (3L, "c", 30.0))
