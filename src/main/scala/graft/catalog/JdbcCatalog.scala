@@ -479,9 +479,8 @@ final class JdbcCatalog(val jdbcUrl: String, val warehouse: String,
     * snapshot/ref rows — disjoint locks, no deadlock). Serializes
     * concurrent maintenance ops; racing COMMITS are protected
     * independently by the snapshot-PK CAS + suffix-preserving
-    * [[replaceLog]]. */
-  /** Serializes maintenance against OTHER PROCESSES via a FOR UPDATE
-    * row lock on a dedicated connection. The whole section also holds
+    * [[replaceLog]]. The FOR UPDATE row lock serializes maintenance
+    * against OTHER PROCESSES; the whole section also holds
     * this instance's monitor (`synchronized`): the body's catalog calls
     * re-enter `withConn`'s monitor reentrantly, and no OTHER thread can
     * be inside `withConn` mid-statement against the row we are locking

@@ -9,6 +9,13 @@ import org.json4s._
 import org.json4s.jackson.Serialization
 import org.json4s.jackson.Serialization.{read => jread, write => jwrite}
 
+/** Per-file, per-column value bounds (stringified; numeric columns
+  * parse back to double at prune time). Iceberg-manifest-style stats:
+  * collected once at commit from the parquet footer, consulted at scan
+  * planning so files whose [min,max] cannot match a range predicate are
+  * never handed to Spark. */
+case class ColBounds(min: String, max: String)
+
 /** One data file registered to a snapshot.
   *
   * `partitionValues` holds the identity-partition value(s) of the file so
@@ -17,15 +24,8 @@ import org.json4s.jackson.Serialization.{read => jread, write => jwrite}
   * (manifest-style pruning, like the reference's catalog-tracked
   * partition spec `main-polars.py:135-142`; no directory listing at plan
   * time, which is what survives at 100 TB / millions of files).
-  */
-/** Per-file, per-column value bounds (stringified; numeric columns
-  * parse back to double at prune time). Iceberg-manifest-style stats:
-  * collected once at commit from the parquet footer, consulted at scan
-  * planning so files whose [min,max] cannot match a range predicate are
-  * never handed to Spark. */
-case class ColBounds(min: String, max: String)
-
-/** `deleteFile = Some(true)` marks a POSITION-DELETE vector (parquet of
+  *
+  * `deleteFile = Some(true)` marks a POSITION-DELETE vector (parquet of
   * `(file_path, row_index)` rows, Iceberg-v2 MOR tier) rather than a
   * data file; absent/None (all pre-existing log entries) means data.
   *
@@ -34,22 +34,25 @@ case class ColBounds(min: String, max: String)
   * EVERY row group set the stat, so a recorded value is exact — which
   * is what licenses metadata `COUNT(col)` on nullable columns and
   * IS [NOT] NULL file pruning. Absent for pre-existing log entries
-  * (json4s default) = unknown = never prune, never answer. */
-/** `equalityKey = Some(col)` (with `deleteFile = Some(true)`) marks an
+  * (json4s default) = unknown = never prune, never answer.
+  *
+  * `equalityKey = Some(col)` (with `deleteFile = Some(true)`) marks an
   * EQUALITY-DELETE file (Iceberg v2 equality deletes): a parquet of
   * deleted key VALUES in column `col`. It applies to data files that
   * precede it in replay order (scan-side broadcast anti-join on the
   * key), so rows appended after the delete with the same key survive —
   * the keyed-CDC contract. Retired by any reset commit, like position
-  * vectors. */
-/** `firstRowId`/`dataSeq` (round 15) carry Iceberg v3 ROW LINEAGE: the
+  * vectors.
+  *
+  * `firstRowId`/`dataSeq` carry Iceberg v3 ROW LINEAGE: the
   * `_row_id` of the file's first row and the file's data sequence
   * number (`_last_updated_sequence_number` for its non-updated rows).
   * Present on files adopted from a v3 tree, on every data file of a
   * [[Snaplog.RowLineageProp]] table (assigned at commit, round 16),
   * and on files stamped by [[Catalog#assignRowLineage]] (a v3 export's
-  * persistence pass); absent on plain tables' files. */
-/** `lineageInFile = Some(true)` (round 16) marks a data file whose
+  * persistence pass); absent on plain tables' files.
+  *
+  * `lineageInFile = Some(true)` marks a data file whose
   * rows carry MATERIALIZED `_row_id`/`_last_updated_sequence_number`
   * columns — the v3 spec's carry mechanism for rewrites: a compaction
   * of a row-lineage table writes the ids INTO the new files (under the
@@ -84,14 +87,14 @@ case class Snapshot(
     files: Seq[DataFileEntry],
     summary: Map[String, String])
 
-/** Table-level metadata, the analogue of the reference's catalog row +
-  * Iceberg metadata.json (`catalog.create_table` `main-polars.py:150-152`
-  * with schema, partition spec and properties `main-daft.py:102-107`).
-  */
 /** A named snapshot pointer (Iceberg-style ref): `tag`s are immutable
   * audit/release marks, `branch`es may retarget as work advances. */
 case class SnapshotRef(snapshotId: Long, refType: String)
 
+/** Table-level metadata, the analogue of the reference's catalog row +
+  * Iceberg metadata.json (`catalog.create_table` `main-polars.py:150-152`
+  * with schema, partition spec and properties `main-daft.py:102-107`).
+  */
 case class TableMetadata(
     namespace: String,
     name: String,

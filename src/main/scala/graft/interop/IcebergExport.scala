@@ -102,8 +102,9 @@ object IcebergExport {
     * fallback for fields without ids — and name-based engines (DuckDB's
     * iceberg_scan, graft's own re-import) read the nested shape
     * directly. No silent fallback: a type the spec cannot express
-    * refuses rather than exporting a false schema. */
-  /** `path`/`reg`/`interior`: id lookups so the exported schema declares
+    * refuses rather than exporting a false schema.
+    *
+    * `path`/`reg`/`interior`: id lookups so the exported schema declares
     * the SAME numbers the files physically carry — since round 13
     * managed writes stamp STRUCT-chain inner ids from the registry's
     * dotted entries, and since round 14 LIST/MAP interior ids from the
@@ -208,10 +209,6 @@ object IcebergExport {
     case TruncateField(w, _) => s"truncate[$w]"
   }
 
-  /** Avro type of one partition FIELD in the `r102` partition struct:
-    * the transform's Iceberg RESULT type (identity/truncate → source
-    * type, day → date-logical int, hour/month/year → int). */
-
   /** Iceberg name-mapping (`schema.name-mapping.default`) derived from
     * the ALREADY-EMITTED schema JSON — walking the JSON (rather than
     * re-running id allocation) guarantees mapping ids and schema ids
@@ -250,6 +247,9 @@ object IcebergExport {
     JArray(fields.map(entry))
   }
 
+  /** Avro type of one partition FIELD in the `r102` partition struct:
+    * the transform's Iceberg RESULT type (identity/truncate → source
+    * type, day → date-logical int, hour/month/year → int). */
   private def partitionAvroType(pf: PartField, srcDt: DataType): JValue = pf match {
     case _: IdentityField => srcDt match {
       case IntegerType | ShortType | ByteType => JString("int")

@@ -733,10 +733,6 @@ object IcebergImport {
       delPlans.collect { case p: EqPlan => p })
   }
 
-  /** Lenient path-set walk of one snapshot — NO validation, no
-    * existence checks (a file removed by a later foreign rewrite may be
-    * gone from disk): just which data / delete paths the snapshot
-    * lists, for refresh's watermark diff. */
   /** Iceberg v3 ROW-LINEAGE assignment: `file_path` → the `_row_id` of
     * the file's first row, reconstructed per the spec's inheritance
     * model — each snapshot's metadata carries `first-row-id`, and the
@@ -802,6 +798,10 @@ object IcebergImport {
     Some((assigned, materialized))
   }
 
+  /** Lenient path-set walk of one snapshot — NO validation, no
+    * existence checks (a file removed by a later foreign rewrite may be
+    * gone from disk): just which data / delete paths the snapshot
+    * lists, for refresh's watermark diff. */
   private def walkPathSets(tree: Tree, snapshotId: Long)
       (implicit fmts: Formats): (Set[String], Set[String]) = {
     val manifestFiles = readAvro(tree.manifestListOf(snapshotId))
@@ -849,15 +849,6 @@ object IcebergImport {
     }.toMap
   }
 
-  /** Rewrite position-delete files into ONE graft vector under the
-    * target table's data dir: `pos` → `row_index` and the recorded path
-    * → the exact qualified form `_metadata.file_path` carries at scan
-    * time (the subtraction anti-join is a raw string match — both sides
-    * must come off the same FileSystem qualification). Delete files are
-    * predicate-sized relative to the data, so the rewrite is
-    * metadata-scale I/O; the 100 TB of data files stay untouched in
-    * place. Rows referencing paths outside `dataPlainPaths` are
-    * dangling (the data file left the snapshot) and dropped. */
   /** The form `_metadata.file_path` carries at scan for a plain path:
     * scheme + authority-if-present + RAW (percent-encoded) path.
     * makeQualified stamps an EMPTY authority ("file:///…") where
@@ -875,6 +866,15 @@ object IcebergImport {
     s"${u.getScheme}:${if (auth.nonEmpty) "//" + auth else ""}${u.getRawPath}"
   }
 
+  /** Rewrite position-delete files into ONE graft vector under the
+    * target table's data dir: `pos` → `row_index` and the recorded path
+    * → the exact qualified form `_metadata.file_path` carries at scan
+    * time (the subtraction anti-join is a raw string match — both sides
+    * must come off the same FileSystem qualification). Delete files are
+    * predicate-sized relative to the data, so the rewrite is
+    * metadata-scale I/O; the 100 TB of data files stay untouched in
+    * place. Rows referencing paths outside `dataPlainPaths` are
+    * dangling (the data file left the snapshot) and dropped. */
   private def buildPosEntries(spark: SparkSession, catalog: Catalog,
       ns: String, name: String, posPlans: Seq[PosPlan],
       dvPlans: Seq[DvPlan], dataPlainPaths: Set[String]): Seq[DataFileEntry] = {

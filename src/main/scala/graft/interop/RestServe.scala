@@ -66,6 +66,21 @@ object RestServe {
   private final class Served(val root: Path, val ensureCurrent: () => Unit,
       val commit: Option[String => (Int, String)] = None)
 
+  /** Where the spec's CREATE route lands tables:
+    * `POST /v1/namespaces/{ns}/tables` with a CreateTableRequest
+    * creates a NATIVE graft table in `catalog` under the request's
+    * namespace and starts serving it live from
+    * `exportBase/<ns>/<name>` — so a foreign engine can create,
+    * commit, and read entirely through REST. Identity and time/
+    * truncate transforms map onto graft's partition layout; bucket
+    * transforms refuse (graft's xxhash64 buckets are not Iceberg
+    * murmur3 — silently accepting would attribute files under a
+    * different hash). */
+  final case class CreateTarget(
+      spark: org.apache.spark.sql.SparkSession,
+      catalog: graft.catalog.Catalog,
+      exportBase: Path)
+
   /** Serve NATIVE graft tables LIVE: publish-on-COMMIT, and (round 17)
     * accept spec commits back. The server registers a commit listener
     * on each table's catalog; the listener marks the table dirty and
@@ -89,21 +104,6 @@ object RestServe {
     * atomic rename, so a reader racing a re-export sees only complete
     * content, old or new. `stop()` unregisters the listeners and
     * shuts the publisher down. */
-  /** Where the spec's CREATE route lands tables (round 17):
-    * `POST /v1/namespaces/{ns}/tables` with a CreateTableRequest
-    * creates a NATIVE graft table in `catalog` under the request's
-    * namespace and starts serving it live from
-    * `exportBase/<ns>/<name>` — so a foreign engine can create,
-    * commit, and read entirely through REST. Identity and time/
-    * truncate transforms map onto graft's partition layout; bucket
-    * transforms refuse (graft's xxhash64 buckets are not Iceberg
-    * murmur3 — silently accepting would attribute files under a
-    * different hash). */
-  final case class CreateTarget(
-      spark: org.apache.spark.sql.SparkSession,
-      catalog: graft.catalog.Catalog,
-      exportBase: Path)
-
   def startLive(
       tables: Map[(String, String), (graft.table.LakehouseTable, Path)],
       port: Int = 0, token: Option[String] = None,

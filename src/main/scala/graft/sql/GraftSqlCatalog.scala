@@ -123,15 +123,6 @@ private[sql] final class GraftSqlTable(
     }
   }
 
-  /** `DELETE FROM <t> WHERE <cond>` maps onto the MERGE-ON-READ delete
-    * tier: one pushdown scan finds matched `(file, position)` pairs,
-    * one KB-scale vector commits conditionally (race → clean failure),
-    * data files stay untouched, and subsequent reads — SQL or native —
-    * subtract the vector; compaction materializes it later. The cheap
-    * path for scattered-predicate deletes, which is exactly what SQL
-    * DELETE statements tend to be. Conditions Spark cannot express as
-    * source filters are declined (Spark reports rewrite-unsupported
-    * rather than deleting the wrong rows). */
   /** `TRUNCATE TABLE` is METADATA-ONLY: one conditional overwrite
     * commit with an empty file list — no data file is touched, no row
     * is scanned, and every previous snapshot stays time-travelable.
@@ -147,6 +138,15 @@ private[sql] final class GraftSqlTable(
     true
   }
 
+  /** `DELETE FROM <t> WHERE <cond>` maps onto the MERGE-ON-READ delete
+    * tier: one pushdown scan finds matched `(file, position)` pairs,
+    * one KB-scale vector commits conditionally (race → clean failure),
+    * data files stay untouched, and subsequent reads — SQL or native —
+    * subtract the vector; compaction materializes it later. The cheap
+    * path for scattered-predicate deletes, which is exactly what SQL
+    * DELETE statements tend to be. Conditions Spark cannot express as
+    * source filters are declined (Spark reports rewrite-unsupported
+    * rather than deleting the wrong rows). */
   override def canDeleteWhere(filters: Array[Filter]): Boolean =
     writable && filters.forall(FilterToColumn.translatable)
   override def deleteWhere(filters: Array[Filter]): Unit = {
@@ -518,10 +518,6 @@ private[sql] final class GraftRowLevelOperation(
   private val scanFilters =
     new java.util.concurrent.ConcurrentHashMap[AnyRef, Seq[Expression]]()
 
-  /** Data files this branch's group filters cannot prove rowless —
-    * plus, under outstanding MOR vectors, every vector-touched file:
-    * the COW commit is a RESET that retires vectors, so a touched file
-    * must be rewritten (carrying it would resurrect its deleted rows). */
   /** Lowercase column names whose stats were poisoned by an evolution
     * rebinding (drop+re-add / rename onto a freed name): group filters
     * touching them must not prune — old files' name-keyed bounds
@@ -530,6 +526,10 @@ private[sql] final class GraftRowLevelOperation(
   private val statsUnsafe: Set[String] = graft.types.FieldIds.namesSet(
     tableProps, graft.types.FieldIds.StatsUnsafeProp)
 
+  /** Data files this branch's group filters cannot prove rowless —
+    * plus, under outstanding MOR vectors, every vector-touched file:
+    * the COW commit is a RESET that retires vectors, so a touched file
+    * must be rewritten (carrying it would resurrect its deleted rows). */
   private def affectedFiles(filters: Seq[Expression]): Seq[DataFileEntry] = {
     val usable = filters.filter(_.references.forall(a =>
       !statsUnsafe(a.name.toLowerCase(java.util.Locale.ROOT))))
@@ -1881,7 +1881,6 @@ class GraftSqlCatalog extends TableCatalog with SupportsNamespaces
     // validate EVERY change before applying ANY: a mixed statement must
     // fail whole, not commit a partial evolution and then throw
     val adds = Seq.newBuilder[TableChange.AddColumn]
-    val nestedAdds = Seq.newBuilder[TableChange.AddColumn]
     val renames = Seq.newBuilder[TableChange.RenameColumn]
     val drops = Seq.newBuilder[TableChange.DeleteColumn]
     val widens = Seq.newBuilder[TableChange.UpdateColumnType]
@@ -1889,17 +1888,14 @@ class GraftSqlCatalog extends TableCatalog with SupportsNamespaces
     val setProps = Map.newBuilder[String, String]
     val unsetProps = Seq.newBuilder[String]
     changes.foreach {
-      case add: TableChange.AddColumn
-          if add.fieldNames().length == 1 && add.isNullable &&
-            add.position() == null => adds += add
-      // `ADD COLUMN parent.child` — the struct-chain inner append
-      // (LakehouseTable.addStructField); appended-at-end, nullable
-      // only, and no DEFAULT (inner fields fill by name-resolution
+      // nullable, appended-at-end columns; `ADD COLUMN parent.child` is
+      // the struct-chain inner append (LakehouseTable.addStructField),
+      // which takes no DEFAULT (inner fields fill by name-resolution
       // null only; an inner existence default has no reader support)
       case add: TableChange.AddColumn
-          if add.fieldNames().length > 1 && add.isNullable &&
-            add.position() == null && add.defaultValue() == null =>
-        nestedAdds += add
+          if add.isNullable && add.position() == null &&
+            (add.fieldNames().length == 1 || add.defaultValue() == null) =>
+        adds += add
       // inner add WITH a DEFAULT refuses explicitly: SQL DEFAULT
       // promises existence + write semantics, but Spark's parquet
       // readers fill EXISTS_DEFAULT for TOP-LEVEL missing columns only
@@ -1958,7 +1954,6 @@ class GraftSqlCatalog extends TableCatalog with SupportsNamespaces
         }
       }
     val addList = adds.result()
-    val nestedAddList = nestedAdds.result()
     val widenList = widens.result()
     val setDefaultList = setDefaults.result()
     val renameList = renames.result()
@@ -1967,6 +1962,9 @@ class GraftSqlCatalog extends TableCatalog with SupportsNamespaces
       .map(_.toLowerCase(java.util.Locale.ROOT)).toSet
     val dropList = drops.result().filterNot(dc => dc.ifExists() &&
       !curFields(dc.fieldNames()(0).toLowerCase(java.util.Locale.ROOT)))
+    val tbl = LakehouseTable.load(backing, SparkSession.active, ns, t)
+    val fieldAdds = addList.map(a =>
+      (a.fieldNames().toSeq, a.dataType(), defaultSqlOf(a)))
     // STATIC validation of every change BEFORE applying any: a mixed
     // statement must fail whole, not commit a partial evolution and
     // then throw (the per-op gates still run inside each op)
@@ -2000,27 +1998,15 @@ class GraftSqlCatalog extends TableCatalog with SupportsNamespaces
               meta0.schema, parts).isDefined,
             s"no struct field '${parts.mkString(".")}' in $ns.$t")
         }
-      // nested changes: replay the pure schema patches so a structural
-      // violation (missing root, non-struct step, existing leaf, bad
-      // promotion path) fails the WHOLE statement before any op runs
-      // (addStructField's foreign-file probe still runs per-op)
-      locally {
-        import graft.types.SchemaInfer
-        var sch = meta0.schema
-        nestedAddList.foreach { a =>
-          sch = SchemaInfer.addInnerField(sch, a.fieldNames().toSeq, a.dataType())
-        }
-        widenList.filter(_.fieldNames().length > 1).foreach { w =>
-          require(SchemaInfer.innerType(sch, w.fieldNames().toSeq).isDefined,
-            s"no struct leaf '${w.fieldNames().mkString(".")}' in $ns.$t")
-        }
+      // replay the adds' pure half (structural patch, name gates,
+      // DEFAULT folding) and resolve struct-leaf widen paths against
+      // its result; the file probes still run inside addFields
+      val sch = tbl.addedSchema(meta0, fieldAdds)
+      widenList.filter(_.fieldNames().length > 1).foreach { w =>
+        require(graft.types.SchemaInfer.innerType(
+            sch, w.fieldNames().toSeq).isDefined,
+          s"no struct leaf '${w.fieldNames().mkString(".")}' in $ns.$t")
       }
-      // DEFAULT clauses fold statically too (constant-foldable +
-      // type-coercible — Spark's own analysis), so a bad default in a
-      // mixed statement applies nothing
-      addList.foreach(a => defaultSqlOf(a).foreach(sql =>
-        graft.types.ColumnDefaults.foldedField(
-          a.fieldNames()(0), a.dataType(), sql)))
       setDefaultList.foreach { ud =>
         val c = lower(ud.fieldNames()(0))
         val f = meta0.schema.fields.find(x => lower(x.name) == c).getOrElse(
@@ -2030,21 +2016,14 @@ class GraftSqlCatalog extends TableCatalog with SupportsNamespaces
           graft.types.ColumnDefaults.foldedField(f.name, f.dataType, sql))
       }
     }
-    val tbl = LakehouseTable.load(backing, SparkSession.active, ns, t)
-    if (addList.nonEmpty) {
-      // ONE schema commit for the whole statement's additions
-      tbl.addColumnsDefaulted(addList.map(a =>
-        (a.fieldNames()(0), a.dataType(), defaultSqlOf(a))))
-    }
+    // ONE schema commit for the whole statement's additions, top-level
+    // and struct-chain alike
+    if (fieldAdds.nonEmpty) tbl.addFields(fieldAdds)
     setDefaultList.foreach { ud =>
       // Spark encodes DROP DEFAULT as the empty string
       val sql = Option(ud.newDefaultValue()).filter(_.nonEmpty)
       tbl.setColumnDefault(ud.fieldNames()(0), sql)
     }
-    // struct-chain inner appends — per-path (each re-validates and
-    // runs the foreign-file probe inside the evolution lock)
-    nestedAddList.foreach(a =>
-      tbl.addStructField(a.fieldNames().mkString("."), a.dataType()))
     // RENAME/DROP are metadata-only via field-id indirection and
     // widening is metadata-only too — the table-side path ops re-run
     // every eligibility gate of the path's depth before mutating

@@ -36,6 +36,17 @@ object EqDeletes {
   def keyCols(f: DataFileEntry): Seq[String] =
     f.equalityKey.get.split(',').toSeq
 
+  /** Vector files are immutable once committed (unique staging paths,
+    * never rewritten in place), so their distinct file_path sets cache
+    * safely across plans — a hot CDC table planned hundreds of times
+    * between maintenance runs pays the driver-side vector read once.
+    * Bounded LRU; retired vectors age out. */
+  private val vecPathCache =
+    new java.util.LinkedHashMap[Seq[String], Set[String]](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[Seq[String], Set[String]]): Boolean = size > 64
+    }
+
   /** Data-file paths possibly AFFECTED by the outstanding delete
     * entries in `ordered` (replay order) — one definition of
     * delete-touch attribution, shared by the delete-tier compaction's
@@ -55,17 +66,6 @@ object EqDeletes {
     * Every path NOT returned is provably unaffected: its logged row
     * count and column bounds describe its live rows exactly even while
     * the deletes stay outstanding. */
-  /** Vector files are immutable once committed (unique staging paths,
-    * never rewritten in place), so their distinct file_path sets cache
-    * safely across plans — a hot CDC table planned hundreds of times
-    * between maintenance runs pays the driver-side vector read once.
-    * Bounded LRU; retired vectors age out. */
-  private val vecPathCache =
-    new java.util.LinkedHashMap[Seq[String], Set[String]](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[Seq[String], Set[String]]): Boolean = size > 64
-    }
-
   def touchedDataPaths(spark: SparkSession, ordered: Seq[DataFileEntry],
       statsUnsafe: Set[String], schema: StructType): Set[String] = {
     val deletes = ordered.filter(_.deleteFile.contains(true))

@@ -238,12 +238,6 @@ final class LakehouseTable(
     }
   }
 
-  /** File lists → DataFrame: plain parquet scan, with the merge-on-read
-    * position-delete subtraction when vectors are live — a broadcast
-    * anti-join on (file, row position). Vectors are metadata-sized
-    * relative to the data (a predicate's matched positions), so the
-    * join adds no shuffle of the data side; a reset commit
-    * (compaction/overwrite) retires them entirely. */
   /** The schema scans request — after a rename/drop the stored schema
     * carries field ids, and the session must resolve columns BY ID
     * (Spark's fieldId read conf; a no-op for id-free schemas). */
@@ -1099,8 +1093,9 @@ final class LakehouseTable(
     * order ([[graft.catalog.Catalog.assignRowLineage]]) so
     * [[scanLineage]] serves immediately. Metadata-only at any table
     * size (one log rewrite, zero data movement). Like renameTable, run
-    * the flip without concurrent writers on this table; idempotent. */
-  /** Lineage stability boundary: MAINTENANCE rewrites (compact,
+    * the flip without concurrent writers on this table; idempotent.
+    *
+    * Lineage stability boundary: MAINTENANCE rewrites (compact,
     * rewriteDataFiles/DeleteFiles, COW delete survivors) and the MOR
     * tier (mergeDelta, deleteMor, deleteEq) preserve surviving rows'
     * ids — content-identical rows keep their identity. MERGE UPDATES
@@ -1298,11 +1293,8 @@ final class LakehouseTable(
       meta.properties.get(Snaplog.RowLineageProp).contains("true")
     def cowRewrite(content: DataFrame, summary: Map[String, String],
         carry: Seq[DataFileEntry] = Seq.empty): Snapshot = {
-      val staged = stageDataFiles(Seq(content),
+      val entries = stageDataFiles(Seq(content),
         withLineageCols = lineageMode)
-      val entries =
-        if (lineageMode) staged.map(_.copy(lineageInFile = Some(true)))
-        else staged
       catalog.commit(namespace, name, Snaplog.OpDelete, carry ++ entries,
         summary, expectedSnapshotId = Some(base))
     }
@@ -1330,10 +1322,7 @@ final class LakehouseTable(
       val kept = content(_ => true)
         .observe(obs, sum(when(condition, 1L).otherwise(0L)).as("__del"))
         .filter(!condition)
-      val staged = stageDataFiles(Seq(kept), withLineageCols = lineageMode)
-      val entries =
-        if (lineageMode) staged.map(_.copy(lineageInFile = Some(true)))
-        else staged
+      val entries = stageDataFiles(Seq(kept), withLineageCols = lineageMode)
       val deletedRows = Option(obs.get.getOrElse("__del", null))
         .map(_.asInstanceOf[Number].longValue()).getOrElse(0L)
       return catalog.commit(namespace, name, Snaplog.OpDelete, entries,
@@ -1690,19 +1679,6 @@ final class LakehouseTable(
 
   // ---- maintenance ------------------------------------------------------
 
-  /** Compact the live file set: rewrite the current snapshot into
-    * ceil(totalBytes / targetFileSizeBytes) files (≥1) and commit as a
-    * `replace` snapshot — same data, new layout, history preserved.
-    * The many-small-files problem is THE lakehouse maintenance task at
-    * scale: compaction restores large sequential scans and shrinks
-    * planning metadata. Default target mirrors the reference's 512 MB
-    * `write.target-file-size-bytes` (`main-daft.py:106`). */
-  /** @param sortBy optional clustering columns: the rewrite range-
-    *   partitions and sorts on them, so each output file covers a
-    *   DISJOINT value range and the per-file [min,max] bounds in the
-    *   log become maximally selective for stat-based skipping (the
-    *   sort-order compaction every table format offers alongside
-    *   plain bin-packing). Empty = plain round-robin bin-packing. */
   /** PARTIAL compaction — Iceberg's `rewrite_data_files` with a file
     * selector: rewrite ONLY the selected live data files toward the
     * target size, carrying everything else BY PATH in one conditional
@@ -2009,6 +1985,20 @@ final class LakehouseTable(
     summary
   }
 
+  /** Compact the live file set: rewrite the current snapshot into
+    * ceil(totalBytes / targetFileSizeBytes) files (≥1) and commit as a
+    * `replace` snapshot — same data, new layout, history preserved.
+    * The many-small-files problem is THE lakehouse maintenance task at
+    * scale: compaction restores large sequential scans and shrinks
+    * planning metadata. Default target mirrors the reference's 512 MB
+    * `write.target-file-size-bytes` (`main-daft.py:106`).
+    *
+    * @param sortBy optional clustering columns: the rewrite range-
+    *   partitions and sorts on them, so each output file covers a
+    *   DISJOINT value range and the per-file [min,max] bounds in the
+    *   log become maximally selective for stat-based skipping (the
+    *   sort-order compaction every table format offers alongside
+    *   plain bin-packing). Empty = plain round-robin bin-packing. */
   def compact(targetFileSizeBytes: Long = 512L * 1024 * 1024,
       sortBy: Seq[String] = Seq.empty): Snapshot = {
     val base = currentSnapshotId
@@ -2045,10 +2035,7 @@ final class LakehouseTable(
       if (sortBy.isEmpty) content.repartition(n)
       else content.repartitionByRange(n, sortBy.map(col): _*)
         .sortWithinPartitions(sortBy.map(col): _*)
-    val staged = stageDataFiles(Seq(laid), withLineageCols = lineageMode)
-    val entries =
-      if (lineageMode) staged.map(_.copy(lineageInFile = Some(true)))
-      else staged
+    val entries = stageDataFiles(Seq(laid), withLineageCols = lineageMode)
     catalog.commit(namespace, name, Snaplog.OpReplace, carry ++ entries,
       summary, expectedSnapshotId = Some(base))
   }
@@ -2115,7 +2102,7 @@ final class LakehouseTable(
     * files stay untouched — scans fill the column with null (parquet
     * read-schema reconciliation), new writes carry it. */
   def addColumn(colName: String, dataType: DataType): TableMetadata =
-    addColumns(Seq(colName -> dataType))
+    addFields(Seq((Seq(colName), dataType, None)))
 
   /** [[addColumn]] with a DEFAULT — Iceberg v3's initial/write-default
     * semantics, metadata-only at any table size. `defaultSql` is a
@@ -2136,7 +2123,7 @@ final class LakehouseTable(
     * serves values). */
   def addColumn(colName: String, dataType: DataType,
       defaultSql: String): TableMetadata =
-    addColumnsDefaulted(Seq((colName, dataType, Some(defaultSql))))
+    addFields(Seq((Seq(colName), dataType, Some(defaultSql))))
 
   /** Batch form of [[addColumn]]: validates EVERY addition (against the
     * current schema and against each other) BEFORE committing, then
@@ -2146,108 +2133,12 @@ final class LakehouseTable(
     * re-adds under a FRESH id — old files hold no field with it, and
     * the old data can never resurrect. */
   def addColumns(cols: Seq[(String, DataType)]): TableMetadata =
-    addColumnsDefaulted(cols.map { case (n, dt) => (n, dt, None) })
+    addFields(cols.map { case (n, dt) => (Seq(n), dt, None) })
 
+  /** [[addColumns]] with an optional DEFAULT per column. */
   def addColumnsDefaulted(
       cols: Seq[(String, DataType, Option[String])]): TableMetadata =
-      catalog.withEvolutionLock(namespace, name) {
-    import graft.types.{ColumnDefaults, FieldIds}
-    require(cols.nonEmpty, "addColumns of zero columns")
-    val m = meta
-    val cur = m.schema
-    cols.foldLeft(cur.fieldNames.map(_.toLowerCase(java.util.Locale.ROOT)).toSet) {
-      (seen, c) =>
-        val n = c._1.toLowerCase(java.util.Locale.ROOT)
-        require(!seen(n), s"column '${c._1}' already exists")
-        seen + n
-    }
-    // a NESTED column may not take a FREED name: Spark's nested schema
-    // pruning rebuilds the pruned read schema WITHOUT field-id metadata,
-    // so a pruned read of the new column falls back to NAME matching and
-    // would serve the previously-bound column's bytes out of old files —
-    // silent resurrection (full reads, which keep the id, return null;
-    // the two plan shapes would disagree). Flat re-adds stay legal: a
-    // flat request never loses its id metadata, so the fresh id shields
-    // old files (stats are poisoned below, values never resurrect).
-    require(cols.forall(c => !isNestedType(c._2) ||
-        !FieldIds.namesSet(m.properties, FieldIds.FreedNamesProp)(
-          c._1.toLowerCase(java.util.Locale.ROOT))),
-      s"$namespace.$name: adding a nested (struct/map/array) column " +
-        "under a name freed by rename/drop would resurrect old files' " +
-        "data under nested schema pruning (pruned reads match nested " +
-        "roots by NAME) — pick a fresh name")
-    // defaults fold to literals NOW (type-coerced to the column type,
-    // non-constant expressions refuse): the write-side text lands under
-    // CURRENT_DEFAULT, the folded existence literal under
-    // EXISTS_DEFAULT — the key parquet's readers fill missing columns
-    // from, which is what makes the add metadata-only AND non-null
-    val added = cols.map {
-      case (n, dt, None) => StructField(n, dt, nullable = true)
-      case (n, dt, Some(d)) => ColumnDefaults.foldedField(n, dt, d)
-    }
-    val base = StructType(cur.fields ++ added)
-    // a new column taking a FREED name is a rebinding: old files' stats
-    // keyed by that name describe the previously-bound column, so every
-    // stats consumer must stop trusting them — forever (history entries
-    // cannot be rewritten)
-    val rebound = cols.map(_._1.toLowerCase(java.util.Locale.ROOT))
-      .filter(FieldIds.namesSet(m.properties, FieldIds.FreedNamesProp))
-    // a NEW STRUCT column's leaf dot paths are future stat keys — one
-    // colliding with a FREED dotted flat name inherits that dropped
-    // column's recorded bounds/null counts on old files (the same
-    // hazard addStructField poisons): enter the dotted key AND the new
-    // root (prune eligibility filters by root reference)
-    val freedSet = FieldIds.namesSet(m.properties, FieldIds.FreedNamesProp)
-    def leafPaths(prefix: String, dt: DataType): Seq[String] = dt match {
-      case st: StructType =>
-        st.fields.toSeq.flatMap(f => leafPaths(s"$prefix.${f.name}", f.dataType))
-      case _: ArrayType | _: MapType => Seq.empty // never stat keys
-      case _ => Seq(prefix)
-    }
-    val poisonedLeaves = cols.flatMap { case (n, dt, _) =>
-      val hits = leafPaths(n, dt).map(_.toLowerCase(java.util.Locale.ROOT))
-        .filter(freedSet)
-      if (hits.isEmpty) Seq.empty
-      else hits :+ n.toLowerCase(java.util.Locale.ROOT)
-    }
-    val reboundAll = (rebound ++ poisonedLeaves).distinct
-    val reboundProps: Map[String, String] =
-      if (reboundAll.isEmpty) Map.empty
-      else Map(FieldIds.StatsUnsafeProp ->
-        FieldIds.addNames(m.properties, FieldIds.StatsUnsafeProp, reboundAll))
-    m.properties.get(FieldIds.RegistryProp).map(FieldIds.decode) match {
-      case Some(reg) if cols.forall(c =>
-          !c._1.contains(",") && !c._1.contains(":")) =>
-        var next = lastFieldId(m, reg)
-        val topIds = cols.map { case (n, _, _) => next += 1; n -> next }
-        // new STRUCT columns get dotted inner ids too (round 13), so
-        // their files stamp inner ids from birth; same encodability
-        // rules as registryFor
-        val innerIds =
-          if (base.fieldNames.exists(_.contains("."))) Seq.empty
-          else FieldIds.structPathSeqs(StructType(added.toArray))
-            .filter(parts => !parts.exists(c =>
-              c.contains(",") || c.contains(":") || c.contains(".")))
-            .map { parts => next += 1; parts.mkString(".") -> next }
-        val reg2 = reg ++ topIds ++ innerIds
-        val (intProps, hw) = interiorUpdates(m, base, next)
-        catalog.updateProperties(namespace, name,
-          Map(FieldIds.RegistryProp -> FieldIds.encode(reg2),
-            FieldIds.LastIdProp -> hw.toString) ++ intProps ++ reboundProps,
-          Seq.empty)
-        // the stored schema carries ids only after a rename/drop flipped
-        // the table to read-by-id; before that it stays name-matched
-        catalog.updateSchema(namespace, name,
-          if (innerIdsActive(m)) FieldIds.attachAll(base, reg2)
-          else if (FieldIds.hasIds(cur)) FieldIds.attach(base, reg2) else base)
-      case _ =>
-        // exotic names break the registry encoding: keep additive
-        // evolution, forfeit renameability (refused later with guidance)
-        if (reboundProps.nonEmpty)
-          catalog.updateProperties(namespace, name, reboundProps, Seq.empty)
-        catalog.updateSchema(namespace, name, base)
-    }
-  }
+    addFields(cols.map { case (n, dt, d) => (Seq(n), dt, d) })
 
   /** `ALTER COLUMN … SET/DROP DEFAULT` — edits ONLY the write-side
     * default (`CURRENT_DEFAULT`): future rows written without the
@@ -2313,96 +2204,178 @@ final class LakehouseTable(
     * Rows in files that predate the leaf read NULL, exactly as before. */
   def addStructFieldDefaulted(dottedPath: String, dataType: DataType,
       writeDefaultSql: Option[String]): TableMetadata =
+    addFields(Seq((structPath("addStructField", dottedPath, "addColumn"),
+      dataType, writeDefaultSql)))
+
+  /** ADD of a field at each path (root first, new leaf last), applied
+    * in order as ONE schema change: every gate runs before the first
+    * metadata write, so a batch lands whole or not at all. One segment
+    * is a top-level column ([[addColumn]]'s rules), more a struct-chain
+    * leaf ([[addStructField]]'s). New ids allocate above one high-water
+    * mark — top-level columns, then their inner fields, then struct
+    * leaves; the properties and the schema are each written once. */
+  private[graft] def addFields(
+      adds: Seq[(Seq[String], DataType, Option[String])]): TableMetadata =
       catalog.withEvolutionLock(namespace, name) {
-    import graft.types.{ColumnDefaults, FieldIds, SchemaInfer}
-    val parts = dottedPath.split('.').toSeq
+    import graft.types.FieldIds
+    require(adds.nonEmpty, "addColumns of zero columns")
     val m = meta
-    val leafField = writeDefaultSql match {
-      case None => org.apache.spark.sql.types.StructField(
-        parts.last, dataType, nullable = true)
-      case Some(sql) =>
-        // validate foldability/coercion like the top-level path, then
-        // keep ONLY the write-side key (no EXISTS key — see scaladoc)
-        ColumnDefaults.foldedField(parts.last, dataType, sql) // validation
-        ColumnDefaults.withCurrentDefault(
-          org.apache.spark.sql.types.StructField(
-            parts.last, dataType, nullable = true), Some(sql))
-    }
-    // the pure patch throws on every structural violation (missing
-    // root, non-struct step, existing leaf, bad names)
-    val evolved = SchemaInfer.addInnerFieldF(m.schema, parts, leafField)
-    val lower = dottedPath.toLowerCase(java.util.Locale.ROOT)
-    require(!m.schema.fieldNames.exists(_.equalsIgnoreCase(dottedPath)),
-      s"$namespace.$name has a top-level column literally named " +
-        s"'$dottedPath' — its stat keys and SQL name would collide with " +
-        "the new leaf's forever; pick another name")
-    // foreign files: footer-probe each for the path (parallel, no data
-    // pages; all-history like the rename gate — time travel reads old
-    // snapshots with current-schema name resolution too)
-    locally {
+    def low(s: String) = s.toLowerCase(java.util.Locale.ROOT)
+    val freed = FieldIds.namesSet(m.properties, FieldIds.FreedNamesProp)
+    val (tops, inner) = adds.partition(_._1.length == 1)
+    val evolved = addedSchema(m, adds)
+    // struct leaves: footer-probe the history for bytes at each path (no
+    // data pages; all-history like the rename gate — time travel reads
+    // old snapshots with current-schema name resolution too)
+    if (inner.nonEmpty) {
+      val history = catalog.snapshots(namespace, name).flatMap(_.files)
+        .filterNot(_.deleteFile.contains(true)).map(_.path).distinct
       val dd = catalog.dataDir(namespace, name).toString
       val prefix = if (dd.endsWith("/")) dd else dd + "/"
-      val foreign = catalog.snapshots(namespace, name).flatMap(_.files)
-        .filterNot(_.deleteFile.contains(true)).map(_.path).distinct
-        .filterNot(_.startsWith(prefix))
-      val holding = graft.util.Par.map(foreign)(p =>
-        FieldIds.fileContainsPath(spark, p, parts)).count(identity)
-      require(holding == 0,
-        s"cannot add '$dottedPath' to $namespace.$name: " +
-          s"$holding foreign file(s) (add_files/import) already " +
-          "hold a field at that path — their bytes would resurrect " +
-          "under the new name (nested children resolve by name); " +
-          "compact() first")
+      val foreign = history.filterNot(_.startsWith(prefix))
+      def holding(files: Seq[String], parts: Seq[String]): Int =
+        graft.util.Par.map(files)(p =>
+          FieldIds.fileContainsPath(spark, p, parts)).count(identity)
+      inner.foreach { case (parts, _, _) =>
+        val path = parts.mkString(".")
+        val n = holding(foreign, parts)
+        require(n == 0,
+          s"cannot add '$path' to $namespace.$name: " +
+            s"$n foreign file(s) (add_files/import) already " +
+            "hold a field at that path — their bytes would resurrect " +
+            "under the new name (nested children resolve by name); " +
+            "compact() first")
+        // A freed DOTTED name (an inner field dropped or renamed away)
+        // is the resurrection edge: while inner resolution is by NAME,
+        // managed files still holding bytes at the path would serve them
+        // under the re-added field. By-id tables are shielded (the
+        // re-add takes a FRESH id below; old bytes never match it) —
+        // otherwise probe EVERY history file and refuse on a hit.
+        if (freed(low(path)) && !innerIdsActive(m)) {
+          val k = holding(history, parts)
+          require(k == 0,
+            s"cannot re-add freed inner field '$path' to " +
+              s"$namespace.$name: $k file(s) still hold bytes " +
+              "at that path and inner resolution is by NAME — the dropped " +
+              "values would resurrect (time travel included); compact() " +
+              "drops the field physically, expireSnapshots() retires the " +
+              "pre-drop history, then retry")
+        }
+      }
     }
-    val freedHere = FieldIds.namesSet(
-      m.properties, FieldIds.FreedNamesProp)(lower)
-    // A freed DOTTED name (an inner field dropped or renamed away,
-    // round 13) is the resurrection edge: while inner resolution is by
-    // NAME, managed files still holding bytes at the path would serve
-    // them under the re-added field. By-id tables are shielded (the
-    // re-add takes a FRESH id below; old bytes never match it) —
-    // otherwise probe EVERY history file and refuse on a hit.
-    if (freedHere && !innerIdsActive(m)) {
-      val all = catalog.snapshots(namespace, name).flatMap(_.files)
-        .filterNot(_.deleteFile.contains(true)).map(_.path).distinct
-      val holding = graft.util.Par.map(all)(p =>
-        FieldIds.fileContainsPath(spark, p, parts)).count(identity)
-      require(holding == 0,
-        s"cannot re-add freed inner field '$dottedPath' to " +
-          s"$namespace.$name: $holding file(s) still hold bytes " +
-          "at that path and inner resolution is by NAME — the dropped " +
-          "values would resurrect (time travel included); compact() " +
-          "drops the field physically, expireSnapshots() retires the " +
-          "pre-drop history, then retry")
+    // a field taking a FREED name is a rebinding: old files' stats keyed
+    // by that name describe the previously-bound field, so every stats
+    // consumer must stop trusting them — forever (history entries cannot
+    // be rewritten). A new STRUCT's inner dot paths are future stat keys
+    // too. Poison the hit keys, the path AND its root (prune eligibility
+    // filters by root reference).
+    val poisoned = adds.flatMap { case (parts, dt, _) =>
+      val hits = (Seq(parts.last) +: FieldIds.structPathSeqs(
+          StructType(Seq(StructField(parts.last, dt)))))
+        .map(p => low((parts.init ++ p).mkString("."))).filter(freed)
+      if (hits.isEmpty) Seq.empty
+      else hits ++ Seq(low(parts.mkString(".")), low(parts.head))
+    }.distinct
+    val unsafeProps: Map[String, String] =
+      if (poisoned.isEmpty) Map.empty
+      else Map(FieldIds.StatsUnsafeProp ->
+        FieldIds.addNames(m.properties, FieldIds.StatsUnsafeProp, poisoned))
+    def encodable(c: String) = !c.contains(",") && !c.contains(":")
+    m.properties.get(FieldIds.RegistryProp).map(FieldIds.decode) match {
+      case Some(reg) if tops.forall(a => encodable(a._1.head)) =>
+        var next = lastFieldId(m, reg)
+        def allocate(keys: Seq[String]) = keys.map { k => next += 1; k -> next }
+        val topIds = allocate(tops.map(_._1.head))
+        // dotted ids, so files stamp inner ids from birth: a
+        // new STRUCT column's inner fields (same encodability rules as
+        // registryFor), then each struct leaf — a by-id table keeps the
+        // new leaf distinct from any retired binding of the same name
+        def dotless(parts: Seq[String]) = parts.forall(c =>
+          encodable(c) && !c.contains("."))
+        val structInner =
+          if (evolved.fieldNames.exists(_.contains("."))) Seq.empty
+          else FieldIds.structPathSeqs(
+            StructType(evolved.fields.drop(m.schema.length))).filter(dotless)
+        val dotted = (structInner ++ inner.map(_._1).filter(dotless))
+          .map(_.mkString(".")).distinct
+        val reg2 = reg ++ topIds ++ allocate(dotted)
+        val (intProps, hw) = interiorUpdates(m, evolved, next)
+        catalog.updateProperties(namespace, name,
+          Map(FieldIds.RegistryProp -> FieldIds.encode(reg2),
+            FieldIds.LastIdProp -> hw.toString) ++ intProps ++ unsafeProps,
+          Seq.empty)
+        catalog.updateSchema(namespace, name, stampIds(m, evolved, reg2))
+      case _ =>
+        // exotic names break the registry encoding: keep additive
+        // evolution, forfeit renameability (refused later with guidance)
+        if (unsafeProps.nonEmpty)
+          catalog.updateProperties(namespace, name, unsafeProps, Seq.empty)
+        catalog.updateSchema(namespace, name, evolved)
     }
-    if (freedHere)
-      catalog.updateProperties(namespace, name,
-        Map(FieldIds.StatsUnsafeProp -> FieldIds.addNames(m.properties,
-          FieldIds.StatsUnsafeProp,
-          Seq(lower, parts.head.toLowerCase(java.util.Locale.ROOT)))),
-        Seq.empty)
-    // fresh dotted id for the new leaf (above the high-water mark) so
-    // files stamp it from birth and a by-id table keeps the new leaf
-    // distinct from any retired binding of the same name
-    val regProp = m.properties.get(FieldIds.RegistryProp).map(FieldIds.decode)
-    val encodable = parts.forall(c =>
-      !c.contains(",") && !c.contains(":") && !c.contains("."))
-    val reg2: Option[Map[String, Int]] = regProp.collect {
-      case reg if encodable => reg + (dottedPath -> (lastFieldId(m, reg) + 1))
-    }
-    val stored = reg2 match {
-      case Some(r) if innerIdsActive(m) => FieldIds.attachAll(evolved, r)
-      case _ => evolved
-    }
-    reg2.foreach { r =>
-      val (intProps, hw) = interiorUpdates(m, evolved, r.values.max)
-      catalog.updateProperties(namespace, name,
-        Map(FieldIds.RegistryProp -> FieldIds.encode(r),
-          FieldIds.LastIdProp -> hw.toString) ++ intProps,
-        Seq.empty)
-    }
-    catalog.updateSchema(namespace, name, stored)
   }
+
+  /** `m`'s schema with `adds` applied in order — the pure half of
+    * [[addFields]], also run statically by the SQL catalog's ALTER
+    * validation: each add's default folded, its depth's name gate, and
+    * the structural patch. Throws on the first violation. */
+  private[graft] def addedSchema(m: TableMetadata,
+      adds: Seq[(Seq[String], DataType, Option[String])]): StructType = {
+    import graft.types.{ColumnDefaults, FieldIds, SchemaInfer}
+    val freed = FieldIds.namesSet(m.properties, FieldIds.FreedNamesProp)
+    adds.foldLeft(m.schema) { case (s, (parts, dt, dflt)) =>
+      val leaf = parts.last
+      val path = parts.mkString(".")
+      if (parts.length == 1)
+        // a NESTED column may not take a FREED name: Spark's nested
+        // schema pruning rebuilds the pruned read schema WITHOUT field-id
+        // metadata, so a pruned read of the new column falls back to
+        // NAME matching and would serve the previously-bound column's
+        // bytes out of old files — silent resurrection (full reads,
+        // which keep the id, return null; the two plan shapes would
+        // disagree). Flat re-adds stay legal: a flat request never loses
+        // its id metadata, so the fresh id shields old files (stats are
+        // poisoned, values never resurrect).
+        require(!isNestedType(dt) ||
+            !freed(leaf.toLowerCase(java.util.Locale.ROOT)),
+          s"$namespace.$name: adding a nested (struct/map/array) column " +
+            "under a name freed by rename/drop would resurrect old files' " +
+            "data under nested schema pruning (pruned reads match nested " +
+            "roots by NAME) — pick a fresh name")
+      else
+        require(!s.fieldNames.exists(_.equalsIgnoreCase(path)),
+          s"$namespace.$name has a top-level column literally named " +
+            s"'$path' — its stat keys and SQL name would collide with " +
+            "the new leaf's forever; pick another name")
+      // defaults fold to literals NOW (type-coerced, non-constant
+      // expressions refuse). A column keeps the write-side text under
+      // CURRENT_DEFAULT and the folded existence literal under
+      // EXISTS_DEFAULT — the key parquet's readers fill missing columns
+      // from, which makes the add metadata-only AND non-null. A struct
+      // leaf keeps ONLY the write-side key (see addStructFieldDefaulted)
+      val field = dflt match {
+        case None => StructField(leaf, dt, nullable = true)
+        case Some(d) if parts.length == 1 => ColumnDefaults.foldedField(leaf, dt, d)
+        case Some(d) =>
+          ColumnDefaults.foldedField(leaf, dt, d) // validation only
+          ColumnDefaults.withCurrentDefault(
+            StructField(leaf, dt, nullable = true), Some(d))
+      }
+      SchemaInfer.addField(s, parts, field)
+    }
+  }
+
+  /** `evolved` stamped in the table's current shape: inner-flipped
+    * tables re-attach every id, flat-flipped tables top-level only
+    * (attachAll there would flip inner resolution without the nested
+    * file gate — nulling the nested content of files written without
+    * inner ids), and id-free schemas stay bare (name-matched until a
+    * rename/drop flips them). */
+  private def stampIds(m: TableMetadata, evolved: StructType,
+      reg: Map[String, Int]): StructType =
+    if (innerIdsActive(m)) graft.types.FieldIds.attachAll(evolved, reg)
+    else if (graft.types.FieldIds.hasIds(m.schema))
+      graft.types.FieldIds.attach(evolved, reg)
+    else evolved
 
   /** LIST/MAP INTERIOR id-map updates for an evolved schema (round 14):
     * new interior paths allocate above `floor` (and above the map's own
@@ -2575,6 +2548,9 @@ final class LakehouseTable(
     * whose upstream keeps sprouting metadata columns appends every
     * batch through one call, no coordinated DDL.
     *
+    * All new top-level columns and struct leaves commit as ONE schema
+    * change (a refused add leaves none behind); widenings follow.
+    *
     * Concurrency: the diff is computed from a schema snapshot and the
     * sub-evolutions lock individually, so TWO writers merging the same
     * drift can race — the loser's add throws "already exists" even
@@ -2597,24 +2573,24 @@ final class LakehouseTable(
   private def evolveOnce(incoming: StructType): Unit = {
     import graft.types.SchemaInfer
     val cur = schema
-    val fresh = incoming.fields.filterNot(f =>
-      cur.fieldNames.exists(_.equalsIgnoreCase(f.name)))
-    if (fresh.nonEmpty)
-      addColumns(fresh.map(f => f.name -> f.dataType).toSeq)
+    val adds = Seq.newBuilder[(Seq[String], DataType, Option[String])]
+    val widens = Seq.newBuilder[(Seq[String], DataType)]
+    incoming.fields.filterNot(f =>
+        cur.fieldNames.exists(_.equalsIgnoreCase(f.name)))
+      .foreach(f => adds += ((Seq(f.name), f.dataType, None)))
     def walk(path: Seq[String], stored: DataType, in: DataType): Unit =
       (stored, in) match {
         case (s, i) if s == i => ()
         case (IntegerType, LongType) | (FloatType, DoubleType) =>
-          widenField(path, in)
+          widens += path -> in
         case (d1: DecimalType, d2: DecimalType)
             if d2.precision > d1.precision && d1.scale == d2.scale =>
-          widenField(path, in)
+          widens += path -> in
         case (s: StructType, i: StructType) =>
           i.fields.foreach { f =>
             s.fields.find(_.name.equalsIgnoreCase(f.name)) match {
               case Some(sf) => walk(path :+ sf.name, sf.dataType, f.dataType)
-              case None =>
-                addStructField((path :+ f.name).mkString("."), f.dataType)
+              case None => adds += ((path :+ f.name, f.dataType, None))
             }
           }
         case (a: ArrayType, b: ArrayType) =>
@@ -2635,6 +2611,9 @@ final class LakehouseTable(
         walk(Seq(stF.name), stF.dataType, inF.dataType)
       }
     }
+    val addList = adds.result()
+    if (addList.nonEmpty) addFields(addList)
+    widens.result().foreach { case (path, to) => widenField(path, to) }
   }
 
   /** [[append]] with [[evolveToMatch]] applied first — the one-call
@@ -2888,16 +2867,10 @@ final class LakehouseTable(
       k == oldKey || k.startsWith(oldKey + ".")).toSeq
     val reg2 = reg -- freed
     val evolved = SchemaInfer.editInnerField(m.schema, parts, _ => None)
-    // top-level drops stamp top-level ids. Inner drops preserve the
-    // EXACT stamping shape: inner-flipped tables re-attach everything,
-    // flat-flipped tables top-level only (attachAll here would flip
-    // inner resolution without the nested file gate — nulling pre-r13
-    // files' nested content), virgin schemas stay bare
+    // top-level drops stamp top-level ids; inner drops keep the
+    // table's exact stamping shape
     val stored =
-      if (top) FieldIds.attach(evolved, reg2)
-      else if (innerIdsActive(m)) FieldIds.attachAll(evolved, reg2)
-      else if (FieldIds.hasIds(m.schema)) FieldIds.attach(evolved, reg2)
-      else evolved
+      if (top) FieldIds.attach(evolved, reg2) else stampIds(m, evolved, reg2)
     // schema first, registry second — see renameField's ordering note
     catalog.updateSchema(namespace, name, stored)
     catalog.updateProperties(namespace, name,
@@ -3051,7 +3024,9 @@ final class LakehouseTable(
     * normalize to the table schema, cluster/sort per spec and
     * properties, write parquet under a unique staging dir, footer-stat
     * the outputs. Shared by [[writeCommit]] and [[mergeDelta]] (which
-    * commits data files together with a delete entry). */
+    * commits data files together with a delete entry).
+    * `withLineageCols` materializes the row-lineage columns and marks
+    * the returned entries `lineageInFile`. */
   private def stageDataFiles(dfs: Seq[DataFrame],
       withLineageCols: Boolean = false,
       carriedRowId: Boolean = false): Seq[DataFileEntry] = {
@@ -3219,7 +3194,8 @@ final class LakehouseTable(
     // every later plan, and a 100 TB table takes millions of commits
     val (kept, empty) = statted.partition(_.rowCount > 0)
     empty.foreach(f => Files.deleteIfExists(Paths.get(f.path)))
-    kept
+    if (withLineageCols) kept.map(_.copy(lineageInFile = Some(true)))
+    else kept
   }
 
   private def listParquet(dir: String): Seq[String] = FileStats.listParquet(dir)

@@ -176,38 +176,33 @@ object SchemaInfer {
     case other => other
   }
 
-  /** Schema with a nullable field appended at the END of the struct a
-    * dotted path names — the pure patch under
-    * `LakehouseTable.addStructField` (Iceberg's `ADD COLUMN
-    * parent.child`), also run statically by the SQL catalog's ALTER
-    * validation. `parts` is the full path (root first, new leaf last),
-    * each step matched case-insensitively; every step before the last
-    * must resolve to a StructType (list/map interiors refuse — their
-    * element shape is not name-evolvable), and the leaf name must be
-    * fresh at its level. Top-level field metadata (field ids) is
-    * preserved untouched. Throws IllegalArgumentException on every
-    * structural violation; mutates nothing. */
-  def addInnerField(schema: StructType, parts: Seq[String],
-      dataType: DataType): StructType =
-    addInnerFieldF(schema, parts, StructField(parts.last, dataType,
-      nullable = true))
-
-  /** [[addInnerField]] with a PREPARED leaf field (metadata included —
-    * the inner WRITE-default carrier); the field's name must equal the
-    * path's last step. */
-  def addInnerFieldF(schema: StructType, parts: Seq[String],
+  /** Schema with `field` (metadata included — the default carriers)
+    * appended at the END of the struct a path names — the pure patch
+    * under `LakehouseTable.addFields`, also run statically by the SQL
+    * catalog's ALTER validation. `parts` is the full path (root first,
+    * new leaf last, which must equal the field's name): one step
+    * appends a top-level column, longer paths match each step
+    * case-insensitively, and every step before the last must resolve
+    * to a StructType (list/map interiors refuse — their element shape
+    * is not name-evolvable). The leaf name must be fresh at its level.
+    * Existing field metadata (field ids) is preserved untouched.
+    * Throws IllegalArgumentException on every structural violation;
+    * mutates nothing. */
+  def addField(schema: StructType, parts: Seq[String],
       field: StructField): StructType = {
-    require(parts.length >= 2 && parts.forall(_.nonEmpty),
-      s"nested add needs parent.child[...], got '${parts.mkString(".")}'")
+    require(parts.nonEmpty && parts.forall(_.nonEmpty),
+      s"field add needs a non-empty path, got '${parts.mkString(".")}'")
     val leaf = parts.last
     require(field.name == leaf, s"field name '${field.name}' != path leaf '$leaf'")
     // "," and ":" would corrupt the comma-separated name-set table
-    // properties a poisoned dotted path may need to enter
-    require(!leaf.contains(",") && !leaf.contains(":"),
+    // properties a poisoned dotted path may need to enter (top-level
+    // names may hold them — such a table just forfeits its id registry)
+    require(parts.length == 1 || (!leaf.contains(",") && !leaf.contains(":")),
       s"illegal inner field name '$leaf'")
     patchStruct(schema, parts.init) { (st, done) =>
       require(!st.fieldNames.exists(_.equalsIgnoreCase(leaf)),
-        s"field '$done.$leaf' already exists")
+        if (done.isEmpty) s"column '$leaf' already exists"
+        else s"field '$done.$leaf' already exists")
       StructType(st.fields :+ field)
     }
   }
@@ -342,11 +337,4 @@ object SchemaInfer {
     }
     walk(schema, parts)
   }
-
-  /** True when `batch` can be appended to a table of schema `target`
-    * after `normalize` (same columns up to case, castable types). */
-  def compatible(batch: StructType, target: StructType): Boolean =
-    target.fields.forall { f =>
-      batch.fields.exists(_.name.equalsIgnoreCase(f.name)) || f.nullable
-    }
 }

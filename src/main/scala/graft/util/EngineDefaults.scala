@@ -3,7 +3,7 @@ package graft.util
 import org.apache.spark.sql.SparkSession
 
 /** Session-builder engine defaults shared by every graft entry point
-  * (Bench / Verify / PlanDump / Profile / Lab / tests). Each entry is an
+  * (Bench / Verify / PlanDump / Profile / tests). Each entry is an
   * ENGINE-LEVEL setting that applies to every query identically — never
   * a per-query tune.
   */

@@ -494,7 +494,7 @@ class FieldEvolutionSpec extends SparkSpec {
 
   test("addStructField: foreign-file probe and freed-flat-name stats poisoning") {
     import org.apache.spark.sql.functions.{struct => sstruct}
-    import org.apache.spark.sql.types.IntegerType
+    import org.apache.spark.sql.types.{IntegerType, StructType}
     val wh = Files.createTempDirectory("graft-fidprobe").toString
     val cat = new Snaplog(wh)
     // a FOREIGN parquet already holding bytes at props.score — written
@@ -513,6 +513,17 @@ class FieldEvolutionSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException](
       tbl.addStructField("props.score", IntegerType))
     assert(e.getMessage.contains("foreign") && e.getMessage.contains("resurrect"))
+    // a mixed-depth auto-merge (new top-level column + props.score) is
+    // ONE schema change: the refused leaf must not leave the new
+    // top-level column committed behind it
+    val mixed = StructType(declared.schema.fields.map(f =>
+      if (f.name != "props") f
+      else f.copy(dataType = f.dataType.asInstanceOf[StructType]
+        .add("score", IntegerType)))).add("lang", "string")
+    val em = intercept[IllegalArgumentException](tbl.evolveToMatch(mixed))
+    assert(em.getMessage.contains("foreign"), em.getMessage)
+    assert(!cat.loadTable("ns", "probe").schema.fieldNames.contains("lang"),
+      "a refused mixed-depth add must commit nothing")
     // compact() rewrites the foreign bytes through the DECLARED schema
     // (the dropped field's values are physically gone) and expiry
     // retires the foreign history — same recipe as the rename gate;
