@@ -605,8 +605,7 @@ private[sql] final class GraftRowLevelOperation(
         val vecs = deleteFiles.filter(graft.table.EqDeletes.isPos)
         vecTouchedMemo =
           if (vecs.isEmpty) Set.empty
-          else SparkSession.active.read
-            .parquet(vecs.map(_.path): _*)
+          else graft.table.LogScan.readVectors(SparkSession.active, vecs)
             .select("file_path").coalesce(1).distinct().collect()
             .map(r => normalizePath(r.getString(0))).toSet
       }
@@ -627,7 +626,8 @@ private[sql] final class GraftRowLevelOperation(
   private var morCache: Map[Seq[String], Seq[String]] = Map.empty
   private var morTemp: List[java.nio.file.Path] = Nil
 
-  private def materializedSurvivors(paths: Seq[String]): Seq[String] = synchronized {
+  private def materializedSurvivors(affected: Seq[DataFileEntry]): Seq[String] = synchronized {
+    val paths = affected.map(_.path)
     morCache.get(paths) match {
       case Some(staged) => staged
       case None =>
@@ -640,7 +640,7 @@ private[sql] final class GraftRowLevelOperation(
           val hasEq = deleteFiles.exists(graft.table.EqDeletes.isEq)
           val base =
             if (!hasEq)
-              spark.read.schema(tableSchema).parquet(paths: _*)
+              graft.table.LogScan.read(spark, tableSchema, affected)
                 .select(col("*"),
                   col("_metadata.file_path").as("__scan_file"),
                   col("_metadata.row_index").as("__scan_pos"))
@@ -655,7 +655,7 @@ private[sql] final class GraftRowLevelOperation(
           val subtracted =
             if (posVecs.isEmpty) base.drop("__scan_file", "__scan_pos")
             else {
-              val dv = broadcast(spark.read.parquet(posVecs.map(_.path): _*)
+              val dv = broadcast(graft.table.LogScan.readVectors(spark, posVecs)
                 .select(col("file_path").as("__dv_file"),
                   col("row_index").as("__dv_pos"))
                 .distinct())
@@ -776,9 +776,9 @@ private[sql] final class GraftRowLevelOperation(
       RuntimePrune.allows(f, p, partitionCols)
 
     override def toBatch: org.apache.spark.sql.connector.read.Batch = {
-      val affected = runtimeKept.getOrElse(affectedFiles(branchFilters)).map(_.path)
+      val affected = runtimeKept.getOrElse(affectedFiles(branchFilters))
       val paths =
-        if (deleteFiles.isEmpty) affected
+        if (deleteFiles.isEmpty) affected.map(_.path)
         else materializedSurvivors(affected)
       ParquetTable(tableName, SparkSession.active, options,
         paths, Some(tableSchema), classOf[ParquetFileFormat])
@@ -905,7 +905,7 @@ private[sql] final class MorRelation(
     tableSchema: StructType,
     requiredSchema: StructType,
     segs: Seq[(Seq[DataFileEntry], Seq[DataFileEntry])],
-    posDeletePaths: Seq[String],
+    posDeletes: Seq[DataFileEntry],
     dataSizeBytes: Long,
     residual: Seq[org.apache.spark.sql.catalyst.expressions.Expression] = Seq.empty)
     extends BaseRelation with TableScan {
@@ -922,7 +922,7 @@ private[sql] final class MorRelation(
     if (segs.isEmpty)
       return spark.sparkContext.emptyRDD[Row]
     val raw = graft.table.EqDeletes.readSubtracted(spark, tableSchema, segs,
-      withMeta = posDeletePaths.nonEmpty)
+      withMeta = posDeletes.nonEmpty)
     // filtering commutes with both delete subtractions (row-wise
     // predicate vs row removal), and Catalyst pushes it through the
     // anti-joins down to the parquet scans — MOR reads keep row-group
@@ -930,9 +930,9 @@ private[sql] final class MorRelation(
     val data = residual.foldLeft(raw)((d, e) =>
       d.filter(org.apache.spark.sql.GraftStreamingShim.asColumn(e)))
     val subtracted =
-      if (posDeletePaths.isEmpty) data
+      if (posDeletes.isEmpty) data
       else {
-        val dv = broadcast(spark.read.parquet(posDeletePaths: _*)
+        val dv = broadcast(graft.table.LogScan.readVectors(spark, posDeletes)
           .select(col("file_path").as("__dv_file"), col("row_index").as("__dv_pos"))
           .distinct())
         data.join(dv,
@@ -1269,14 +1269,15 @@ private[sql] final class GraftScanBuilder(
     case None if deleteFiles.nonEmpty &&
         keptFiles.exists(f => touchedByDeletes(f.path)) =>
       // Merge-on-read: metadata file pruning still applies, then a V1
-      // relation subtracts the delete files — equality deletes by
-      // keyed anti-join per replay segment, position vectors by the
+      // relation subtracts the delete files — equality deletes by one
+      // broadcast join per key set over one log read of the data
+      // (EqDeletes.readSubtracted), position vectors by the
       // (file, position) anti-join (see MorRelation).
       val kept = keptFiles
       val keptPaths = kept.map(_.path).toSet
       val requiredSchema = required
       val ts = tableSchema
-      val posPaths = deleteFiles.filter(graft.table.EqDeletes.isPos).map(_.path)
+      val posVecs = deleteFiles.filter(graft.table.EqDeletes.isPos)
       // position-only delete sets are order-independent, so a flat
       // data++deletes sequence is safe; an EQUALITY delete without its
       // replay order would wrongly subtract keys from data appended
@@ -1310,7 +1311,7 @@ private[sql] final class GraftScanBuilder(
             override def readSchema(): StructType = requiredSchema
             override def toV1TableScan[T <: BaseRelation with TableScan](
                 context: SQLContext): T =
-              new MorRelation(context, ts, requiredSchema, segs, posPaths,
+              new MorRelation(context, ts, requiredSchema, segs, posVecs,
                 dataSize, residual).asInstanceOf[T]
             override def toMicroBatchStream(checkpointLocation: String)
                 : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
@@ -1323,7 +1324,7 @@ private[sql] final class GraftScanBuilder(
             override def readSchema(): StructType = requiredSchema
             override def toV1TableScan[T <: BaseRelation with TableScan](
                 context: SQLContext): T =
-              new MorRelation(context, ts, requiredSchema, segs, posPaths,
+              new MorRelation(context, ts, requiredSchema, segs, posVecs,
                 dataSize, residual).asInstanceOf[T]
             override def description(): String =
               s"GraftMorScan[${kept.size} files, ${deleteFiles.size} delete files]"

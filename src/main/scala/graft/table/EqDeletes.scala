@@ -18,13 +18,17 @@ import graft.catalog.DataFileEntry
   * leaves the new row visible (keyed-CDC semantics; Iceberg v2
   * sequence-number rules, expressed here by log position; Iceberg's
   * own equality deletes are field-LIST-valued for the same composite
-  * CDC keys). The subtraction is a broadcast anti-join per (segment,
-  * delete) on all key columns: delete files are predicate-sized, so
-  * the broadcast is bounded and the data side never shuffles.
+  * CDC keys). Replay order becomes per-file positions that the log
+  * read ([[LogScan]]) stamps on every row, so the subtraction is one
+  * data scan plus one broadcast join per key-column set against a
+  * `key → max delete position` map ([[readSubtracted]]): delete files
+  * are predicate-sized, so the broadcast is bounded, the data side
+  * never shuffles, and the plan does not grow with the number of
+  * outstanding deletes.
   *
   * Null keys: an equality delete never removes null-keyed rows (the
-  * anti-join's `=` is null-rejecting on both sides, per column),
-  * matching SQL `(k1, k2) IN (…)` semantics. */
+  * join's `=` is null-rejecting on both sides, per column), matching
+  * SQL `(k1, k2) IN (…)` semantics. */
 object EqDeletes {
 
   def isEq(f: DataFileEntry): Boolean =
@@ -71,13 +75,14 @@ object EqDeletes {
     val deletes = ordered.filter(_.deleteFile.contains(true))
     if (deletes.isEmpty) return Set.empty
     val posTouched: Set[String] = {
-      val vecs = deletes.filter(isPos).map(_.path).sorted
+      val vecs = deletes.filter(isPos).sortBy(_.path)
+      val key = vecs.map(_.path)
       if (vecs.isEmpty) Set.empty
-      else vecPathCache.synchronized(Option(vecPathCache.get(vecs))).getOrElse {
-        val read = spark.read.parquet(vecs: _*)
+      else vecPathCache.synchronized(Option(vecPathCache.get(key))).getOrElse {
+        val read = LogScan.readVectors(spark, vecs)
           .select("file_path").coalesce(1).distinct().collect()
           .map(r => FileStats.normalizePath(r.getString(0))).toSet
-        vecPathCache.synchronized(vecPathCache.put(vecs, read))
+        vecPathCache.synchronized(vecPathCache.put(key, read))
         read
       }
     }
@@ -160,42 +165,33 @@ object EqDeletes {
     out.toList
   }
 
-  /** The data side of a scan with equality deletes applied. `withMeta`
-    * additionally carries `_metadata.file_path` / `_metadata.row_index`
-    * (as `__scan_file` / `__scan_pos`) through the union for a
-    * downstream position-vector subtraction — metadata columns must be
-    * selected inside each read.
+  /** The data side of a scan with equality deletes applied, as ONE log
+    * read ([[LogScan]]) of every data file. `withMeta` additionally
+    * carries `_metadata.file_path` / `_metadata.row_index` (as
+    * `__scan_file` / `__scan_pos`) for a downstream position-vector
+    * subtraction.
     *
-    * Subtraction shape (round 17, guide §2.4/§3): ONE broadcast join
-    * per distinct KEY-COLUMN SET, not one anti-join per delete FILE.
     * The replay-order rule ("a delete applies to data files preceding
-    * it") is Iceberg's sequence-number semantics, so it folds: stamp
-    * each segment with its replay position, build a broadcast map
-    * `key tuple → max delete position` from all of that key set's
-    * delete files, and keep a row iff its key is absent or its max
-    * delete position is STRICTLY LESS than the segment position (a
-    * delete at position == the segment position applies to that
-    * segment). The former shape
-    * planned one BroadcastHashJoin LeftAnti per (segment, applicable
-    * delete) — O(outstanding²/2) joins and O(outstanding) broadcasts
-    * for a long-running CDC sink; this plans O(distinct key sets)
-    * joins and broadcasts at ANY outstanding-delete depth, the same
-    * predicate-sized build and an unshuffled data side. Segments past
-    * the last delete skip the join entirely. Null keys never match the
-    * equality condition, so null-keyed rows survive exactly as under
-    * the anti-join. */
+    * it") is Iceberg's sequence-number semantics, so it folds into
+    * positions: each data file carries its segment's replay position
+    * (the count of deletes before it) in `_metadata.graft_seq`, each
+    * delete file its own index in the replay order the same way. Per
+    * distinct KEY-COLUMN SET, one scan of that set's delete files
+    * builds a broadcast map `key tuple → max delete position`, and a
+    * row survives iff its key is absent or its max delete position is
+    * STRICTLY LESS than its file's position (a delete at position ==
+    * the segment position applies to that segment). So a MOR read plans
+    * one data scan plus one delete scan and one broadcast join per key
+    * set at ANY outstanding-delete depth, and its plan text does not
+    * change from commit to commit. Key-file schemas come from each file's own
+    * footer (never inferred by a job); files of one key set whose key
+    * types differ read as separate scans. Null keys never match the
+    * equality condition, so null-keyed rows survive, as under an
+    * anti-join. */
   def readSubtracted(spark: SparkSession, readSchema: StructType,
       segs: Seq[(Seq[DataFileEntry], Seq[DataFileEntry])],
       withMeta: Boolean,
       readerOptions: Map[String, String] = Map.empty): DataFrame = {
-    def baseRead(data: Seq[DataFileEntry]): DataFrame = {
-      val b = spark.read.schema(readSchema).options(readerOptions)
-        .parquet(data.map(_.path): _*)
-      if (!withMeta) b
-      else b.select(col("*"),
-        col("_metadata.file_path").as("__scan_file"),
-        col("_metadata.row_index").as("__scan_pos"))
-    }
     // suffixes are nested along replay order (the earliest segment sees
     // every later delete), so the first segment's suffix IS the ordered
     // list of all applying deletes; a delete's index in it is its
@@ -210,40 +206,48 @@ object EqDeletes {
         allDels.drop(allDels.length - sfx.length).map(_.path) == sfx.map(_.path)
     }, "readSubtracted requires replay-ordered segments with nested " +
       "delete suffixes (build them with EqDeletes.segments)")
-    if (allDels.isEmpty) return segs.map(s => baseRead(s._1)).reduce(_.unionByName(_))
-    val (joined, passThrough) = segs.partition(_._2.nonEmpty)
-    val stamped = joined.map { case (data, suffix) =>
-      baseRead(data).withColumn("__eqd_seg", lit(allDels.length - suffix.length))
-    }.reduce(_.unionByName(_))
+    val data = LogScan.readSeq(spark, readSchema,
+      segs.flatMap { case (files, sfx) =>
+        files.map(_ -> (allDels.length - sfx.length).toLong) },
+      readerOptions)
+    val meta = Seq(
+      if (withMeta) Seq(col("_metadata.file_path").as("__scan_file"),
+        col("_metadata.row_index").as("__scan_pos")) else Nil,
+      if (allDels.nonEmpty) Seq(col(LogScan.SeqCol).as("__eqd_seg")) else Nil).flatten
+    val base = if (meta.isEmpty) data else data.select(col("*") +: meta: _*)
+    if (allDels.isEmpty) return base
     val byKeySet = allDels.zipWithIndex.groupBy { case (d, _) => keyCols(d) }
-    val subtracted = byKeySet.toSeq.sortBy(_._1.mkString(","))
-      .zipWithIndex.foldLeft(stamped) {
-        case (df, ((cols, dels), si)) =>
-          val keyed = dels.map { case (del, pos) =>
-            spark.read.parquet(del.path).select(
-              cols.zipWithIndex.map { case (c, i) =>
-                col(c).as(s"__eqk_${si}_$i") } :+
-                lit(pos).as("__eqd_pos"): _*)
+    byKeySet.toSeq.sortBy(_._1.mkString(",")).zipWithIndex
+      .foldLeft(base) { case (df, ((cols, dels), si)) =>
+        // one scan per footer key schema (normally one per key set)
+        val keyed = dels
+          .groupMap { case (d, _) => LogScan.keyFields(spark, d, cols) } {
+            case (d, pos) => d -> pos.toLong }
+          .toSeq.sortBy(_._2.head._2)
+          .map { case (fields, files) =>
+            LogScan.readSeq(spark, StructType(fields), files)
+              .select(fields.zipWithIndex.map { case (f, i) =>
+                col(f.name).as(s"__eqk_${si}_$i") } :+
+                col(LogScan.SeqCol).as("__eqd_pos"): _*)
           }.reduce(_.unionByName(_))
-          // coalesce(1) before the dedup (round 18): SinglePartition
-          // satisfies the aggregation's clustering, so the broadcast
-          // build plans NO Exchange — a single-task max-per-key over a
-          // relation bounded by the same invariant that makes it
-          // broadcastable at all (delete files are predicate-sized)
-          val delMap = broadcast(
-            keyed.coalesce(1)
-              .groupBy(cols.indices.map(i => col(s"__eqk_${si}_$i")): _*)
-              .agg(max(col("__eqd_pos")).as(s"__eqd_max_$si")))
-          df.join(delMap,
-              cols.zipWithIndex.map { case (c, i) =>
-                df(c) === col(s"__eqk_${si}_$i") }.reduce(_ && _),
-              "left_outer")
-            .filter(col(s"__eqd_max_$si").isNull ||
-              col(s"__eqd_max_$si") < col("__eqd_seg"))
-            .drop((s"__eqd_max_$si" +:
-              cols.indices.map(i => s"__eqk_${si}_$i")): _*)
+        // coalesce(1) before the dedup: SinglePartition satisfies the
+        // aggregation's clustering, so the broadcast build plans NO
+        // Exchange — a single-task max-per-key over a relation bounded
+        // by the same invariant that makes it broadcastable at all
+        // (delete files are predicate-sized)
+        val delMap = broadcast(
+          keyed.coalesce(1)
+            .groupBy(cols.indices.map(i => col(s"__eqk_${si}_$i")): _*)
+            .agg(max(col("__eqd_pos")).as(s"__eqd_max_$si")))
+        df.join(delMap,
+            cols.zipWithIndex.map { case (c, i) =>
+              df(c) === col(s"__eqk_${si}_$i") }.reduce(_ && _),
+            "left_outer")
+          .filter(col(s"__eqd_max_$si").isNull ||
+            col(s"__eqd_max_$si") < col("__eqd_seg"))
+          .drop((s"__eqd_max_$si" +:
+            cols.indices.map(i => s"__eqk_${si}_$i")): _*)
       }
       .drop("__eqd_seg")
-    (subtracted +: passThrough.map(s => baseRead(s._1))).reduce(_.unionByName(_))
   }
 }

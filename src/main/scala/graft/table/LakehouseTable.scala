@@ -269,22 +269,12 @@ final class LakehouseTable(
     * scans then keep FULL nested pruning (round 16): the reader option
     * below carries the id map to the physical plan and the rule
     * re-stamps the pruned schema. The rule rewrites
-    * `FileSourceScanExec` — the V1 file scan — so the fast path ALSO
-    * requires parquet to resolve to the V1 source (round 17, ADVICE):
-    * in a session whose `spark.sql.sources.useV1SourceList` excludes
-    * parquet the scan materializes as a DSv2 `BatchScanExec` the rule
-    * never touches, and trusting injection alone would skip the
-    * pruning-disabled clone while the pruned schema silently loses its
-    * interior ids — the exact nulled-rename corruption this machinery
-    * exists to prevent. Such sessions take the [[readSession]]
-    * full-subtree fallback, which is schema-level and plan-shape-
-    * independent. */
+    * `FileSourceScanExec`, the V1 file scan, which every scan here
+    * plans: they are log reads ([[LogScan]]), a V1 relation whatever
+    * `spark.sql.sources.useV1SourceList` says. */
   private def interiorRestoreInjected: Boolean =
     spark.sessionState.columnarRules
-      .exists(_.isInstanceOf[graft.sql.InteriorIdRestoreRule]) &&
-    (try spark.conf.get("spark.sql.sources.useV1SourceList")
-      .split(",").exists(_.trim.equalsIgnoreCase("parquet"))
-    catch { case _: Throwable => false })
+      .exists(_.isInstanceOf[graft.sql.InteriorIdRestoreRule])
 
   /** Reader options every scan-path parquet read attaches: the
     * interior-id map for [[graft.sql.InteriorIdRestoreRule]] when the
@@ -324,17 +314,21 @@ final class LakehouseTable(
       interiorClone
     }
 
-  /** THE scan-path parquet read: explicit file list, the table's read
-    * schema, the interior-restore options, on [[readSession]]. */
-  private def readParquet(paths: Seq[String]): DataFrame =
-    readSession.read.schema(readSchema).options(readOptions)
-      .parquet(paths: _*)
+  /** THE scan-path parquet read: a log read ([[LogScan]]) of exactly
+    * `files` under the table's read schema and interior-restore
+    * options, on [[readSession]]. */
+  private def readParquet(files: Seq[DataFileEntry]): DataFrame =
+    LogScan.read(readSession, readSchema, files, readOptions)
 
-  /** Assemble a scan from replay-ordered entries: per-segment equality-
-    * delete anti-joins (see [[EqDeletes]]), then the global position-
-    * vector subtraction. Both delete kinds are metadata-sized relative
-    * to the data, so the joins add no shuffle of the data side; a reset
-    * commit (compaction/overwrite) retires them entirely. */
+  /** Assemble a scan from replay-ordered entries: ONE log read of the
+    * kept data files with equality deletes subtracted by one broadcast
+    * join per key-column set ([[EqDeletes.readSubtracted]]), then the
+    * position-vector subtraction, a broadcast anti-join against one
+    * read of every vector. Both delete kinds are metadata-sized
+    * relative to the data, so the joins add no shuffle of the data
+    * side, and the number of scans does not grow with the number of
+    * outstanding deletes; a reset commit (compaction/overwrite) retires
+    * them entirely. */
   private def assembleOrdered(ordered: Seq[DataFileEntry],
       keep: DataFileEntry => Boolean): DataFrame =
     assembleOrderedMeta(ordered, keep, retainMeta = false)
@@ -360,7 +354,7 @@ final class LakehouseTable(
       // coalesce(1) before the dedup (round 18): no Exchange in the
       // broadcast build — vectors are predicate-sized by contract
       val dv = broadcast(
-        rs.read.parquet(posDeletes.map(_.path): _*)
+        LogScan.readVectors(rs, posDeletes)
           .select(col("file_path").as("__dv_file"), col("row_index").as("__dv_pos"))
           .coalesce(1).distinct())
       val sub = data
@@ -707,7 +701,7 @@ final class LakehouseTable(
     //    survive the subtraction untouched — positions never renumber).
     def readEntries(entries: Seq[DataFileEntry]): DataFrame =
       if (lineage) lineageFrame(entries, _ => true)
-      else readParquet(entries.map(_.path))
+      else readParquet(entries)
     def visiblePrefix(entries: Seq[DataFileEntry],
         keep: DataFileEntry => Boolean, retainMeta: Boolean): DataFrame =
       if (lineage) lineageFrame(entries, keep, retainMeta)
@@ -761,13 +755,13 @@ final class LakehouseTable(
         "__cl_path", "__cl_snap", "__cl_ts", "__cl_first", "__cl_seq2"))
       val base =
         if (!lineage)
-          readParquet(entries.map(_._1.path))
+          readParquet(entries.map(_._1))
             .select(col("*"), regexp_replace(col("_metadata.file_path"),
               LakehouseTable.PathSchemeRe, "/").as("__cl_path"))
         else {
           spark.conf.set(graft.types.FieldIds.ReadIgnoreMissingConf, "true")
-          readSession.read.schema(lineageReadSchema).options(readOptions)
-            .parquet(entries.map(_._1.path): _*)
+          LogScan.read(readSession, lineageReadSchema, entries.map(_._1),
+              readOptions)
             .select(col("*"), regexp_replace(col("_metadata.file_path"),
               LakehouseTable.PathSchemeRe, "/").as("__cl_path"),
               col("_metadata.row_index").as("__cl_pos"))
@@ -829,12 +823,13 @@ final class LakehouseTable(
               val cur = prefix // ONE buffer snapshot per entry
               if (hasData(cur)) {
                 val cols = EqDeletes.keyCols(entry)
+                val fields = LogScan.keyFields(spark, entry, cols)
                 // coalesce(1): no Exchange in the predicate-sized
                 // broadcast build (round 18)
                 val keys = broadcast(
-                  spark.read.parquet(entry.path)
-                    .select(cols.zipWithIndex.map { case (c, i) =>
-                      col(c).as(s"__eqdel_$i") }: _*).coalesce(1).distinct())
+                  LogScan.read(spark, StructType(fields), Seq(entry))
+                    .select(fields.zipWithIndex.map { case (f, i) =>
+                      col(f.name).as(s"__eqdel_$i") }: _*).coalesce(1).distinct())
                 val vis = visiblePrefix(cur, _ => true, retainMeta = false)
                 val matched = vis.join(keys,
                   cols.zipWithIndex.map { case (c, i) =>
@@ -852,7 +847,7 @@ final class LakehouseTable(
             // coalesce(1): no Exchange in the predicate-sized
             // broadcast build (round 18)
             val dv = broadcast(
-              spark.read.parquet(vectors.map(_.path): _*)
+              LogScan.readVectors(spark, vectors)
                 .select(col("file_path").as("__dv_file"),
                   col("row_index").as("__dv_pos"))
                 .coalesce(1).distinct())
@@ -1331,7 +1326,7 @@ final class LakehouseTable(
           "materialized-mor" -> "true"),
         expectedSnapshotId = Some(base))
     }
-    val matched = readParquet(live.map(_.path))
+    val matched = readParquet(live)
       .filter(condition)
       .groupBy(input_file_name().as("f")).count()
       .collect().map(r => normalizePath(r.getString(0)) -> r.getLong(1)).toMap
@@ -1450,7 +1445,9 @@ final class LakehouseTable(
     // one filter job rather than trusting absence
     val nullKeys = names.map(n => delFiles.map(f =>
       f.nullCounts.flatMap(_.get(n)).getOrElse {
-        spark.read.parquet(f.path).filter(col(n).isNull).count()
+        val key = LogScan.keyFields(spark, f, Seq(n))
+        LogScan.read(spark, StructType(key), Seq(f))
+          .filter(col(key.head.name).isNull).count()
       }).sum).sum
     if (nullKeys > 0) {
       graft.util.Fs.deleteTree(delDir)
@@ -1474,8 +1471,9 @@ final class LakehouseTable(
     * untouched) — at 100 TB each micro-batch trigger costs its own
     * delta, not a table pass, which is the difference between a
     * streaming MERGE sink that works and one that rewrites the table
-    * per trigger. Scans pay one broadcast anti-join per outstanding
-    * key file ([[EqDeletes]]); [[compact]]/[[rewriteDataFiles]]
+    * per trigger. Scans pay one key-file scan and one broadcast join
+    * per key-column set, at any number of outstanding key files
+    * ([[EqDeletes]]); [[compact]]/[[rewriteDataFiles]]
     * materializes and retires them on the usual maintenance cadence.
     *
     * `rows` must be batch-deduplicated to one row per key tuple
@@ -1591,7 +1589,8 @@ final class LakehouseTable(
     // (stageEqDelete dedups and null-rejects before writing) — read it
     // back instead of re-deriving from the batch (round 18): one tiny
     // file read replaces a batch scan + distinct shuffle per merge
-    val keys = spark.read.parquet(delFiles.map(_.path): _*)
+    val keys = LogScan.read(spark,
+        StructType(LogScan.keyFields(spark, delFiles.head, names)), delFiles)
       .toDF(names: _*).coalesce(1)
     val carried = pre.join(broadcast(keys), names.toSeq, "left_semi")
       .groupBy(names.map(col): _*)

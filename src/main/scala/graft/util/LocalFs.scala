@@ -35,8 +35,11 @@ import org.apache.hadoop.fs.permission.FsPermission
   * the same way the bench does.
   */
 final class GraftRawLocalFileSystem extends RawLocalFileSystem {
+  /** The nio path carries only the nine rwx bits; a mode with any bit
+    * above 0777 (sticky) takes hadoop's own path so it is not dropped. */
   override def setPermission(p: Path, permission: FsPermission): Unit =
-    GraftRawLocalFileSystem.chmod(pathToFile(p).toPath, permission)
+    if ((permission.toShort & ~0x1ff) != 0) super.setPermission(p, permission)
+    else GraftRawLocalFileSystem.chmod(pathToFile(p).toPath, permission)
 }
 
 object GraftRawLocalFileSystem {

@@ -23,6 +23,11 @@ object GraftStreamingShim {
   def asColumn(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
     classic.ExpressionUtils.column(e)
 
+  /** `s` with every field nullable, nested ones too — the
+    * `private[spark]` `asNullable` a file-source read applies to a
+    * caller's schema. */
+  def nullable(s: types.StructType): types.StructType = s.asNullable
+
   /** A clone of `spark` (shared SparkContext + shared state, copied
     * session state: conf, temp views, UDFs, extensions) with `confs`
     * overlaid — `private[sql] cloneSession()`, the same mechanism

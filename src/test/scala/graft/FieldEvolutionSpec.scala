@@ -944,6 +944,23 @@ class FieldEvolutionSpec extends SparkSpec {
       .orderBy("id").collect()
     assert(prunedMap.map(_.getInt(1)).toSeq == Seq(10, 20),
       s"pruned map read must serve by id: ${prunedMap.toSeq}")
+    // a session that sends parquet to DSv2 still plans the table-API
+    // scan as the V1 file scan the restore rule rewrites (a log read)
+    val v1List = spark.conf.get("spark.sql.sources.useV1SourceList")
+    spark.conf.set("spark.sql.sources.useV1SourceList", "")
+    try {
+      assert(tbl.scan().select(col("id"), col("arr.aa")).orderBy("id").collect()
+        .map(_.getSeq[Int](1)).toSeq == Seq(Seq(5, 6), Seq(8)))
+      val df = tbl.scan().select(col("arr.aa"))
+      df.collect()
+      val scan = df.queryExecution.executedPlan.collectFirst {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+      }.getOrElse(fail("no FileSourceScanExec without parquet in the V1 list"))
+      val elem = scan.requiredSchema("arr").dataType
+        .asInstanceOf[org.apache.spark.sql.types.ArrayType]
+        .elementType.asInstanceOf[org.apache.spark.sql.types.StructType]
+      assert(elem.fieldNames.toSeq == Seq("aa"), s"must stay nested-pruned, got $elem")
+    } finally spark.conf.set("spark.sql.sources.useV1SourceList", v1List)
     // a NEW era lands under the renamed schema; both eras answer
     val schema1 = StructType(Seq(
       StructField("id", IntegerType, nullable = false),

@@ -31,6 +31,24 @@ class LocalFsSpec extends AnyFunSuite {
     } finally Files.deleteIfExists(f)
   }
 
+  test("setPermission keeps the sticky bit (bits above 0777 are not dropped)") {
+    val fs = new GraftRawLocalFileSystem
+    fs.initialize(java.net.URI.create("file:///"),
+      new org.apache.hadoop.conf.Configuration())
+    val d = Files.createTempDirectory("graft-localfs-sticky")
+    def mode: Int =
+      Files.getAttribute(d, "unix:mode").asInstanceOf[Integer].intValue & 0xfff
+    try {
+      fs.setPermission(new Path(d.toString),
+        new FsPermission(Integer.parseInt("1755", 8).toShort))
+      assert(mode == Integer.parseInt("1755", 8), f"mode $mode%o")
+      // and back to a plain mode through the nio path
+      fs.setPermission(new Path(d.toString),
+        new FsPermission(Integer.parseInt("750", 8).toShort))
+      assert(mode == Integer.parseInt("750", 8), f"mode $mode%o")
+    } finally Files.deleteIfExists(d)
+  }
+
   test("the shared test session resolves file:// to the fork-free FS") {
     val spark = SparkSpec.spark
     val fs = new Path("/tmp").getFileSystem(
