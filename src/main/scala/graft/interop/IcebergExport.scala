@@ -806,12 +806,12 @@ object IcebergExport {
         // coalesce(1), not repartition(1) (round 18): the single-file
         // spec-shape rewrite of a predicate-sized vector needs no
         // exchange — one task reads, sorts and writes
-        graft.types.FieldIds.managedWrite(
-          raw.join(mapping, Seq("file_path"))
-            .select(col("__plain").as("file_path", md(2147483546L)),
-              col("row_index").cast("long").as("pos", md(2147483545L)))
-            .coalesce(1).sortWithinPartitions("file_path", "pos"))
-          .write.mode("overwrite").parquet(outDir.toString)
+        raw.join(mapping, Seq("file_path"))
+          .select(col("__plain").as("file_path", md(2147483546L)),
+            col("row_index").cast("long").as("pos", md(2147483545L)))
+          .coalesce(1).sortWithinPartitions("file_path", "pos")
+          .write.format(graft.table.ManagedParquetFormat.Name)
+          .mode("overwrite").save(outDir.toString)
         val p2 = graft.table.FileStats.listParquet(outDir.toString).head
         val st = graft.table.FileStats.stat(spark, p2, Map.empty)
         (p2, st.rowCount, st.sizeBytes)
@@ -1123,8 +1123,8 @@ object IcebergExport {
           spark.sparkContext.parallelize(rows, 1),
           graft.types.FieldIds.attachAll(statsSchema, idReg))
         val tmp = Files.createTempDirectory("graft-pstats")
-        graft.types.FieldIds.managedWrite(df.coalesce(1))
-          .write.mode("overwrite").parquet(tmp.toString)
+        df.coalesce(1).write.format(graft.table.ManagedParquetFormat.Name)
+          .mode("overwrite").save(tmp.toString)
         val part = graft.util.Fs.walkList(tmp)
           .find(_.getFileName.toString.endsWith(".parquet"))
           .getOrElse(throw new IllegalStateException(

@@ -19,7 +19,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.catalog.{Catalog, DataFileEntry, JdbcCatalog, Snaplog}
-import graft.table.{FileStats, LakehouseTable}
+import graft.table.{FileStats, LakehouseTable, ManagedParquetFormat}
 
 /** Snaplog-backed DSv2 table. Scanning delegates to Spark's vectorized
   * parquet DSv2, but the FILE LIST is pruned first from log metadata —
@@ -294,23 +294,9 @@ private[sql] final class GraftAppendWrite(
     val writeSchema = backing.loadTable(ns, tbl).properties
       .get(FieldIds.RegistryProp).map(FieldIds.decode)
       .map(FieldIds.attach(tableSchema, _)).getOrElse(tableSchema)
-    val winfo: LogicalWriteInfo =
-      if (writeSchema eq tableSchema) info
-      else new LogicalWriteInfo {
-        override def queryId(): String = info.queryId()
-        override def schema(): StructType = writeSchema
-        override def options(): CaseInsensitiveStringMap = info.options()
-        override def rowIdSchema(): java.util.Optional[StructType] = info.rowIdSchema()
-        override def metadataSchema(): java.util.Optional[StructType] = info.metadataSchema()
-      }
-    // field-id stamping + INT64-micros timestamps, scoped to the
-    // delegate's job-description capture via a cloned session — a
-    // foreign same-session write never inherits them, no lock needed
-    val delegate = FieldIds.withManagedWriteDelegate(spark) { mws =>
-      ParquetTable(tableName, mws, info.options(),
-        Seq(stage.toString), Some(writeSchema), classOf[ParquetFileFormat])
-        .newWriteBuilder(winfo).build().toBatch
-    }
+    // field-id stamping + INT64-micros timestamps, scoped to this write
+    // job's conf — a foreign same-session write never inherits them
+    val delegate = ManagedParquetFormat.batchWrite(stage, writeSchema, info)
     new GraftBatchWrite(delegate, backing, ns, tbl, stage, expected, spark,
       if (replaceAll) Snaplog.OpOverwrite else Snaplog.OpAppend,
       Map("engine" -> (if (replaceAll) "sql-insert-overwrite" else "sql-insert")))
@@ -426,12 +412,11 @@ private[sql] final class GraftBatchWrite(
       df.repartition(relayoutTasks, layoutExprs: _*))(
       (d, pe) => d.withColumn(FileStats.layoutCol(pe._1.fieldName), pe._2))
     // the relayout is a managed write like any other — field ids +
-    // micros timestamps in force for ITS job too, via the same
-    // cloned-session scoping
-    graft.types.FieldIds.managedWrite(withLayout)
-      .write.mode("overwrite").option("compression", codec)
+    // micros timestamps in force for ITS job too
+    withLayout.write.format(ManagedParquetFormat.Name)
+      .mode("overwrite").option("compression", codec)
       .partitionBy(partFields.map(pf => FileStats.layoutCol(pf.fieldName)): _*)
-      .parquet(layoutDir.toString)
+      .save(layoutDir.toString)
     GraftBatchWrite.rmTree(stage) // staged files are intermediate once laid out
     FileStats.statAll(spark, FileStats.listParquet(layoutDir.toString),
       p => FileStats.partitionValuesFromPath(p, partFields.map(_.fieldName)))
@@ -810,25 +795,9 @@ private[sql] final class GraftRowLevelOperation(
             .get(FieldIds.RegistryProp).map(FieldIds.decode)
           def stamp(s: StructType): StructType =
             reg.map(FieldIds.attach(s, _)).getOrElse(s)
-          val winfo: LogicalWriteInfo =
-            if (reg.isEmpty) info
-            else new LogicalWriteInfo {
-              override def queryId(): String = info.queryId()
-              override def schema(): StructType = stamp(info.schema())
-              override def options(): CaseInsensitiveStringMap = info.options()
-              override def rowIdSchema(): java.util.Optional[StructType] =
-                info.rowIdSchema()
-              override def metadataSchema(): java.util.Optional[StructType] =
-                info.metadataSchema()
-            }
-          // field-id stamping + INT64-micros timestamps, scoped to the
-          // delegate's job-description capture via a cloned session
-          val delegate = FieldIds.withManagedWriteDelegate(spark) { mws =>
-            ParquetTable(tableName, mws, info.options(),
-              Seq(stage.toString), Some(stamp(tableSchema)),
-              classOf[ParquetFileFormat])
-              .newWriteBuilder(winfo).build().toBatch
-          }
+          // field-id stamping + INT64-micros timestamps, scoped to this
+          // write job's conf
+          val delegate = ManagedParquetFormat.batchWrite(stage, stamp(info.schema()), info)
           val codec = backing.loadTable(ns, tbl).properties
             .getOrElse("write.compression", "zstd")
           new GraftBatchWrite(delegate, backing, ns, tbl, stage, expected, spark,

@@ -692,8 +692,8 @@ private[graft] final class GraftMicroBatchStream(
       // problem, not permanent warehouse garbage
       val tmp = java.nio.file.Files.createTempDirectory(
         s"$initDirPrefix${ProcessHandle.current().pid()}-$e-")
-      graft.types.FieldIds.managedWrite(subtracted)
-        .write.mode("overwrite").parquet(tmp.toString)
+      subtracted.write.format(graft.table.ManagedParquetFormat.Name)
+        .mode("overwrite").save(tmp.toString)
       initDirs.add(tmp)
       graft.table.FileStats.listParquet(tmp.toString)
     })

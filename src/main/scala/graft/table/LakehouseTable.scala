@@ -1318,7 +1318,11 @@ final class LakehouseTable(
         .observe(obs, sum(when(condition, 1L).otherwise(0L)).as("__del"))
         .filter(!condition)
       val entries = stageDataFiles(Seq(kept), withLineageCols = lineageMode)
-      val deletedRows = Option(obs.get.getOrElse("__del", null))
+      // null = a sum over zero visible rows; a MISSING key means the
+      // observation never reported, which must not pass as 0 deleted
+      val deletedRows = Option(obs.get.getOrElse("__del",
+          throw new IllegalStateException(
+            s"delete on $namespace.$name: the rewrite reported no __del count")))
         .map(_.asInstanceOf[Number].longValue()).getOrElse(0L)
       return catalog.commit(namespace, name, Snaplog.OpDelete, entries,
         Map("deleted-rows" -> deletedRows.toString,
@@ -1425,12 +1429,11 @@ final class LakehouseTable(
       .distinct().coalesce(1)
     val delDir = catalog.dataDir(namespace, name)
       .resolve(s"eqdel-${java.util.UUID.randomUUID().toString.take(12)}")
-    // managed-write confs scoped here too: a timestamp KEY column
-    // written INT96 would carry no footer stats, degrading the delete
-    // tier's bounds-overlap selection (rewriteDeleteFiles) to
-    // rewrite-everything
-    graft.types.FieldIds.managedWrite(keyDf)
-      .write.mode("overwrite").parquet(delDir.toString)
+    // a managed write here too: a timestamp KEY column written INT96
+    // would carry no footer stats, degrading the delete tier's
+    // bounds-overlap selection (rewriteDeleteFiles) to rewrite-everything
+    keyDf.write.format(ManagedParquetFormat.Name)
+      .mode("overwrite").save(delDir.toString)
     val delFiles = listParquet(delDir.toString).map { p =>
       statFile(p, Map.empty)
         .copy(deleteFile = Some(true), equalityKey = Some(encodedKey))
@@ -1656,8 +1659,8 @@ final class LakehouseTable(
         col("__scan_pos").as("row_index"))
     val vecDir = catalog.dataDir(namespace, name)
       .resolve(s"delta-${java.util.UUID.randomUUID().toString.take(12)}")
-    graft.types.FieldIds.managedWrite(matched)
-      .coalesce(1).write.mode("overwrite").parquet(vecDir.toString)
+    matched.coalesce(1).write.format(ManagedParquetFormat.Name)
+      .mode("overwrite").save(vecDir.toString)
     val vecFiles = listParquet(vecDir.toString).map { p =>
       statFile(p, Map.empty).copy(deleteFile = Some(true))
     }
@@ -3071,8 +3074,8 @@ final class LakehouseTable(
     // INT96 default: INT96 carries no footer statistics — timestamp
     // bounds could never be recorded for pruning or metadata MIN/MAX —
     // and the Iceberg spec forbids it in v2 data files). Scoped to this
-    // write job via a cloned session (managedWrite below): a foreign
-    // same-session `df.write.parquet` sees the user's own settings.
+    // write job by ManagedParquetFormat (below): a foreign same-session
+    // `df.write.parquet` sees the user's own settings.
     val normalized = dfs.map(SchemaInfer.normalize(_, target))
       .reduce(_.unionByName(_))
     // the staging dir must be UNIQUE per write job, not per snapshot id:
@@ -3159,8 +3162,8 @@ final class LakehouseTable(
       d.withColumn(layoutCol(pf.fieldName),
         PartitionTransforms.layoutExpr(pf, normalized.schema)))
     val codec = m.properties.getOrElse("write.compression", "zstd")
-    var writer = graft.types.FieldIds.managedWrite(withLayout)
-      .write.mode("overwrite").option("compression", codec)
+    var writer = withLayout.write.format(ManagedParquetFormat.Name)
+      .mode("overwrite").option("compression", codec)
     m.properties.get("write.max-records-per-file")
       .foreach(v => writer = writer.option("maxRecordsPerFile", v))
     // `write.bloom-filter-columns=c1,c2`: parquet bloom filters on the
@@ -3184,7 +3187,7 @@ final class LakehouseTable(
       }
     if (partFields.nonEmpty)
       writer = writer.partitionBy(partFields.map(pf => layoutCol(pf.fieldName)): _*)
-    writer.parquet(commitDir.toString)
+    writer.save(commitDir.toString)
     val statted = FileStats.statAll(spark, listParquet(commitDir.toString),
       p => partitionValuesFromPath(p, partFields.map(_.fieldName)))
     // Spark's writer can emit ZERO-ROW part files (empty task 0 of a

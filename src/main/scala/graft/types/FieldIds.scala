@@ -113,49 +113,12 @@ object FieldIds {
   val ReadIgnoreMissingConf = "spark.sql.parquet.fieldId.read.ignoreMissing"
 
   /** The two managed-write confs: field-id stamping on, INT64-micros
-    * timestamps (footer stats + Iceberg-v2-legal data files). */
+    * timestamps (footer stats + Iceberg-v2-legal data files). Every
+    * managed write sets them in its own write job's conf, never in the
+    * session's ([[graft.table.ManagedParquetFormat]]). */
   val ManagedWriteConfs: Map[String, String] = Map(
     WriteConf -> "true",
     "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")
-
-  /** `df` re-bound onto a CLONED session carrying
-    * [[ManagedWriteConfs]] — the write job launched from the returned
-    * frame captures them, while the caller's session is never mutated
-    * and never locked. Per-write conf scoping without serialization:
-    * concurrent managed writes (unrelated tables, streaming initial
-    * materializations) each clone their own session, and a foreign
-    * same-session `df.write.parquet` interleaved at ANY point sees
-    * only the user's own settings. (A save/set/restore on the shared
-    * session would need a JVM-wide lock for the whole job duration —
-    * the r12 design — serializing all managed writes behind the
-    * longest ingest.) */
-  def managedWrite(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    org.apache.spark.sql.GraftStreamingShim.bindWithConfs(df, ManagedWriteConfs)
-
-  /** A cloned session carrying [[ManagedWriteConfs]] — for DSv2 write
-    * delegates (`ParquetTable(...).newWriteBuilder(...).build().toBatch`
-    * snapshots a session conf into the job description). */
-  def managedWriteSession(spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.SparkSession =
-    org.apache.spark.sql.GraftStreamingShim.sessionWithConfs(spark, ManagedWriteConfs)
-
-  /** Build a DSv2 write delegate under the managed-write clone. Spark's
-    * `FileWrite.toBatch` captures `SparkSession.active`'s conf (not the
-    * table's session!) into the write-job description, so the clone
-    * must be the ACTIVE session for the duration of the synchronous
-    * builder call. Active-session is a THREAD-LOCAL: concurrent
-    * threads never observe each other's swap — unlike the r12 global
-    * conf mutation, no lock is needed. */
-  def withManagedWriteDelegate[A](spark: SparkSession)(
-      body: SparkSession => A): A = {
-    val clone = managedWriteSession(spark)
-    val prev = SparkSession.getActiveSession
-    SparkSession.setActiveSession(clone)
-    try body(clone)
-    finally prev match {
-      case Some(p) => SparkSession.setActiveSession(p)
-      case None => SparkSession.clearActiveSession()
-    }
-  }
 
   /** Struct-CHAIN paths of a schema as component sequences, depth-first
     * (containers before their children): every inner field reachable

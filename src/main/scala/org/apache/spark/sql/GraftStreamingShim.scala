@@ -30,27 +30,14 @@ object GraftStreamingShim {
 
   /** A clone of `spark` (shared SparkContext + shared state, copied
     * session state: conf, temp views, UDFs, extensions) with `confs`
-    * overlaid — `private[sql] cloneSession()`, the same mechanism
-    * Spark's own streaming micro-batches use to give each batch an
-    * isolated conf. Write-path session confs (parquet field-id
-    * stamping, output timestamp type) scope to plans bound to the
-    * clone WITHOUT mutating the shared session and WITHOUT any
-    * cross-writer locking — concurrent managed writes each carry
-    * their own session. */
+    * overlaid — `private[sql] cloneSession()`. The read-side fallback
+    * for sessions without the graft extensions uses it to scope its
+    * read confs to plans bound to the clone, without mutating the
+    * caller's session. */
   def sessionWithConfs(spark: SparkSession,
       confs: Map[String, String]): SparkSession = {
     val clone = spark.asInstanceOf[classic.SparkSession].cloneSession()
     confs.foreach { case (k, v) => clone.conf.set(k, v) }
     clone
-  }
-
-  /** `df`'s logical plan re-bound onto [[sessionWithConfs]]' clone —
-    * `private[sql] Dataset.ofRows`. The returned frame executes (and
-    * captures its write-job conf) under the clone; the original
-    * session is never touched. */
-  def bindWithConfs(df: DataFrame, confs: Map[String, String]): DataFrame = {
-    val clone = sessionWithConfs(df.sparkSession, confs)
-      .asInstanceOf[classic.SparkSession]
-    classic.Dataset.ofRows(clone, df.queryExecution.logical)
   }
 }

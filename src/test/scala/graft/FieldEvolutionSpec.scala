@@ -615,8 +615,8 @@ class FieldEvolutionSpec extends SparkSpec {
     val saved = Seq(FieldIds.WriteConf, "spark.sql.parquet.outputTimestampType")
       .map(k => k -> spark.conf.getOption(k))
     try {
-      // hostile session settings: a pre-r13 save/set/restore would have
-      // to flip these; the cloned-session scoping must leave them alone
+      // hostile session settings: the managed format overrides them in
+      // each write job's own conf and must leave the session alone
       spark.conf.set(FieldIds.WriteConf, "false")
       spark.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
       val cat = new Snaplog(Files.createTempDirectory("graft-conf").toString)
@@ -854,8 +854,9 @@ class FieldEvolutionSpec extends SparkSpec {
     val rows = java.util.List.of(
       Row(1, Seq(Row(5, "x"), Row(6, "y"))),
       Row(2, Seq(Row(8, "z"))))
-    FieldIds.managedWrite(spark.createDataFrame(rows, writeSchema))
-      .write.mode("overwrite").parquet(dir)
+    spark.createDataFrame(rows, writeSchema)
+      .write.format(graft.table.ManagedParquetFormat.Name)
+      .mode("overwrite").save(dir)
     // fact 1: the footer carries the interior ids
     assert(FieldIds.fileCarriesIds(spark,
       graft.table.FileStats.listParquet(dir).head))

@@ -446,4 +446,28 @@ class MergeDeltaSpec extends SparkSpec {
       s"multi-match carries the SMALLEST matched id: ${after.toSeq}")
     assert(after.find(_._1 == 8).get._2 == 2L)
   }
+
+  test("a repeated small upsert compiles no new code") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val (cat, tbl) = fresh("warm")
+    tbl.append(spark.range(20000).select(col("id").cast("int").as("id"),
+      (col("id") % 5).cast("string").as("group"),
+      (col("id") % 7).cast("float").as("value1"),
+      (col("id") * 10).cast("int").as("value2")))
+    // 150 updates of existing keys, 150 new keys
+    val patch = spark.range(19850, 20150).select(col("id").cast("int").as("id"),
+      lit("P").as("group"), lit(0.5f).as("value1"), (-col("id")).cast("int").as("value2"))
+    Upsert.upsertTable(tbl, patch, Seq("id")) // warms every plan shape
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    Upsert.upsertTable(tbl, patch, Seq("id"))
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    assert(compiled == 0, s"the repeat upsert compiled $compiled classes")
+    val got = tbl.scan().select("id", "value2").collect()
+      .map(r => r.getInt(0) -> r.getInt(1)).sorted.toSeq
+    val want = (0 until 19850).map(i => i -> i * 10) ++ (19850 until 20150).map(i => i -> -i)
+    assert(got == want)
+    val data = cat.liveFiles("ns", "warm").filterNot(_.deleteFile.contains(true))
+    assert(data.nonEmpty && data.forall(f =>
+      graft.types.FieldIds.fileCarriesIds(spark, f.path)))
+  }
 }

@@ -176,11 +176,11 @@ class SpecEvolutionSpec extends SparkSpec {
     val md = (id: Long) => new org.apache.spark.sql.types.MetadataBuilder()
       .putLong(graft.types.FieldIds.MetaKey, id).build()
     val oldDir = dest.resolve("olddata")
-    graft.types.FieldIds.managedWrite(
-      fixture(9, 10).select(col("id").as("id", md(1)),
+    fixture(9, 10).select(col("id").as("id", md(1)),
         col("grp").as("grp", md(2)), col("ts").as("ts", md(3)),
-        col("v").as("v", md(4))).repartition(1))
-      .write.mode("overwrite").parquet(oldDir.toString)
+        col("v").as("v", md(4))).repartition(1)
+      .write.format(graft.table.ManagedParquetFormat.Name)
+      .mode("overwrite").save(oldDir.toString)
     val oldFile = graft.table.FileStats.listParquet(oldDir.toString).head
     // forge a data manifest under spec-id 7 (no partition fields)
     val entrySchema = new org.apache.avro.Schema.Parser().parse(

@@ -554,6 +554,59 @@ class SqlCatalogSpec extends SparkSpec {
     }
   }
 
+  test("SQL writes are managed under a hostile session: ids stamped, no INT96") {
+    import graft.types.FieldIds
+    val tsKey = "spark.sql.parquet.outputTimestampType"
+    val saved = Seq(FieldIds.WriteConf, tsKey).map(k => k -> spark.conf.getOption(k))
+    def footer(path: String): String = {
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(path), spark.sessionState.newHadoopConf()))
+      try r.getFooter.getFileMetaData.getSchema.toString finally r.close()
+    }
+    try {
+      spark.conf.set(FieldIds.WriteConf, "false")
+      spark.conf.set(tsKey, "INT96")
+      val wh = Files.createTempDirectory("graft-sqlhostile").toString
+      val cat = new Snaplog(wh)
+      val df = fixture().withColumn("ts",
+        org.apache.spark.sql.functions.to_timestamp(
+          org.apache.spark.sql.functions.lit("2024-01-02 03:04:05")))
+      // unpartitioned: INSERT and UPDATE both write through DSv2;
+      // partitioned: UPDATE's relayout writes through V1
+      LakehouseTable.create(cat, spark, "ns", "h", df.schema).append(df)
+      LakehouseTable.create(cat, spark, "ns", "hp", df.schema, Seq("group")).append(df)
+      spark.conf.set("spark.sql.catalog.gsqlhost", classOf[GraftSqlCatalog].getName)
+      spark.conf.set("spark.sql.catalog.gsqlhost.warehouse", wh)
+      def assertManaged(t: String, after: String): Unit =
+        cat.liveFiles("ns", t).map(_.path).foreach { p =>
+          assert(FieldIds.fileCarriesIds(spark, p), s"$t after $after: $p has no field ids")
+          val f = footer(p)
+          assert(!f.contains("int96"), s"$t after $after: $p has INT96 timestamps:\n$f")
+        }
+      Seq("h", "hp").foreach { t =>
+        spark.sql(s"INSERT INTO gsqlhost.ns.$t VALUES " +
+          "(9, 'D', 9.5, 90, TIMESTAMP '2024-05-06 07:08:09')")
+        assertManaged(t, "INSERT")
+        spark.sql(s"UPDATE gsqlhost.ns.$t SET value2 = value2 + 1, " +
+          "ts = TIMESTAMP '2024-06-07 08:09:10' WHERE id >= 3")
+        assertManaged(t, "UPDATE")
+        assert(cat.snapshots("ns", t).last.summary.get("engine").contains("sql-update"))
+        val rows = spark.sql(s"SELECT id, value2 FROM gsqlhost.ns.$t ORDER BY id")
+          .collect().map(r => r.getInt(0) -> r.getInt(1)).toSeq
+        assert(rows == Seq(1 -> 10, 2 -> 20, 3 -> 31, 4 -> 41, 9 -> 91), s"$t: $rows")
+        assert(spark.sql(s"SELECT COUNT(*) FROM gsqlhost.ns.$t " +
+          "WHERE ts = TIMESTAMP '2024-06-07 08:09:10'").head().getLong(0) == 3)
+      }
+      // the session's own settings were never touched
+      assert(spark.conf.get(FieldIds.WriteConf) == "false")
+      assert(spark.conf.get(tsKey) == "INT96")
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   test("DELETE FROM maps onto the merge-on-read tier through the commit protocol") {
     val wh = Files.createTempDirectory("graft-sqldel").toString
     val cat = new Snaplog(wh)
