@@ -12,7 +12,7 @@ import org.apache.spark.sql.connector.read.{LocalScan, Scan, ScanBuilder, Suppor
 import org.apache.spark.sql.connector.write.{BatchWrite, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
-import org.apache.spark.sql.functions.{broadcast, col}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.sources.{BaseRelation, Filter, TableScan}
 import org.apache.spark.sql.types.{BooleanType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -27,9 +27,8 @@ import graft.table.{FileStats, LakehouseTable, ManagedParquetFormat}
   * files that cannot match the pushed predicates are never handed to
   * Spark at all (Iceberg-manifest-style planning; at 100 TB the
   * difference between planning over a partition and planning over the
-  * table). Tables with outstanding merge-on-read delete vectors plan a
-  * V1 relation that subtracts the vectors with a broadcast anti-join
-  * (see [[MorRelation]]).
+  * table). Tables with outstanding deletes plan a V1 relation serving
+  * the visible rows (see [[MorRelation]]).
   *
   * Writes (current snapshot): `INSERT INTO` appends, `INSERT
   * OVERWRITE` replaces, `DELETE` takes the MOR tier, `UPDATE`/`MERGE`
@@ -42,19 +41,15 @@ private[sql] final class GraftSqlTable(
     tableName: String,
     tableSchema: StructType,
     partitionCols: Seq[String],
-    files: Seq[DataFileEntry],
-    deleteFiles: Seq[DataFileEntry],
+    // live entries in replay order (data and delete files interleaved):
+    // the sequencing equality deletes key off
+    entries: Seq[DataFileEntry],
     backing: Catalog,
     ns: String,
     tbl: String,
     writable: Boolean,
     tableProps: Map[String, String] = Map.empty,
-    loadedSnapshotId: Long = 0L,
-    // replay-ordered entries (data + deletes interleaved) — the
-    // sequencing equality deletes key off; may be empty only when
-    // deleteFiles carries no equality delete (position vectors are
-    // order-independent)
-    orderedEntries: Seq[DataFileEntry] = Seq.empty) extends Table
+    loadedSnapshotId: Long = 0L) extends Table
     with SupportsRead with SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsDelete
     with org.apache.spark.sql.connector.catalog.SupportsRowLevelOperations {
@@ -117,9 +112,8 @@ private[sql] final class GraftSqlTable(
     // group-based rewrite is actually used.
     new RowLevelOperationBuilder {
       override def build(): RowLevelOperation = new GraftRowLevelOperation(
-        info.command, tableName, tableSchema, partitionCols, files,
-        deleteFiles, backing, ns, tbl, writable, loadedSnapshotId, tableProps,
-        orderedEntries)
+        info.command, tableName, tableSchema, partitionCols, entries,
+        backing, ns, tbl, writable, loadedSnapshotId, tableProps)
     }
   }
 
@@ -215,12 +209,10 @@ private[sql] final class GraftSqlTable(
     caps
   }
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftScanBuilder(tableName, tableSchema, partitionCols, files,
-      deleteFiles, options,
+    new GraftScanBuilder(tableName, tableSchema, partitionCols, entries, options,
       streamCtx = if (writable) Some((backing, ns, tbl)) else None,
       statsUnsafe = graft.types.FieldIds.namesSet(tableProps,
         graft.types.FieldIds.StatsUnsafeProp),
-      orderedEntries = orderedEntries,
       ndvStats = graft.table.TableStats.fromProperties(tableProps),
       interiorById = tableProps
         .get(graft.types.FieldIds.InteriorByIdProp).contains("true"))
@@ -472,17 +464,17 @@ private[sql] final class GraftRowLevelOperation(
     tableName: String,
     tableSchema: StructType,
     partitionCols: Seq[String],
-    files: Seq[DataFileEntry],
-    deleteFiles: Seq[DataFileEntry],
+    entries: Seq[DataFileEntry],
     backing: Catalog,
     ns: String,
     tbl: String,
     writable: Boolean,
     loadedSnapshotId: Long,
-    tableProps: Map[String, String] = Map.empty,
-    orderedEntries: Seq[DataFileEntry] = Seq.empty) extends RowLevelOperation {
+    tableProps: Map[String, String] = Map.empty) extends RowLevelOperation {
 
   import org.apache.spark.sql.catalyst.expressions.Expression
+
+  private val (deleteFiles, files) = entries.partition(_.deleteFile.contains(true))
 
   override def command(): RowLevelOperation.Command = cmd
 
@@ -526,7 +518,8 @@ private[sql] final class GraftRowLevelOperation(
     if (deleteFiles.isEmpty) base
     else {
       val keep = base.map(_.path).toSet
-      base ++ files.filter(f => !keep(f.path) && vectorTouched(f.path))
+      val touched = vectorTouched
+      base ++ files.filter(f => !keep(f.path) && touched(f))
     }
   }
 
@@ -563,39 +556,25 @@ private[sql] final class GraftRowLevelOperation(
       Option(runtimePlanned.get(builder))
         .getOrElse(affectedFiles(filters).map(_.path))
     }.toSet
-    if (!deleteFiles.exists(graft.table.EqDeletes.isEq))
-      files.filterNot(f => planned.contains(f.path))
-    else {
-      assert(orderedEntries.nonEmpty,
-        s"$tableName: equality deletes outstanding but the rewrite was " +
-          "constructed without replay-ordered entries")
-      var dataSeen = false
-      orderedEntries.flatMap { e =>
-        if (graft.table.EqDeletes.isEq(e)) {
-          if (dataSeen) Some(e) else None // subtracts nothing: retire
-        } else if (e.deleteFile.contains(true)) None // position vectors retire
-        else if (planned.contains(e.path)) None // rewritten downstream
-        else { dataSeen = true; Some(e) }
-      }
+    var dataSeen = false
+    entries.flatMap { e =>
+      if (graft.table.EqDeletes.isEq(e)) {
+        if (dataSeen) Some(e) else None // subtracts nothing: retire
+      } else if (e.deleteFile.contains(true)) None // position vectors retire
+      else if (planned.contains(e.path)) None // rewritten downstream
+      else { dataSeen = true; Some(e) }
     }
   }
 
-  /** Paths referenced by outstanding POSITION vectors (equality-delete
-    * files carry key values, not paths — an eq-covered file need not
-    * rewrite because [[carriedFiles]] preserves its delete layering). */
-  @volatile private var vecTouchedMemo: Set[String] = null
-  private def vectorTouched(path: String): Boolean = {
-    if (vecTouchedMemo == null) synchronized {
-      if (vecTouchedMemo == null) {
-        val vecs = deleteFiles.filter(graft.table.EqDeletes.isPos)
-        vecTouchedMemo =
-          if (vecs.isEmpty) Set.empty
-          else graft.table.LogScan.readVectors(SparkSession.active, vecs)
-            .select("file_path").coalesce(1).distinct().collect()
-            .map(r => normalizePath(r.getString(0))).toSet
-      }
-    }
-    vecTouchedMemo.contains(path)
+  /** Is a data file referenced by an outstanding POSITION vector? One
+    * cached read of the vectors' paths ([[graft.table.EqDeletes.vectorPaths]]).
+    * Equality-delete files carry key values, not paths — an eq-covered
+    * file need not rewrite because [[carriedFiles]] preserves its
+    * delete layering. */
+  private def vectorTouched: DataFileEntry => Boolean = {
+    val paths = graft.table.EqDeletes.vectorPaths(SparkSession.active,
+      deleteFiles.filter(graft.table.EqDeletes.isPos))
+    f => paths(FileStats.normalizePath(f.path))
   }
 
   /** MOR-outstanding tables: the rewrite must see POST-delete rows
@@ -603,9 +582,8 @@ private[sql] final class GraftRowLevelOperation(
     * "matched" and resurrected as an update), and neither subtraction
     * can ride a DSv2 batch scan — so each branch's affected files have
     * their surviving rows materialized to a temp dir the scan then
-    * reads: equality deletes per replay segment (only the data files
-    * that PRECEDE a delete are subtracted by it), then the
-    * (file, position) vector anti-join. One extra pass over AFFECTED
+    * reads — the table's visible-rows read over the affected files
+    * ([[graft.table.EqDeletes.visible]]). One extra pass over AFFECTED
     * rows only: the price of DML before compaction. Cached per
     * distinct file set (branches of one statement share it). */
   private var morCache: Map[Seq[String], Seq[String]] = Map.empty
@@ -617,38 +595,12 @@ private[sql] final class GraftRowLevelOperation(
       case Some(staged) => staged
       case None =>
         val staged = if (paths.isEmpty) Seq.empty[String] else {
-          val spark = SparkSession.active
           val tmp = backing.dataDir(ns, tbl).resolve(
             s"mor-cow-${java.util.UUID.randomUUID().toString.take(12)}")
           val pathSet = paths.toSet
-          val posVecs = deleteFiles.filter(graft.table.EqDeletes.isPos)
-          val hasEq = deleteFiles.exists(graft.table.EqDeletes.isEq)
-          val base =
-            if (!hasEq)
-              graft.table.LogScan.read(spark, tableSchema, affected)
-                .select(col("*"),
-                  col("_metadata.file_path").as("__scan_file"),
-                  col("_metadata.row_index").as("__scan_pos"))
-            else {
-              assert(orderedEntries.nonEmpty,
-                s"$tableName: equality deletes outstanding but the rewrite " +
-                  "was constructed without replay-ordered entries")
-              graft.table.EqDeletes.readSubtracted(spark, tableSchema,
-                graft.table.EqDeletes.segments(orderedEntries, f => pathSet(f.path)),
-                withMeta = posVecs.nonEmpty)
-            }
-          val subtracted =
-            if (posVecs.isEmpty) base.drop("__scan_file", "__scan_pos")
-            else {
-              val dv = broadcast(graft.table.LogScan.readVectors(spark, posVecs)
-                .select(col("file_path").as("__dv_file"),
-                  col("row_index").as("__dv_pos"))
-                .distinct())
-              base.join(dv, col("__scan_file") === col("__dv_file") &&
-                  col("__scan_pos") === col("__dv_pos"), "left_anti")
-                .drop("__scan_file", "__scan_pos")
-            }
-          subtracted.write.mode("overwrite").parquet(tmp.toString)
+          graft.table.EqDeletes.visible(SparkSession.active, tableSchema, entries,
+              f => pathSet(f.path), withMeta = false)
+            .write.mode("overwrite").parquet(tmp.toString)
           morTemp ::= tmp
           FileStats.listParquet(tmp.toString)
         }
@@ -663,8 +615,6 @@ private[sql] final class GraftRowLevelOperation(
     morTemp = Nil
     morCache = Map.empty
   }
-
-  private def normalizePath(s: String): String = FileStats.normalizePath(s)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     // eligibility surfaces HERE — only when the group-based rewrite is
@@ -743,9 +693,9 @@ private[sql] final class GraftRowLevelOperation(
 
     override def filter(predicates: Array[Predicate]): Unit = {
       val statically = affectedFiles(branchFilters)
+      val touched = vectorTouched
       val kept = statically.filter(f =>
-        (deleteFiles.nonEmpty && vectorTouched(f.path)) ||
-          predicates.forall(p => runtimeAllows(f, p)))
+        touched(f) || predicates.forall(p => runtimeAllows(f, p)))
       runtimeKept = Some(kept)
       runtimePlanned.put(builderKey, kept.map(_.path))
       ()
@@ -859,22 +809,21 @@ private[sql] object FilterToColumn {
   }
 }
 
-/** V1 relation subtracting merge-on-read position-delete vectors with
-  * a broadcast anti-join on `(file, row position)` — the same
-  * subtraction `LakehouseTable.scan` performs, surfaced through the
-  * SQL catalog so a table with outstanding vectors stays queryable by
-  * name instead of demanding a compaction first. Vectors are
-  * metadata-sized, so the broadcast adds no shuffle of the data side;
-  * pushed filters stay RESIDUAL (Spark re-applies them above this
-  * relation) and metadata file pruning still applied upstream. The
-  * parquet row-group skip is forfeited until compaction retires the
-  * vectors — the transitional cost of MOR reads. */
+/** V1 relation serving the visible rows of a table with outstanding
+  * deletes ([[graft.table.EqDeletes.visible]], the same read
+  * `LakehouseTable.scan` assembles) over the data files metadata
+  * pruning `kept`, surfaced through the SQL catalog so a table with
+  * outstanding deletes stays queryable by name instead of demanding a
+  * compaction first. The residual predicates are re-applied above the
+  * read; Catalyst pushes them through the subtraction joins down to the
+  * parquet scans as data filters (row-group skipping), and Spark's own
+  * copy still re-filters above this relation. */
 private[sql] final class MorRelation(
     ctx: SQLContext,
     tableSchema: StructType,
     requiredSchema: StructType,
-    segs: Seq[(Seq[DataFileEntry], Seq[DataFileEntry])],
-    posDeletes: Seq[DataFileEntry],
+    ordered: Seq[DataFileEntry],
+    kept: Set[String],
     dataSizeBytes: Long,
     residual: Seq[org.apache.spark.sql.catalyst.expressions.Expression] = Seq.empty)
     extends BaseRelation with TableScan {
@@ -886,33 +835,11 @@ private[sql] final class MorRelation(
     * over-estimate (vector-deleted rows still counted): safe direction
     * for a broadcast decision. */
   override def sizeInBytes: Long = dataSizeBytes
-  override def buildScan(): org.apache.spark.rdd.RDD[Row] = {
-    val spark = ctx.sparkSession
-    if (segs.isEmpty)
-      return spark.sparkContext.emptyRDD[Row]
-    val raw = graft.table.EqDeletes.readSubtracted(spark, tableSchema, segs,
-      withMeta = posDeletes.nonEmpty)
-    // filtering commutes with both delete subtractions (row-wise
-    // predicate vs row removal), and Catalyst pushes it through the
-    // anti-joins down to the parquet scans — MOR reads keep row-group
-    // skipping
-    val data = residual.foldLeft(raw)((d, e) =>
-      d.filter(org.apache.spark.sql.GraftStreamingShim.asColumn(e)))
-    val subtracted =
-      if (posDeletes.isEmpty) data
-      else {
-        val dv = broadcast(graft.table.LogScan.readVectors(spark, posDeletes)
-          .select(col("file_path").as("__dv_file"), col("row_index").as("__dv_pos"))
-          .distinct())
-        data.join(dv,
-          col("__scan_file") === col("__dv_file") &&
-            col("__scan_pos") === col("__dv_pos"),
-          "left_anti")
-      }
-    subtracted
-      .select(requiredSchema.fieldNames.toIndexedSeq.map(col): _*)
-      .rdd
-  }
+  override def buildScan(): org.apache.spark.rdd.RDD[Row] =
+    residual.foldLeft(graft.table.EqDeletes.visible(ctx.sparkSession, tableSchema,
+        ordered, f => kept(f.path), withMeta = false)) { (d, e) =>
+      d.filter(org.apache.spark.sql.GraftStreamingShim.asColumn(e))
+    }.select(requiredSchema.fieldNames.toIndexedSeq.map(col): _*).rdd
 }
 
 /** ScanBuilder that (1) prunes the file list from log metadata using
@@ -928,12 +855,10 @@ private[sql] final class GraftScanBuilder(
     tableName: String,
     tableSchema: StructType,
     partitionCols: Seq[String],
-    files: Seq[DataFileEntry],
-    deleteFiles: Seq[DataFileEntry],
+    entries: Seq[DataFileEntry],
     options: CaseInsensitiveStringMap,
     streamCtx: Option[(Catalog, String, String)] = None,
     statsUnsafe: Set[String] = Set.empty,
-    orderedEntries: Seq[DataFileEntry] = Seq.empty,
     ndvStats: Map[String, graft.table.TableStats.ColNdv] = Map.empty,
     interiorById: Boolean = false)
     extends ScanBuilder
@@ -944,6 +869,7 @@ private[sql] final class GraftScanBuilder(
   import org.apache.spark.sql.connector.expressions.NamedReference
   import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, Count, CountStar, Max, Min}
 
+  private val (deleteFiles, files) = entries.partition(_.deleteFile.contains(true))
   private var exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression] = Seq.empty
   private var required: StructType = tableSchema
   private var pushedAgg: Option[Aggregation] = None
@@ -978,16 +904,9 @@ private[sql] final class GraftScanBuilder(
     * which is what lets exact-filter consumption and metadata
     * aggregates survive a delete-bearing table when the query's file
     * set provably dodges every delete. Computed once per scan build;
-    * the vector read is driver-side and vector-sized. Without replay
-    * order an equality delete cannot be attributed — everything counts
-    * as touched (conservative decline). */
+    * the vector read is driver-side and vector-sized. */
   private lazy val touchedByDeletes: Set[String] =
-    if (deleteFiles.isEmpty) Set.empty
-    else if (orderedEntries.isEmpty &&
-        deleteFiles.exists(graft.table.EqDeletes.isEq))
-      files.map(_.path).toSet
-    else graft.table.EqDeletes.touchedDataPaths(SparkSession.active,
-      if (orderedEntries.nonEmpty) orderedEntries else files ++ deleteFiles,
+    graft.table.EqDeletes.touchedDataPaths(SparkSession.active, entries,
       statsUnsafe, tableSchema)
 
   override def pushFilters(
@@ -1238,26 +1157,11 @@ private[sql] final class GraftScanBuilder(
     case None if deleteFiles.nonEmpty &&
         keptFiles.exists(f => touchedByDeletes(f.path)) =>
       // Merge-on-read: metadata file pruning still applies, then a V1
-      // relation subtracts the delete files — equality deletes by one
-      // broadcast join per key set over one log read of the data
-      // (EqDeletes.readSubtracted), position vectors by the
-      // (file, position) anti-join (see MorRelation).
+      // relation serves the visible rows of the kept files (see
+      // MorRelation, EqDeletes.visible).
       val kept = keptFiles
       val keptPaths = kept.map(_.path).toSet
       val requiredSchema = required
-      val ts = tableSchema
-      val posVecs = deleteFiles.filter(graft.table.EqDeletes.isPos)
-      // position-only delete sets are order-independent, so a flat
-      // data++deletes sequence is safe; an EQUALITY delete without its
-      // replay order would wrongly subtract keys from data appended
-      // after it — refuse loudly instead of guessing a sequence
-      require(orderedEntries.nonEmpty ||
-          !deleteFiles.exists(graft.table.EqDeletes.isEq),
-        s"$tableName: equality deletes require replay-ordered entries " +
-          "(constructed without orderedEntries)")
-      val segs = graft.table.EqDeletes.segments(
-        if (orderedEntries.nonEmpty) orderedEntries else files ++ deleteFiles,
-        f => keptPaths(f.path))
       val dataSize = kept.map(_.sizeBytes).sum
       // residual predicates, re-applied INSIDE the relation (unresolved
       // by name) so they reach the inner parquet scans as data filters
@@ -1271,33 +1175,23 @@ private[sql] final class GraftScanBuilder(
           case a: org.apache.spark.sql.catalyst.expressions.AttributeReference =>
             org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute.quoted(a.name)
         })
-      // a delete-carrying relation still answers readStream (the
-      // micro-batch stream plans from the log, not from this scan;
-      // deletes cross at batch boundaries with skip semantics)
-      streamCtx match {
-        case Some((b, n, t)) =>
-          new V1Scan {
-            override def readSchema(): StructType = requiredSchema
-            override def toV1TableScan[T <: BaseRelation with TableScan](
-                context: SQLContext): T =
-              new MorRelation(context, ts, requiredSchema, segs, posVecs,
-                dataSize, residual).asInstanceOf[T]
-            override def toMicroBatchStream(checkpointLocation: String)
-                : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-              new GraftMicroBatchStream(ts, b, n, t, options)
-            override def description(): String =
-              s"GraftMorScan[${kept.size} files, ${deleteFiles.size} delete files]"
+      new V1Scan {
+        override def readSchema(): StructType = requiredSchema
+        override def toV1TableScan[T <: BaseRelation with TableScan](
+            context: SQLContext): T =
+          new MorRelation(context, tableSchema, requiredSchema, entries, keptPaths,
+            dataSize, residual).asInstanceOf[T]
+        // a current-snapshot relation still answers readStream (the
+        // micro-batch stream plans from the log, not from this scan;
+        // deletes cross at batch boundaries with skip semantics)
+        override def toMicroBatchStream(checkpointLocation: String)
+            : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
+          streamCtx match {
+            case Some((b, n, t)) => new GraftMicroBatchStream(tableSchema, b, n, t, options)
+            case None => super.toMicroBatchStream(checkpointLocation)
           }
-        case _ =>
-          new V1Scan {
-            override def readSchema(): StructType = requiredSchema
-            override def toV1TableScan[T <: BaseRelation with TableScan](
-                context: SQLContext): T =
-              new MorRelation(context, ts, requiredSchema, segs, posVecs,
-                dataSize, residual).asInstanceOf[T]
-            override def description(): String =
-              s"GraftMorScan[${kept.size} files, ${deleteFiles.size} delete files]"
-          }
+        override def description(): String =
+          s"GraftMorScan[${kept.size} files, ${deleteFiles.size} delete files]"
       }
     case None =>
       val kept = keptFiles
@@ -1595,9 +1489,9 @@ private[sql] object FilePrune {
   * unchanged, and the planner sees an ordinary parquet relation.
   * `VERSION AS OF <snapshot-id | 'ref-name'>` and `TIMESTAMP AS OF`
   * map onto the snapshot log's time travel. Tables with outstanding
-  * merge-on-read delete vectors plan the same broadcast anti-join
-  * subtraction the native scan uses (metadata-only aggregates decline
-  * for them — logged row counts ignore vector-deleted rows).
+  * merge-on-read deletes plan the same subtraction the native scan
+  * uses (metadata-only aggregates decline for them — logged row counts
+  * ignore vector-deleted rows).
   *
   * Writes: `INSERT INTO` (append) and `INSERT OVERWRITE` (atomic
   * replace) go through the snapshot log's conditional commit — see
@@ -1772,11 +1666,10 @@ class GraftSqlCatalog extends TableCatalog with SupportsNamespaces
       val ordered = base
         .map(b => backing.liveEntriesOrdered(ns, t, Some(b)))
         .getOrElse(Seq.empty) ++ staged.flatMap(_.files)
-      val (delFiles, dataFiles) = ordered.partition(_.deleteFile.contains(true))
       return new GraftSqlTable(s"$catName.$ns.$t", meta.schema,
-        meta.partitionColumns, dataFiles, delFiles, backing, ns, t,
+        meta.partitionColumns, ordered, backing, ns, t,
         writable = false, tableProps = meta.properties,
-        loadedSnapshotId = ref.get.snapshotId, orderedEntries = ordered)
+        loadedSnapshotId = ref.get.snapshotId)
     }
     val id = ref.map(_.snapshotId)
       .orElse(scala.util.Try(version.toLong).toOption)
@@ -1819,7 +1712,6 @@ class GraftSqlCatalog extends TableCatalog with SupportsNamespaces
     val ordered =
       if (snapId.isEmpty) Seq.empty[DataFileEntry]
       else backing.liveEntriesOrdered(ns, t, asOf)
-    val (delFiles, dataFiles) = ordered.partition(_.deleteFile.contains(true))
     // a renamed/dropped-column table stores an id-bearing schema: the
     // session must resolve parquet columns BY ID for its scans
     if (graft.types.FieldIds.hasIds(meta.schema))
@@ -1835,9 +1727,8 @@ class GraftSqlCatalog extends TableCatalog with SupportsNamespaces
         meta.properties.get(graft.types.FieldIds.InteriorProp)
           .map(graft.types.FieldIds.decode).getOrElse(Map.empty))
     new GraftSqlTable(s"$catName.$ns.$t", servedSchema, meta.partitionColumns,
-      dataFiles, delFiles, backing, ns, t, writable = asOf.isEmpty,
-      tableProps = meta.properties, loadedSnapshotId = snapId.getOrElse(0L),
-      orderedEntries = ordered)
+      ordered, backing, ns, t, writable = asOf.isEmpty,
+      tableProps = meta.properties, loadedSnapshotId = snapId.getOrElse(0L))
   }
 
   /** `ALTER TABLE … ADD COLUMN` for the one evolution that is always

@@ -1,14 +1,15 @@
 package graft.table
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StringType, StructType}
 
 import graft.catalog.DataFileEntry
 
-/** Equality-delete application, shared by the native scan assembly and
-  * the SQL MOR relation (one definition of the semantics, two plan
-  * entry points).
+/** Merge-on-read subtraction, shared by every read of a table with
+  * outstanding deletes — the native scan assembly, the SQL MOR relation
+  * and the SQL row-level rewrite: one definition of the visible rows,
+  * one plan entry point ([[visible]]).
   *
   * An equality-delete file (`equalityKey = Some("col")` or, for
   * COMPOSITE keys, `Some("col1,col2")` — column names cannot contain
@@ -24,7 +25,8 @@ import graft.catalog.DataFileEntry
   * `key → max delete position` map ([[readSubtracted]]): delete files
   * are predicate-sized, so the broadcast is bounded, the data side
   * never shuffles, and the plan does not grow with the number of
-  * outstanding deletes.
+  * outstanding deletes. Position vectors then subtract by one
+  * broadcast anti-join on `(file, row position)` ([[joinVectors]]).
   *
   * Null keys: an equality delete never removes null-keyed rows (the
   * join's `=` is null-rejecting on both sides, per column), matching
@@ -51,6 +53,20 @@ object EqDeletes {
           e: java.util.Map.Entry[Seq[String], Set[String]]): Boolean = size > 64
     }
 
+  /** The data-file paths (normalized, [[FileStats.normalizePath]]) that
+    * the position `vectors` record, read once driver-side and cached. */
+  def vectorPaths(spark: SparkSession, vectors: Seq[DataFileEntry]): Set[String] = {
+    val key = vectors.map(_.path).sorted
+    if (key.isEmpty) Set.empty
+    else vecPathCache.synchronized(Option(vecPathCache.get(key))).getOrElse {
+      val read = LogScan.readVectors(spark, vectors)
+        .select("file_path").coalesce(1).distinct().collect()
+        .map(r => FileStats.normalizePath(r.getString(0))).toSet
+      vecPathCache.synchronized(vecPathCache.put(key, read))
+      read
+    }
+  }
+
   /** Data-file paths possibly AFFECTED by the outstanding delete
     * entries in `ordered` (replay order) — one definition of
     * delete-touch attribution, shared by the delete-tier compaction's
@@ -74,18 +90,7 @@ object EqDeletes {
       statsUnsafe: Set[String], schema: StructType): Set[String] = {
     val deletes = ordered.filter(_.deleteFile.contains(true))
     if (deletes.isEmpty) return Set.empty
-    val posTouched: Set[String] = {
-      val vecs = deletes.filter(isPos).sortBy(_.path)
-      val key = vecs.map(_.path)
-      if (vecs.isEmpty) Set.empty
-      else vecPathCache.synchronized(Option(vecPathCache.get(key))).getOrElse {
-        val read = LogScan.readVectors(spark, vecs)
-          .select("file_path").coalesce(1).distinct().collect()
-          .map(r => FileStats.normalizePath(r.getString(0))).toSet
-        vecPathCache.synchronized(vecPathCache.put(key, read))
-        read
-      }
-    }
+    val posTouched = vectorPaths(spark, deletes.filter(isPos))
     // Disjointness is decided in the DOMAIN the bounds were collected
     // in, dispatched on the key column's CURRENT type. String bounds
     // are exact lexicographic min/max — a numeric parse would be
@@ -140,13 +145,52 @@ object EqDeletes {
     touched.toSet
   }
 
+  /** The visible rows of the data files in `ordered` (replay order)
+    * that `keep` selects, read under `readSchema` with reader
+    * `readerOptions`: equality deletes subtracted by replay position
+    * ([[readSubtracted]]), then position vectors by a broadcast
+    * anti-join ([[joinVectors]]). `withMeta` keeps `__scan_file` /
+    * `__scan_pos` (the scanned file and row position) on the result.
+    * An empty selection is an empty frame with the same columns. */
+  def visible(spark: SparkSession, readSchema: StructType,
+      ordered: Seq[DataFileEntry], keep: DataFileEntry => Boolean,
+      withMeta: Boolean, readerOptions: Map[String, String] = Map.empty): DataFrame = {
+    val segs = segments(ordered, keep)
+    val vectors = ordered.filter(isPos)
+    if (segs.isEmpty)
+      return spark.createDataFrame(java.util.Collections.emptyList[Row](),
+        if (!withMeta) readSchema
+        else readSchema.add("__scan_file", StringType).add("__scan_pos", LongType))
+    val data = readSubtracted(spark, readSchema, segs,
+      withMeta = withMeta || vectors.nonEmpty, readerOptions)
+    if (vectors.isEmpty) data
+    else {
+      val sub = joinVectors(data, vectors, "left_anti")
+      if (withMeta) sub else sub.drop("__scan_file", "__scan_pos")
+    }
+  }
+
+  /** `scanned` (carrying `__scan_file` / `__scan_pos`) joined with
+    * `joinType` against the `(file, row position)` pairs the position
+    * `vectors` record: `left_anti` keeps the survivors, `left_semi` the
+    * deleted rows. The vectors are predicate-sized, so they broadcast;
+    * `coalesce(1)` before the dedup plans no Exchange in the build. */
+  def joinVectors(scanned: DataFrame, vectors: Seq[DataFileEntry],
+      joinType: String): DataFrame = {
+    val dv = broadcast(LogScan.readVectors(scanned.sparkSession, vectors)
+      .select(col("file_path").as("__dv_file"), col("row_index").as("__dv_pos"))
+      .coalesce(1).distinct())
+    scanned.join(dv, col("__scan_file") === col("__dv_file") &&
+      col("__scan_pos") === col("__dv_pos"), joinType)
+  }
+
   /** Segment the replay-ordered entries into (data files, equality
     * deletes that apply to them) groups: consecutive data files with
     * the same downstream-delete suffix share a segment, so the number
     * of segments is ≤ live equality deletes + 1 (bounded by the replay
     * window, not the table). `keepData` applies metadata pruning to
     * data entries without disturbing the sequence. */
-  def segments(ordered: Seq[DataFileEntry], keepData: DataFileEntry => Boolean)
+  private def segments(ordered: Seq[DataFileEntry], keepData: DataFileEntry => Boolean)
       : Seq[(Seq[DataFileEntry], Seq[DataFileEntry])] = {
     // walk backwards accumulating the eq-delete suffix
     val out = scala.collection.mutable.ListBuffer
@@ -188,7 +232,7 @@ object EqDeletes {
     * types differ read as separate scans. Null keys never match the
     * equality condition, so null-keyed rows survive, as under an
     * anti-join. */
-  def readSubtracted(spark: SparkSession, readSchema: StructType,
+  private def readSubtracted(spark: SparkSession, readSchema: StructType,
       segs: Seq[(Seq[DataFileEntry], Seq[DataFileEntry])],
       withMeta: Boolean,
       readerOptions: Map[String, String] = Map.empty): DataFrame = {
@@ -198,14 +242,6 @@ object EqDeletes {
     // replay position, and a segment's position is the count of deletes
     // BEFORE it. A delete at position j applies to segment i iff j ≥ i.
     val allDels = segs.headOption.map(_._2).getOrElse(Seq.empty)
-    // fail loudly on a non-conforming caller (a segment list whose head
-    // does not carry the full delete list would silently skip deletes);
-    // driver-side, bounded by the replay window
-    require(segs.forall { case (_, sfx) =>
-      sfx.length <= allDels.length &&
-        allDels.drop(allDels.length - sfx.length).map(_.path) == sfx.map(_.path)
-    }, "readSubtracted requires replay-ordered segments with nested " +
-      "delete suffixes (build them with EqDeletes.segments)")
     val data = LogScan.readSeq(spark, readSchema,
       segs.flatMap { case (files, sfx) =>
         files.map(_ -> (allDels.length - sfx.length).toLong) },

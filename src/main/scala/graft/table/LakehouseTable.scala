@@ -159,7 +159,7 @@ final class LakehouseTable(
     // conf, the same pattern readSchema uses for ReadConf; safe — see
     // [[graft.types.FieldIds.ReadIgnoreMissingConf]]).
     spark.conf.set(graft.types.FieldIds.ReadIgnoreMissingConf, "true")
-    val base = assembleOrderedMeta(ordered, keep, retainMeta = true,
+    val base = assembleOrdered(ordered, keep, retainMeta = true,
       schemaOverride = Some(lineageReadSchema))
     val assigned = data.filter(e => !e.lineageInFile.contains(true))
     val withLookup =
@@ -320,51 +320,20 @@ final class LakehouseTable(
   private def readParquet(files: Seq[DataFileEntry]): DataFrame =
     LogScan.read(readSession, readSchema, files, readOptions)
 
-  /** Assemble a scan from replay-ordered entries: ONE log read of the
-    * kept data files with equality deletes subtracted by one broadcast
-    * join per key-column set ([[EqDeletes.readSubtracted]]), then the
-    * position-vector subtraction, a broadcast anti-join against one
-    * read of every vector. Both delete kinds are metadata-sized
-    * relative to the data, so the joins add no shuffle of the data
-    * side, and the number of scans does not grow with the number of
-    * outstanding deletes; a reset commit (compaction/overwrite) retires
-    * them entirely. */
+  /** The visible rows of the data files `keep` selects from
+    * replay-ordered entries ([[EqDeletes.visible]]: one log read with
+    * equality deletes and position vectors subtracted by broadcast
+    * joins), read on [[readSession]] with [[readOptions]]. A reset
+    * commit (compaction/overwrite) retires the deletes entirely.
+    * `retainMeta` keeps the scan-position columns (`__scan_file` /
+    * `__scan_pos`) on the result — the changelog's position-delete
+    * emission joins on them AFTER the outstanding-vector subtraction
+    * has already run. */
   private def assembleOrdered(ordered: Seq[DataFileEntry],
-      keep: DataFileEntry => Boolean): DataFrame =
-    assembleOrderedMeta(ordered, keep, retainMeta = false)
-
-  /** [[assembleOrdered]] with an option to RETAIN the scan-position
-    * metadata columns (`__scan_file` / `__scan_pos`) on the result —
-    * the changelog's position-delete emission joins on them AFTER the
-    * outstanding-vector subtraction has already run. */
-  private def assembleOrderedMeta(ordered: Seq[DataFileEntry],
-      keep: DataFileEntry => Boolean, retainMeta: Boolean,
-      schemaOverride: Option[StructType] = None): DataFrame = {
-    val posDeletes = ordered.filter(EqDeletes.isPos)
-    val segs = EqDeletes.segments(ordered, keep)
-    if (segs.isEmpty)
-      return spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
-    val rs = readSession
-    val data = EqDeletes.readSubtracted(rs,
-      schemaOverride.getOrElse(readSchema), segs,
-      withMeta = posDeletes.nonEmpty || retainMeta,
-      readerOptions = readOptions)
-    if (posDeletes.isEmpty) data
-    else {
-      // coalesce(1) before the dedup (round 18): no Exchange in the
-      // broadcast build — vectors are predicate-sized by contract
-      val dv = broadcast(
-        LogScan.readVectors(rs, posDeletes)
-          .select(col("file_path").as("__dv_file"), col("row_index").as("__dv_pos"))
-          .coalesce(1).distinct())
-      val sub = data
-        .join(dv,
-          col("__scan_file") === col("__dv_file") &&
-            col("__scan_pos") === col("__dv_pos"),
-          "left_anti")
-      if (retainMeta) sub else sub.drop("__scan_file", "__scan_pos")
-    }
-  }
+      keep: DataFileEntry => Boolean, retainMeta: Boolean = false,
+      schemaOverride: Option[StructType] = None): DataFrame =
+    EqDeletes.visible(readSession, schemaOverride.getOrElse(readSchema),
+      ordered, keep, withMeta = retainMeta, readerOptions = readOptions)
 
   /** Metadata pruning predicate over one data file — the filter
     * [[selectFiles]] applies, extracted so sequence-aware assembly can
@@ -563,13 +532,8 @@ final class LakehouseTable(
       snaps.filterNot(Snaplog.isWapStaged).last.snapshotId)
     // guards + path-set difference live in ONE place shared with the
     // streaming table source (Catalog.addedEntriesBetween)
-    val entries = catalog.addedEntriesBetween(namespace, name, fromSnapshot, upTo)
-    val segs = EqDeletes.segments(entries, _ => true)
-    if (segs.isEmpty)
-      spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
-    else
-      EqDeletes.readSubtracted(spark, readSchema, segs, withMeta = false,
-        readerOptions = readOptions)
+    assembleOrdered(
+      catalog.addedEntriesBetween(namespace, name, fromSnapshot, upTo), _ => true)
   }
 
   /** Row-level CHANGELOG read (Iceberg changelog scan / Delta CDF
@@ -705,8 +669,7 @@ final class LakehouseTable(
     def visiblePrefix(entries: Seq[DataFileEntry],
         keep: DataFileEntry => Boolean, retainMeta: Boolean): DataFrame =
       if (lineage) lineageFrame(entries, keep, retainMeta)
-      else if (retainMeta) assembleOrderedMeta(entries, keep, retainMeta = true)
-      else assembleOrdered(entries, keep)
+      else assembleOrdered(entries, keep, retainMeta)
 
     // Plan-size bound: one union leg PER COMMIT would explode the
     // driver plan on a streaming table's history (a day of micro-batch
@@ -844,18 +807,9 @@ final class LakehouseTable(
         case Snaplog.OpMorDelete =>
           val vectors = s.files.filter(EqDeletes.isPos)
           if (vectors.nonEmpty && hasData(prefix)) {
-            // coalesce(1): no Exchange in the predicate-sized
-            // broadcast build (round 18)
-            val dv = broadcast(
-              LogScan.readVectors(spark, vectors)
-                .select(col("file_path").as("__dv_file"),
-                  col("row_index").as("__dv_pos"))
-                .coalesce(1).distinct())
-            val vis = visiblePrefix(prefix, _ => true, retainMeta = true)
-            val matched = vis.join(dv,
-              col("__scan_file") === col("__dv_file") &&
-                col("__scan_pos") === col("__dv_pos"),
-              "left_semi")
+            val matched = EqDeletes.joinVectors(
+                visiblePrefix(prefix, _ => true, retainMeta = true),
+                vectors, "left_semi")
               .drop("__scan_file", "__scan_pos")
             parts += stamp(matched, ChangeDelete, s)
           }
@@ -1269,7 +1223,7 @@ final class LakehouseTable(
   /** Copy-on-write row-level DELETE: remove rows matching `condition`,
     * rewriting ONLY the data files that contain matches. One pushdown-
     * friendly pass finds the affected files and their matched-row counts
-    * (`input_file_name` group-count — untouched files cost footer +
+    * (a group-count by each file's log position — untouched files cost footer +
     * pruned-row-group reads); survivors of affected files are rewritten;
     * the commit carries untouched files + rewritten files as a reset
     * (`delete`) snapshot. At 100 TB this is the difference between
@@ -1330,16 +1284,20 @@ final class LakehouseTable(
           "materialized-mor" -> "true"),
         expectedSnapshotId = Some(base))
     }
-    val matched = readParquet(live)
+    // matches counted per file by its index in `live` (the log read's
+    // per-file constant), not by the scanned path text
+    val indexed = live.toIndexedSeq
+    val matched = LogScan.readSeq(readSession, readSchema,
+        indexed.zipWithIndex.map { case (f, i) => f -> i.toLong }, readOptions)
       .filter(condition)
-      .groupBy(input_file_name().as("f")).count()
-      .collect().map(r => normalizePath(r.getString(0)) -> r.getLong(1)).toMap
+      .groupBy(col(LogScan.SeqCol)).count()
+      .collect().map(r => indexed(r.getLong(0).toInt).path -> r.getLong(1)).toMap
     val deletedRows = matched.values.sum
     val (touched, untouched) = live.partition(f => matched.contains(f.path))
     if (touched.isEmpty)
       return catalog.commit(namespace, name, Snaplog.OpDelete, live,
         Map("deleted-rows" -> "0", "rewritten-files" -> "0"))
-    val touchedPaths = touched.map(_.path).toSet
+    val touchedPaths = matched.keySet
     cowRewrite(content(f => touchedPaths(f.path)).filter(!condition),
       Map("deleted-rows" -> deletedRows.toString,
         "rewritten-files" -> touched.size.toString),
@@ -1653,7 +1611,7 @@ final class LakehouseTable(
     // harmlessly; they are simply no longer visible to record — every
     // snapshot that lists this vector also lists that eq delete, which
     // only reset commits retire, so those rows stay deleted either way.)
-    val matched = assembleOrderedMeta(ordered, _ => true, retainMeta = true)
+    val matched = assembleOrdered(ordered, _ => true, retainMeta = true)
       .filter(condition)
       .select(col("__scan_file").as("file_path"),
         col("__scan_pos").as("row_index"))
@@ -1676,8 +1634,6 @@ final class LakehouseTable(
         "delete-vectors" -> vecFiles.size.toString),
       expectedSnapshotId = Some(base))
   }
-
-  private def normalizePath(s: String): String = FileStats.normalizePath(s)
 
   // ---- maintenance ------------------------------------------------------
 

@@ -71,7 +71,9 @@ class LogScanSpec extends SparkSpec {
   /** One keyed table at delete depth 1, then 5: the native scan and the
     * SQL read plan the same scans at both, building either starts no
     * job, SQL planning runs the same jobs at both, and the rows are
-    * last-writer-wins. */
+    * last-writer-wins. Then a position-vector layer over the equality
+    * deletes: both reads, and a SQL UPDATE rewriting files under both
+    * tiers, still match the model. */
   private def depthInvariant(cat: Catalog, sqlName: String): Unit = {
     val tbl = LakehouseTable.create(cat, spark, "ns", "t", schema)
     val model = scala.collection.mutable.Map.empty[Long, String]
@@ -104,6 +106,13 @@ class LogScanSpec extends SparkSpec {
     assert(depth1._2 == 1, s"SQL read planned ${depth1._2} data scans")
     assert(depth5 == depth1,
       s"(native scans, SQL data scans, SQL plan jobs) at depth 1 $depth1, at depth 5 $depth5")
+    tbl.deleteMor(col("id") === 7L || col("id") === 25L)
+    model --= Seq(7L, 25L)
+    assert(cat.liveDeleteFiles("ns", "t").exists(EqDeletes.isPos))
+    probe()
+    spark.sql(s"UPDATE $sqlName.ns.t SET v = concat(v, '-u') WHERE id IN (1, 3, 20)")
+    model ++= Seq(1L, 3L, 20L).map(k => k -> s"${model(k)}-u")
+    probe()
   }
 
   test("MOR plan shape does not depend on delete depth, and building a read runs no job") {
@@ -173,6 +182,16 @@ class LogScanSpec extends SparkSpec {
     assert(rows(tbl.scan()) == expect)
     registerSql("glogpath", wh)
     assert(rows(spark.table("glogpath.ns.p")) == expect)
+    // a copy-on-write delete attributes its matches to the right files
+    val q = LakehouseTable.create(cat, spark, "ns", "q", schema)
+    q.append((1L to 10L).map(i => (i, s"v$i")).toDF("id", "v").coalesce(1))
+    q.append((11L to 20L).map(i => (i, s"v$i")).toDF("id", "v").coalesce(1))
+    val snap = q.delete(col("id") === 3L || col("id") === 6L)
+    assert(snap.summary("deleted-rows") == "2", s"got ${snap.summary}")
+    assert(snap.summary("rewritten-files") == "1", s"got ${snap.summary}")
+    val kept = (1L to 20L).filterNot(i => i == 3L || i == 6L).map(i => (i, s"v$i"))
+    assert(rows(q.scan()) == kept)
+    assert(rows(spark.table("glogpath.ns.q")) == kept)
   }
 
   test("equality-delete key files: footer schemas, split by key type, loud on a missing key") {
@@ -188,13 +207,13 @@ class LogScanSpec extends SparkSpec {
     val later = staged(Seq((4L, "again")).toDF("id", "v"), "later")
     // another key type, and the footer's own spelling of the column
     val longKeys = eqDelete(Seq(5L).toDF("ID"), "d-long")
-    val segs = EqDeletes.segments(Seq(data, intKeys, later, longKeys), _ => true)
-    val read = EqDeletes.readSubtracted(spark, schema, segs, withMeta = false)
+    val read = EqDeletes.visible(spark, schema, Seq(data, intKeys, later, longKeys),
+      _ => true, withMeta = false)
     assert(rows(read) == Seq((1L, "v1"), (3L, "v3"), (4L, "again"), (6L, "v6")))
     assert(planScans(read) == 3, "one data scan plus one scan per key type")
     val noKey = eqDelete(Seq(1L).toDF("other"), "d-nokey")
-    val e = intercept[IllegalStateException](EqDeletes.readSubtracted(spark, schema,
-      EqDeletes.segments(Seq(data, noKey), _ => true), withMeta = false))
+    val e = intercept[IllegalStateException](EqDeletes.visible(spark, schema,
+      Seq(data, noKey), _ => true, withMeta = false))
     assert(e.getMessage.contains("key column 'id'"), e.getMessage)
   }
 }
