@@ -746,8 +746,8 @@ object IcebergExport {
     // Merged position-delete file per distinct live-vector SET (history
     // re-listing the same vectors across snapshots pays one rewrite):
     // `row_index` → the spec's `pos`, reserved delete-file field-ids
-    // 2147483546/2147483545 stamped, and the vectors' qualified scan
-    // paths (`file:/…`, the `_metadata.file_path` form) stripped back
+    // 2147483546/2147483545 stamped, and the vectors' recorded paths
+    // (any equivalent form: `file:/…`, `file:///…`, bare) normalized
     // to the PLAIN form the data manifests record — external readers
     // string-match delete file_path against data file_path. Vector
     // rows sort by (file_path, pos) as the spec requires. Delete files

@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.avro.file.DataFileReader
 import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 import org.json4s._
 import org.json4s.jackson.JsonMethods
@@ -52,8 +52,8 @@ import graft.table.{FileStats, LakehouseTable}
   *
   * MERGE-ON-READ state imports too (round 13): position-delete files
   * (content=1) rewrite into one graft MOR vector — `pos` → `row_index`
-  * and recorded paths re-qualified to the scan's `_metadata.file_path`
-  * form — and equality-delete files (content=2) register as graft
+  * and recorded paths normalized to the plain paths the data entries
+  * carry — and equality-delete files (content=2) register as graft
   * equality-delete entries (identity-partition-scoped ones rewrite as
   * keys × the partition literal; the composite key IS the scope).
   * Commit order reconstructs the spec's sequence-number semantics:
@@ -849,45 +849,42 @@ object IcebergImport {
     }.toMap
   }
 
-  /** The form `_metadata.file_path` carries at scan for a plain path:
-    * scheme + authority-if-present + RAW (percent-encoded) path.
-    * makeQualified stamps an EMPTY authority ("file:///…") where
-    * directory-listing URIs carry none ("file:/…") — emit the listing
-    * form, or every vector row misses the MOR anti-join. Shared by the
-    * import's position-delete conversion and the REST commit route's
-    * ([[RestServe]]) — both rewrite foreign (file_path, pos) rows into
-    * graft vector files keyed by this form. */
-  private[interop] def qualifiedScanPath(
-      hadoopConf: org.apache.hadoop.conf.Configuration,
-      plain: String): String = {
-    val hp = new org.apache.hadoop.fs.Path(plain)
-    val u = hp.getFileSystem(hadoopConf).makeQualified(hp).toUri
-    val auth = Option(u.getAuthority).getOrElse("")
-    s"${u.getScheme}:${if (auth.nonEmpty) "//" + auth else ""}${u.getRawPath}"
+  /** Foreign position-delete `rows` (`file_path`, `pos`) rewritten
+    * into ONE graft vector under `dir`: each recorded path becomes the
+    * plain path `plainOf` maps it to (rows whose path it does not map
+    * drop) and `pos` becomes `row_index`. Reads resolve the plain path
+    * to its data file's log position
+    * ([[graft.table.EqDeletes.joinVectors]]). Delete files are
+    * predicate-sized relative to the data, so the rewrite is
+    * metadata-scale I/O; the data files stay untouched in place. Shared
+    * by import, refresh and the REST commit route ([[RestServe]]). */
+  private[interop] def writeVector(spark: SparkSession, rows: DataFrame,
+      plainOf: Seq[(String, String)], dir: Path): Seq[DataFileEntry] = {
+    import org.apache.spark.sql.functions.{broadcast, col}
+    import spark.implicits._
+    // coalesce(1), not repartition(1) (round 18): the single-file vector
+    // rewrite of a predicate-sized delete set needs no exchange
+    rows
+      .join(broadcast(plainOf.toDF("file_path", "__plain")), Seq("file_path"))
+      .select(col("__plain").as("file_path"),
+        col("pos").cast("long").as("row_index"))
+      .coalesce(1).sortWithinPartitions("file_path", "row_index")
+      .write.mode("overwrite").parquet(dir.toString)
+    FileStats.listParquet(dir.toString)
+      .map(p => FileStats.stat(spark, p, Map.empty)
+        .copy(deleteFile = Some(true)))
+      .filter(_.rowCount > 0)
   }
 
-  /** Rewrite position-delete files into ONE graft vector under the
-    * target table's data dir: `pos` → `row_index` and the recorded path
-    * → the exact qualified form `_metadata.file_path` carries at scan
-    * time (the subtraction anti-join is a raw string match — both sides
-    * must come off the same FileSystem qualification). Delete files are
-    * predicate-sized relative to the data, so the rewrite is
-    * metadata-scale I/O; the 100 TB of data files stay untouched in
-    * place. Rows referencing paths outside `dataPlainPaths` are
-    * dangling (the data file left the snapshot) and dropped. */
+  /** Position-delete files and deletion vectors adopted as ONE graft
+    * vector under the target table's data dir ([[writeVector]]),
+    * recording the normalized plain paths the data entries carry. Rows
+    * referencing paths outside `dataPlainPaths` are dangling (the data
+    * file left the snapshot) and dropped. */
   private def buildPosEntries(spark: SparkSession, catalog: Catalog,
       ns: String, name: String, posPlans: Seq[PosPlan],
       dvPlans: Seq[DvPlan], dataPlainPaths: Set[String]): Seq[DataFileEntry] = {
     if (posPlans.isEmpty && dvPlans.isEmpty) return Seq.empty
-    // position-delete reference map, driver-sized (delete files record
-    // bounded distinct paths): raw recorded form → the qualified form
-    // `_metadata.file_path` carries at scan. That form is the
-    // PERCENT-ENCODED URI string (SparkPath keeps `path.toUri`, so a
-    // partition dir with a space reads back as `%20`) — Path.toString
-    // would miss every file under such a dir and silently under-delete.
-    val hadoopConf = spark.sessionState.newHadoopConf()
-    def qualified(plain: String): String = qualifiedScanPath(hadoopConf, plain)
-    import org.apache.spark.sql.functions.{broadcast, col}
     import spark.implicits._
     // v3 deletion vectors decode DRIVER-SIDE: one blob is one data
     // file's position bitmap — predicate-sized (bounded by that file's
@@ -929,7 +926,9 @@ object IcebergImport {
         }
       }
     }
-    val posRefMap: Seq[(String, String)] =
+    // raw recorded form → plain path, driver-sized (delete files
+    // record bounded distinct paths)
+    val plainOf: Seq[(String, String)] =
       ((if (posPlans.isEmpty) Seq.empty
         else spark.read.parquet(posPlans.map(_.path): _*)
           .select("file_path").coalesce(1).distinct().collect().toSeq
@@ -937,33 +936,20 @@ object IcebergImport {
         .distinct
         .flatMap { raw =>
           val plain = normalizePath(raw)
-          if (dataPlainPaths.contains(plain)) Some(raw -> qualified(plain))
+          if (dataPlainPaths.contains(plain)) Some(raw -> plain)
           else None // dangling: referenced data file not in this snapshot
         }
-    if (posRefMap.isEmpty) return Seq.empty
-    val mapping = broadcast(posRefMap.toDF("file_path", "__q"))
+    if (plainOf.isEmpty) return Seq.empty
     val parquetLeg =
       if (posPlans.isEmpty) None
       else Some(spark.read.parquet(posPlans.map(_.path): _*)
-        .select(col("file_path"), col("pos").cast("long").as("pos")))
+        .select("file_path", "pos"))
     val dvLeg =
       if (dvRows.isEmpty) None
       else Some(dvRows.toDF("file_path", "pos"))
-    val rows = (parquetLeg.toSeq ++ dvLeg.toSeq).reduce(_ unionAll _)
-    val vecDir = catalog.dataDir(ns, name).resolve(
-      s"import-dv-${java.util.UUID.randomUUID().toString.take(12)}")
-    // coalesce(1), not repartition(1) (round 18): the single-file vector
-    // rewrite of a predicate-sized delete set needs no exchange
-    rows
-      .join(mapping, Seq("file_path"))
-      .select(col("__q").as("file_path"),
-        col("pos").as("row_index"))
-      .coalesce(1).sortWithinPartitions("file_path", "row_index")
-      .write.mode("overwrite").parquet(vecDir.toString)
-    FileStats.listParquet(vecDir.toString)
-      .map(p => FileStats.stat(spark, p, Map.empty)
-        .copy(deleteFile = Some(true)))
-      .filter(_.rowCount > 0)
+    writeVector(spark, (parquetLeg.toSeq ++ dvLeg.toSeq).reduce(_ unionAll _),
+      plainOf, catalog.dataDir(ns, name).resolve(
+        s"import-dv-${java.util.UUID.randomUUID().toString.take(12)}"))
   }
 
   /** Equality deletes: unscoped files register IN PLACE (their key

@@ -376,9 +376,10 @@ object RestServe {
     *    at commit). Anything else → 400 with guidance — overwrites/
     *    replaces/schema changes mutate through graft.
     *  - DELETE commits: unscoped POSITION files ((file_path, pos)
-    *    parquet) rewrite once into a graft vector keyed by the
-    *    qualified scan-path form — a reference to a non-live file is
-    *    the spec's 409 (stale writer), not a 400; unscoped EQUALITY
+    *    parquet) rewrite once into a graft vector recording plain
+    *    paths ([[IcebergImport.writeVector]]) — a reference to a
+    *    non-live file is the spec's 409 (stale writer), not a 400;
+    *    unscoped EQUALITY
     *    files register IN PLACE, `equality_ids` mapped to top-level
     *    columns through the table's field registry. One delete kind
     *    per commit; partition-scoped delete files and inbound puffin
@@ -667,42 +668,30 @@ object RestServe {
           return bad("the posted delete snapshot carries no delete files")
         else if (posDeletes.nonEmpty) {
           // POSITION deletes: foreign (file_path, pos) rows rewrite ONCE
-          // into a graft vector file keyed by the qualified scan-path
-          // form (the importer's conversion, applied live). A reference
-          // to a file not in the CURRENT snapshot means the writer's
-          // read state is stale — the spec's conflict, not a 400: the
-          // retry after re-read either finds the file live again (a
-          // rewrite carried it) or regenerates its positions.
-          val raws = spark.read.parquet(posDeletes.toSeq: _*)
-            .select("file_path").distinct()
+          // into a graft vector file ([[IcebergImport.writeVector]], the
+          // importer's conversion, applied live). A reference to a file
+          // not in the CURRENT snapshot means the writer's read state is
+          // stale — the spec's conflict, not a 400: the retry after
+          // re-read either finds the file live again (a rewrite carried
+          // it) or regenerates its positions.
+          val rows = spark.read.parquet(posDeletes.toSeq: _*)
+          val raws = rows.select("file_path").distinct()
             .collect().map(_.getString(0)).toSeq
           if (raws.isEmpty)
             return bad("the posted position-delete files carry no rows")
-          val hadoopConf = spark.sessionState.newHadoopConf()
-          val mapping = raws.map { raw =>
+          val plainOf = raws.map { raw =>
             val plain = graft.table.FileStats.normalizePath(raw)
             if (!liveData.contains(plain))
               return err(409, "CommitFailedException",
                 s"position delete references a file not live in " +
                   s"$ns.$name: $plain — the writer's table state is " +
                   "stale; re-read and retry")
-            raw -> IcebergImport.qualifiedScanPath(hadoopConf, plain)
+            raw -> plain
           }
           val vecDir = tbl.catalog.dataDir(tbl.namespace, tbl.name)
             .resolve(s"rest-dv-${java.util.UUID.randomUUID().toString.take(12)}")
           undoStaging = () => graft.util.Fs.deleteTree(vecDir)
-          import org.apache.spark.sql.functions.{broadcast, col}
-          import spark.implicits._
-          spark.read.parquet(posDeletes.toSeq: _*)
-            .select(col("file_path"), col("pos").cast("long").as("row_index"))
-            .join(broadcast(mapping.toDF("file_path", "__q")), Seq("file_path"))
-            .select(col("__q").as("file_path"), col("row_index"))
-            .repartition(1).sortWithinPartitions("file_path", "row_index")
-            .write.mode("overwrite").parquet(vecDir.toString)
-          val vecs = graft.table.FileStats.listParquet(vecDir.toString)
-            .map(p => graft.table.FileStats.stat(spark, p, Map.empty)
-              .copy(deleteFile = Some(true)))
-            .filter(_.rowCount > 0)
+          val vecs = IcebergImport.writeVector(spark, rows, plainOf, vecDir)
           (graft.catalog.Snaplog.OpMorDelete, vecs,
             Map("delete-vectors" -> vecs.size.toString))
         } else {

@@ -2,7 +2,7 @@ package graft.table
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructType}
+import org.apache.spark.sql.types.{LongType, StructType}
 
 import graft.catalog.DataFileEntry
 
@@ -10,6 +10,11 @@ import graft.catalog.DataFileEntry
   * outstanding deletes — the native scan assembly, the SQL MOR relation
   * and the SQL row-level rewrite: one definition of the visible rows,
   * one plan entry point ([[visible]]).
+  *
+  * A file's identity on a read is its index in the replay-ordered
+  * entry list (its log position), never its path text — the way the
+  * Iceberg v3 spec and Delta's deletion vectors name a data file. The
+  * log read ([[LogScan]]) stamps that index on every row.
   *
   * An equality-delete file (`equalityKey = Some("col")` or, for
   * COMPOSITE keys, `Some("col1,col2")` — column names cannot contain
@@ -19,14 +24,13 @@ import graft.catalog.DataFileEntry
   * leaves the new row visible (keyed-CDC semantics; Iceberg v2
   * sequence-number rules, expressed here by log position; Iceberg's
   * own equality deletes are field-LIST-valued for the same composite
-  * CDC keys). Replay order becomes per-file positions that the log
-  * read ([[LogScan]]) stamps on every row, so the subtraction is one
-  * data scan plus one broadcast join per key-column set against a
-  * `key → max delete position` map ([[readSubtracted]]): delete files
-  * are predicate-sized, so the broadcast is bounded, the data side
-  * never shuffles, and the plan does not grow with the number of
-  * outstanding deletes. Position vectors then subtract by one
-  * broadcast anti-join on `(file, row position)` ([[joinVectors]]).
+  * CDC keys). The subtraction is one data scan plus one broadcast join
+  * per key-column set against a `key → max delete index` map
+  * ([[subtractEq]]): delete files are predicate-sized, so the
+  * broadcast is bounded, the data side never shuffles, and the plan
+  * does not grow with the number of outstanding deletes. Position
+  * vectors then subtract by one broadcast anti-join on `(file index,
+  * row position)` ([[joinVectors]]).
   *
   * Null keys: an equality delete never removes null-keyed rows (the
   * join's `=` is null-rejecting on both sides, per column), matching
@@ -53,8 +57,11 @@ object EqDeletes {
           e: java.util.Map.Entry[Seq[String], Set[String]]): Boolean = size > 64
     }
 
-  /** The data-file paths (normalized, [[FileStats.normalizePath]]) that
-    * the position `vectors` record, read once driver-side and cached. */
+  /** The data-file paths the position `vectors` record, in one form
+    * ([[FileStats.normalizePath]]: a vector may record its file as
+    * `file:/…`, `file:///…` or a bare path), read once driver-side and
+    * cached. Touch attribution only; a read resolves vectors inside its
+    * plan ([[joinVectors]]) with the same normalization. */
   def vectorPaths(spark: SparkSession, vectors: Seq[DataFileEntry]): Set[String] = {
     val key = vectors.map(_.path).sorted
     if (key.isEmpty) Set.empty
@@ -72,9 +79,9 @@ object EqDeletes {
     * delete-touch attribution, shared by the delete-tier compaction's
     * file selection ([[LakehouseTable.rewriteDeleteFiles]]) and the
     * DSv2 scan's metadata-aggregate gate:
-    *  - position vectors touch exactly the `file_path`s they record
-    *    (vectors read once, driver-side; distinct paths are bounded by
-    *    the live file count);
+    *  - position vectors touch exactly the data files whose normalized
+    *    paths they record ([[vectorPaths]]; vectors read once,
+    *    driver-side; distinct paths are bounded by the live file count);
     *  - an equality delete touches the data files PRECEDING it in
     *    replay order whose key-column [min,max] bounds OVERLAP the
     *    delete file's own recorded key bounds — a provably key-disjoint
@@ -147,118 +154,96 @@ object EqDeletes {
 
   /** The visible rows of the data files in `ordered` (replay order)
     * that `keep` selects, read under `readSchema` with reader
-    * `readerOptions`: equality deletes subtracted by replay position
-    * ([[readSubtracted]]), then position vectors by a broadcast
-    * anti-join ([[joinVectors]]). `withMeta` keeps `__scan_file` /
-    * `__scan_pos` (the scanned file and row position) on the result.
-    * An empty selection is an empty frame with the same columns. */
+    * `readerOptions`. A data file's identity is its index in `ordered`
+    * (its log position), which the log read stamps on its rows as
+    * `_metadata.graft_seq`; an equality-delete file carries its own
+    * index the same way. Equality deletes subtract by that index
+    * ([[subtractEq]]), then position vectors by a broadcast anti-join on
+    * `(index, row position)` ([[joinVectors]]). `withMeta` keeps
+    * `__scan_seq` / `__scan_pos` (the file's index and the row's
+    * position in it) on the result. An empty selection is an empty
+    * frame with the same columns. */
   def visible(spark: SparkSession, readSchema: StructType,
       ordered: Seq[DataFileEntry], keep: DataFileEntry => Boolean,
       withMeta: Boolean, readerOptions: Map[String, String] = Map.empty): DataFrame = {
-    val segs = segments(ordered, keep)
-    val vectors = ordered.filter(isPos)
-    if (segs.isEmpty)
+    val indexed = ordered.zipWithIndex.map { case (f, i) => f -> i.toLong }
+    val data = indexed.filter { case (f, _) => !f.deleteFile.contains(true) && keep(f) }
+    if (data.isEmpty)
       return spark.createDataFrame(java.util.Collections.emptyList[Row](),
         if (!withMeta) readSchema
-        else readSchema.add("__scan_file", StringType).add("__scan_pos", LongType))
-    val data = readSubtracted(spark, readSchema, segs,
-      withMeta = withMeta || vectors.nonEmpty, readerOptions)
-    if (vectors.isEmpty) data
-    else {
-      val sub = joinVectors(data, vectors, "left_anti")
-      if (withMeta) sub else sub.drop("__scan_file", "__scan_pos")
-    }
+        else readSchema.add("__scan_seq", LongType).add("__scan_pos", LongType))
+    // only an equality delete after the first kept data file can
+    // remove a row, so a read no delete can touch plans no key scan
+    val dels = indexed.filter { case (f, i) => isEq(f) && i > data.head._2 }
+    val vectors = ordered.filter(isPos)
+    val meta = withMeta || vectors.nonEmpty
+    val scanned = LogScan.readSeq(spark, readSchema, data, readerOptions)
+    if (!meta && dels.isEmpty) return scanned
+    val survivors = subtractEq(spark, scanned.select(col("*") +:
+      col(LogScan.SeqCol).as("__scan_seq") +:
+      (if (meta) Seq(col("_metadata.row_index").as("__scan_pos")) else Nil): _*), dels)
+    val sub =
+      if (vectors.isEmpty) survivors
+      else joinVectors(survivors, ordered, vectors, "left_anti")
+    if (withMeta) sub else sub.drop("__scan_seq", "__scan_pos")
   }
 
-  /** `scanned` (carrying `__scan_file` / `__scan_pos`) joined with
-    * `joinType` against the `(file, row position)` pairs the position
-    * `vectors` record: `left_anti` keeps the survivors, `left_semi` the
-    * deleted rows. The vectors are predicate-sized, so they broadcast;
-    * `coalesce(1)` before the dedup plans no Exchange in the build. */
-  def joinVectors(scanned: DataFrame, vectors: Seq[DataFileEntry],
-      joinType: String): DataFrame = {
-    val dv = broadcast(LogScan.readVectors(scanned.sparkSession, vectors)
-      .select(col("file_path").as("__dv_file"), col("row_index").as("__dv_pos"))
-      .coalesce(1).distinct())
-    scanned.join(dv, col("__scan_file") === col("__dv_file") &&
+  /** Recorded vector paths in one form ([[FileStats.normalizePath]]),
+    * the definition touch attribution ([[vectorPaths]]) uses too. */
+  private val normalized = udf((p: String) => FileStats.normalizePath(p))
+
+  /** `scanned` (carrying `__scan_seq` / `__scan_pos`, the file's index
+    * in `ordered` and the row's position) joined with `joinType`
+    * against the rows the position `vectors` record: `left_anti` keeps
+    * the survivors, `left_semi` the deleted rows. A vector may record
+    * its data file in any equivalent path form: each recorded path is
+    * normalized and resolved to its file's index in `ordered` inside
+    * the plan, through a broadcast of `ordered`'s (normalized path,
+    * index) pairs, so building the read starts no job. A recorded path
+    * that names no file of `ordered` subtracts nothing. The vectors are
+    * predicate-sized, so the resolved `(index, position)` pairs
+    * broadcast; `coalesce(1)` before the dedup plans no Exchange in the
+    * build. */
+  def joinVectors(scanned: DataFrame, ordered: Seq[DataFileEntry],
+      vectors: Seq[DataFileEntry], joinType: String): DataFrame = {
+    val spark = scanned.sparkSession
+    import spark.implicits._
+    val files = ordered.zipWithIndex
+      .map { case (f, i) => (FileStats.normalizePath(f.path), i.toLong) }
+      .toDF("__dv_file", "__dv_seq")
+    val dv = LogScan.readVectors(spark, vectors)
+      .select(normalized(col("file_path")).as("__dv_file"),
+        col("row_index").as("__dv_pos"))
+      .coalesce(1)
+      .join(broadcast(files), "__dv_file")
+      .select("__dv_seq", "__dv_pos").distinct()
+    scanned.join(broadcast(dv), col("__scan_seq") === col("__dv_seq") &&
       col("__scan_pos") === col("__dv_pos"), joinType)
   }
 
-  /** Segment the replay-ordered entries into (data files, equality
-    * deletes that apply to them) groups: consecutive data files with
-    * the same downstream-delete suffix share a segment, so the number
-    * of segments is ≤ live equality deletes + 1 (bounded by the replay
-    * window, not the table). `keepData` applies metadata pruning to
-    * data entries without disturbing the sequence. */
-  private def segments(ordered: Seq[DataFileEntry], keepData: DataFileEntry => Boolean)
-      : Seq[(Seq[DataFileEntry], Seq[DataFileEntry])] = {
-    // walk backwards accumulating the eq-delete suffix
-    val out = scala.collection.mutable.ListBuffer
-      .empty[(Seq[DataFileEntry], Seq[DataFileEntry])]
-    var suffix = List.empty[DataFileEntry]
-    var bucket = List.empty[DataFileEntry]
-    ordered.reverse.foreach { f =>
-      if (isEq(f)) {
-        if (bucket.nonEmpty) { out.prepend((bucket, suffix)); bucket = Nil }
-        suffix = f :: suffix
-      } else if (!f.deleteFile.contains(true) && keepData(f)) {
-        bucket = f :: bucket
-      }
-    }
-    if (bucket.nonEmpty) out.prepend((bucket, suffix))
-    out.toList
-  }
-
-  /** The data side of a scan with equality deletes applied, as ONE log
-    * read ([[LogScan]]) of every data file. `withMeta` additionally
-    * carries `_metadata.file_path` / `_metadata.row_index` (as
-    * `__scan_file` / `__scan_pos`) for a downstream position-vector
-    * subtraction.
-    *
-    * The replay-order rule ("a delete applies to data files preceding
-    * it") is Iceberg's sequence-number semantics, so it folds into
-    * positions: each data file carries its segment's replay position
-    * (the count of deletes before it) in `_metadata.graft_seq`, each
-    * delete file its own index in the replay order the same way. Per
-    * distinct KEY-COLUMN SET, one scan of that set's delete files
-    * builds a broadcast map `key tuple → max delete position`, and a
-    * row survives iff its key is absent or its max delete position is
-    * STRICTLY LESS than its file's position (a delete at position ==
-    * the segment position applies to that segment). So a MOR read plans
-    * one data scan plus one delete scan and one broadcast join per key
-    * set at ANY outstanding-delete depth, and its plan text does not
-    * change from commit to commit. Key-file schemas come from each file's own
+  /** `scanned` (carrying `__scan_seq`, its file's replay index) minus
+    * the rows the equality deletes `dels` (each paired with its own
+    * replay index) remove. The replay-order rule ("a delete applies to
+    * the data files before it") is Iceberg's sequence-number rule
+    * expressed by log position: per distinct KEY-COLUMN SET, one scan
+    * of that set's delete files builds a broadcast map `key tuple → max
+    * delete index`, and a row survives iff its key is absent or that
+    * max is LESS than its file's index. So a MOR read plans one data
+    * scan plus one delete scan and one broadcast join per key set at
+    * ANY outstanding-delete depth, and its plan text does not change
+    * from commit to commit. Key-file schemas come from each file's own
     * footer (never inferred by a job); files of one key set whose key
     * types differ read as separate scans. Null keys never match the
     * equality condition, so null-keyed rows survive, as under an
     * anti-join. */
-  private def readSubtracted(spark: SparkSession, readSchema: StructType,
-      segs: Seq[(Seq[DataFileEntry], Seq[DataFileEntry])],
-      withMeta: Boolean,
-      readerOptions: Map[String, String] = Map.empty): DataFrame = {
-    // suffixes are nested along replay order (the earliest segment sees
-    // every later delete), so the first segment's suffix IS the ordered
-    // list of all applying deletes; a delete's index in it is its
-    // replay position, and a segment's position is the count of deletes
-    // BEFORE it. A delete at position j applies to segment i iff j ≥ i.
-    val allDels = segs.headOption.map(_._2).getOrElse(Seq.empty)
-    val data = LogScan.readSeq(spark, readSchema,
-      segs.flatMap { case (files, sfx) =>
-        files.map(_ -> (allDels.length - sfx.length).toLong) },
-      readerOptions)
-    val meta = Seq(
-      if (withMeta) Seq(col("_metadata.file_path").as("__scan_file"),
-        col("_metadata.row_index").as("__scan_pos")) else Nil,
-      if (allDels.nonEmpty) Seq(col(LogScan.SeqCol).as("__eqd_seg")) else Nil).flatten
-    val base = if (meta.isEmpty) data else data.select(col("*") +: meta: _*)
-    if (allDels.isEmpty) return base
-    val byKeySet = allDels.zipWithIndex.groupBy { case (d, _) => keyCols(d) }
-    byKeySet.toSeq.sortBy(_._1.mkString(",")).zipWithIndex
-      .foldLeft(base) { case (df, ((cols, dels), si)) =>
+  private def subtractEq(spark: SparkSession, scanned: DataFrame,
+      dels: Seq[(DataFileEntry, Long)]): DataFrame =
+    dels.groupBy { case (d, _) => keyCols(d) }.toSeq
+      .sortBy(_._1.mkString(",")).zipWithIndex
+      .foldLeft(scanned) { case (df, ((cols, keyDels), si)) =>
         // one scan per footer key schema (normally one per key set)
-        val keyed = dels
-          .groupMap { case (d, _) => LogScan.keyFields(spark, d, cols) } {
-            case (d, pos) => d -> pos.toLong }
+        val keyed = keyDels
+          .groupBy { case (d, _) => LogScan.keyFields(spark, d, cols) }
           .toSeq.sortBy(_._2.head._2)
           .map { case (fields, files) =>
             LogScan.readSeq(spark, StructType(fields), files)
@@ -280,10 +265,8 @@ object EqDeletes {
               df(c) === col(s"__eqk_${si}_$i") }.reduce(_ && _),
             "left_outer")
           .filter(col(s"__eqd_max_$si").isNull ||
-            col(s"__eqd_max_$si") < col("__eqd_seg"))
+            col(s"__eqd_max_$si") < col("__scan_seq"))
           .drop((s"__eqd_max_$si" +:
             cols.indices.map(i => s"__eqk_${si}_$i")): _*)
       }
-      .drop("__eqd_seg")
-  }
 }

@@ -121,34 +121,26 @@ final class LakehouseTable(
   /** [[scanLineage]] over the entries `keep` selects — also the
     * content source a row-lineage REWRITE materializes from, and (with
     * `retainMeta`) the lineage-stamped assembly the changelog's
-    * position-delete emission joins against. */
+    * position-delete emission joins against. A scanned file's
+    * assignment (`firstRowId`, `dataSeq`) is looked up by its index in
+    * `ordered` (`__scan_seq`, [[EqDeletes.visible]]), never by path. */
   private def lineageFrame(ordered: Seq[DataFileEntry],
       keep: DataFileEntry => Boolean,
       retainMeta: Boolean = false): DataFrame = {
     import spark.implicits._
     import graft.types.FieldIds.{RowIdCol, LastUpdatedCol}
-    val data = ordered.filterNot(_.deleteFile.contains(true)).filter(keep)
+    val data = ordered.zipWithIndex.filter { case (e, _) =>
+      !e.deleteFile.contains(true) && keep(e) }
     if (data.isEmpty)
       return spark.createDataFrame(java.util.Collections.emptyList[Row](),
         StructType(schema.fields ++ Seq(
           StructField(RowIdCol, LongType, nullable = false),
           StructField(LastUpdatedCol, LongType, nullable = false)) ++
           (if (retainMeta) Seq(
-            StructField("__scan_file", StringType, nullable = true),
+            StructField("__scan_seq", LongType, nullable = true),
             StructField("__scan_pos", LongType, nullable = true))
           else Seq.empty)))
-    val missing = data.filter(e => !e.lineageInFile.contains(true) &&
-      (e.firstRowId.isEmpty || e.dataSeq.isEmpty))
-    require(missing.isEmpty,
-      s"$namespace.$name: ${missing.size} data file(s) carry no row-lineage " +
-        "assignment — _row_id/_last_updated_sequence_number serve on " +
-        "tables adopted from an Iceberg v3 row-lineage tree and on native " +
-        "tables with row lineage enabled (enableRowLineage(), or the " +
-        "graft.row-lineage property at creation); scan() serves the " +
-        "content without lineage")
-    def canon(p: String): String =
-      new HadoopPath(p.replaceFirst(LakehouseTable.PathSchemeRe, "/"))
-        .toUri.getRawPath
+    requireLineage(data.map(_._1))
     // the read requests the MATERIALIZED lineage columns too
     // ([[lineageReadSchema]]) — the coalesce below prefers the physical
     // value per row, exactly the spec's precedence. Those columns ride
@@ -161,31 +153,38 @@ final class LakehouseTable(
     spark.conf.set(graft.types.FieldIds.ReadIgnoreMissingConf, "true")
     val base = assembleOrdered(ordered, keep, retainMeta = true,
       schemaOverride = Some(lineageReadSchema))
-    val assigned = data.filter(e => !e.lineageInFile.contains(true))
+    val assigned = data.collect { case (e, i) if !e.lineageInFile.contains(true) =>
+      (i.toLong, e.firstRowId.get, e.dataSeq.get) }
     val withLookup =
       if (assigned.isEmpty)
-        base.withColumn("__ln_path", lit(null).cast("string"))
-          .withColumn("__ln_first", lit(null).cast("long"))
+        base.withColumn("__ln_first", lit(null).cast("long"))
           .withColumn("__ln_seq", lit(null).cast("long"))
-      else {
-        val lookup = broadcast(assigned.map(e =>
-          (canon(e.path), e.firstRowId.get, e.dataSeq.get))
-          .toDF("__ln_file", "__ln_first", "__ln_seq"))
-        base.withColumn("__ln_path", regexp_replace(col("__scan_file"),
-          LakehouseTable.PathSchemeRe, "/"))
-          .join(lookup, col("__ln_path") === col("__ln_file"), "left")
-          .drop("__ln_file")
-      }
+      else base.join(broadcast(assigned.toDF("__ln_idx", "__ln_first", "__ln_seq")),
+          col("__scan_seq") === col("__ln_idx"), "left")
+        .drop("__ln_idx")
     val stamped = withLookup
       .withColumn(RowIdCol, coalesce(col(RowIdCol),
-        when(col("__ln_first").isNull, raise_error(concat(
-          lit("row lineage: no assignment found for scanned file "),
-          col("__ln_path"), lit(" — path representation drift"))))
-          .otherwise(col("__ln_first") + col("__scan_pos"))))
+        col("__ln_first") + col("__scan_pos"),
+        raise_error(lit("row lineage: a scanned row has no assignment " +
+          s"and no materialized $RowIdCol"))))
       .withColumn(LastUpdatedCol,
         coalesce(col(LastUpdatedCol), col("__ln_seq")))
-      .drop("__ln_path", "__ln_first", "__ln_seq")
-    if (retainMeta) stamped else stamped.drop("__scan_file", "__scan_pos")
+      .drop("__ln_first", "__ln_seq")
+    if (retainMeta) stamped else stamped.drop("__scan_seq", "__scan_pos")
+  }
+
+  /** Every data file in `data` must carry a row-lineage assignment or
+    * materialize the lineage columns itself. */
+  private def requireLineage(data: Seq[DataFileEntry]): Unit = {
+    val missing = data.filter(e => !e.lineageInFile.contains(true) &&
+      (e.firstRowId.isEmpty || e.dataSeq.isEmpty))
+    require(missing.isEmpty,
+      s"$namespace.$name: ${missing.size} data file(s) carry no row-lineage " +
+        "assignment — _row_id/_last_updated_sequence_number serve on " +
+        "tables adopted from an Iceberg v3 row-lineage tree and on native " +
+        "tables with row lineage enabled (enableRowLineage(), or the " +
+        "graft.row-lineage property at creation); scan() serves the " +
+        "content without lineage")
   }
 
   /** Keep `scan(partitionFilter)` EXACT across partition evolution:
@@ -325,10 +324,10 @@ final class LakehouseTable(
     * equality deletes and position vectors subtracted by broadcast
     * joins), read on [[readSession]] with [[readOptions]]. A reset
     * commit (compaction/overwrite) retires the deletes entirely.
-    * `retainMeta` keeps the scan-position columns (`__scan_file` /
-    * `__scan_pos`) on the result — the changelog's position-delete
-    * emission joins on them AFTER the outstanding-vector subtraction
-    * has already run. */
+    * `retainMeta` keeps the scan-position columns (`__scan_seq`, the
+    * file's index in `ordered`, and `__scan_pos`) on the result — the
+    * changelog's position-delete emission joins on them AFTER the
+    * outstanding-vector subtraction has already run. */
   private def assembleOrdered(ordered: Seq[DataFileEntry],
       keep: DataFileEntry => Boolean, retainMeta: Boolean = false,
       schemaOverride: Option[StructType] = None): DataFrame =
@@ -674,10 +673,10 @@ final class LakehouseTable(
     // Plan-size bound: one union leg PER COMMIT would explode the
     // driver plan on a streaming table's history (a day of micro-batch
     // appends = thousands of legs). Runs of >= 8 consecutive appends
-    // collapse into ONE scan stamped per-row from a broadcast
-    // path -> commit lookup — the plan is then O(non-append commits),
-    // not O(commits). A lookup miss (path-representation drift) fails
-    // loudly via raise_error instead of silently dropping rows.
+    // collapse into ONE scan whose rows carry their file's index in the
+    // run ([[LogScan.readSeq]]), stamped from a broadcast index ->
+    // commit lookup — the plan is then O(non-append commits), not
+    // O(commits).
     def isAppendOp(s: Snapshot) =
       s.operation == Snaplog.OpAppend || s.operation == Snaplog.OpAddFiles
     // O(1)-per-commit run construction: grow the CURRENT run in its
@@ -693,50 +692,35 @@ final class LakehouseTable(
       }
       if (cur.nonEmpty) runs += cur.toVector
     }
-    // Driver key = the PERCENT-ENCODED path (URI raw path) — the form
-    // `_metadata.file_path` carries after its scheme prefix, so a
-    // warehouse dir with a space (or any URI-encodable char) still
-    // joins; the column side only strips the scheme.
-    def canon(p: String): String =
-      new org.apache.hadoop.fs.Path(
-        p.replaceFirst(LakehouseTable.PathSchemeRe, "/")).toUri.getRawPath
-    def stampAppendRun(run: Vector[Snapshot]): Boolean = {
+    def stampAppendRun(run: Vector[Snapshot]): Unit = {
       val entries = run.flatMap(s =>
         s.files.filterNot(_.deleteFile.contains(true)).map(_ -> s))
-      if (entries.isEmpty) return true
+      if (entries.isEmpty) return
       // the lineage twin of the lookup carries each file's assignment
       // (None for materialized-lineage files — their physical columns
       // win the coalesce), so the batched run pays the SAME single
       // broadcast join for commit stamps and row ids alike
-      val lookup = entries.map { case (f, s) =>
-        (canon(f.path), s.snapshotId, new java.sql.Timestamp(s.timestampMs),
-          f.firstRowId, f.dataSeq)
-      }
-      if (lookup.map(_._1).distinct.size != lookup.size) return false
       import spark.implicits._
-      val lk = broadcast(lookup.toDF(
-        "__cl_path", "__cl_snap", "__cl_ts", "__cl_first", "__cl_seq2"))
+      val lk = broadcast(entries.zipWithIndex.map { case ((f, s), i) =>
+        (i.toLong, s.snapshotId, new java.sql.Timestamp(s.timestampMs),
+          f.firstRowId, f.dataSeq)
+      }.toDF("__cl_idx", "__cl_snap", "__cl_ts", "__cl_first", "__cl_seq2"))
+      val files = entries.map(_._1).zipWithIndex.map { case (f, i) => f -> i.toLong }
       val base =
         if (!lineage)
-          readParquet(entries.map(_._1))
-            .select(col("*"), regexp_replace(col("_metadata.file_path"),
-              LakehouseTable.PathSchemeRe, "/").as("__cl_path"))
+          LogScan.readSeq(readSession, readSchema, files, readOptions)
+            .select(col("*"), col(LogScan.SeqCol).as("__cl_idx"))
         else {
+          requireLineage(files.map(_._1))
           spark.conf.set(graft.types.FieldIds.ReadIgnoreMissingConf, "true")
-          LogScan.read(readSession, lineageReadSchema, entries.map(_._1),
-              readOptions)
-            .select(col("*"), regexp_replace(col("_metadata.file_path"),
-              LakehouseTable.PathSchemeRe, "/").as("__cl_path"),
+          LogScan.readSeq(readSession, lineageReadSchema, files, readOptions)
+            .select(col("*"), col(LogScan.SeqCol).as("__cl_idx"),
               col("_metadata.row_index").as("__cl_pos"))
         }
       val stamped0 = base
-        .join(lk, Seq("__cl_path"), "left")
+        .join(lk, Seq("__cl_idx"), "left")
         .withColumn(ChangeTypeCol, lit(ChangeInsert))
-        .withColumn(ChangeSnapshotCol,
-          when(col("__cl_snap").isNull, raise_error(concat(
-            lit("changelog: no commit found for scanned file "),
-            col("__cl_path"), lit(" — path representation drift"))))
-            .otherwise(col("__cl_snap")))
+        .withColumn(ChangeSnapshotCol, col("__cl_snap"))
         .withColumn(ChangeTimestampCol, col("__cl_ts"))
       val stamped =
         if (!lineage) stamped0
@@ -744,20 +728,17 @@ final class LakehouseTable(
           import graft.types.FieldIds.{RowIdCol, LastUpdatedCol}
           stamped0
             .withColumn(RowIdCol, coalesce(col(RowIdCol),
-              when(col("__cl_first").isNull, raise_error(concat(
-                lit("row lineage: no assignment found for scanned file "),
-                col("__cl_path"), lit(" — path representation drift"))))
-                .otherwise(col("__cl_first") + col("__cl_pos"))))
+              col("__cl_first") + col("__cl_pos")))
             .withColumn(LastUpdatedCol,
               coalesce(col(LastUpdatedCol), col("__cl_seq2")))
             .drop("__cl_pos")
         }
       parts += stamped.drop(
-        "__cl_path", "__cl_snap", "__cl_ts", "__cl_first", "__cl_seq2")
-      true
+        "__cl_idx", "__cl_snap", "__cl_ts", "__cl_first", "__cl_seq2")
     }
     runs.foreach { run =>
-      if (isAppendOp(run.head) && run.size >= 8 && stampAppendRun(run)) {
+      if (isAppendOp(run.head) && run.size >= 8) {
+        stampAppendRun(run)
         prefixBuf ++= run.flatMap(_.files)
       } else run.foreach { s =>
       s.operation match {
@@ -786,11 +767,12 @@ final class LakehouseTable(
               val cur = prefix // ONE buffer snapshot per entry
               if (hasData(cur)) {
                 val cols = EqDeletes.keyCols(entry)
-                val fields = LogScan.keyFields(spark, entry, cols)
+                val fields = LogScan.keyFields(readSession, entry, cols)
                 // coalesce(1): no Exchange in the predicate-sized
-                // broadcast build (round 18)
+                // broadcast build (round 18); on readSession, the
+                // session the visible prefix it semi-joins reads on
                 val keys = broadcast(
-                  LogScan.read(spark, StructType(fields), Seq(entry))
+                  LogScan.read(readSession, StructType(fields), Seq(entry))
                     .select(fields.zipWithIndex.map { case (f, i) =>
                       col(f.name).as(s"__eqdel_$i") }: _*).coalesce(1).distinct())
                 val vis = visiblePrefix(cur, _ => true, retainMeta = false)
@@ -807,10 +789,11 @@ final class LakehouseTable(
         case Snaplog.OpMorDelete =>
           val vectors = s.files.filter(EqDeletes.isPos)
           if (vectors.nonEmpty && hasData(prefix)) {
+            val cur = prefix
             val matched = EqDeletes.joinVectors(
-                visiblePrefix(prefix, _ => true, retainMeta = true),
-                vectors, "left_semi")
-              .drop("__scan_file", "__scan_pos")
+                visiblePrefix(cur, _ => true, retainMeta = true),
+                cur, vectors, "left_semi")
+              .drop("__scan_seq", "__scan_pos")
             parts += stamp(matched, ChangeDelete, s)
           }
           prefixBuf ++= s.files
@@ -1580,7 +1563,9 @@ final class LakehouseTable(
   /** Merge-on-read row-level DELETE (the Iceberg v2 position-delete
     * tier, complement of the COW [[delete]]): instead of rewriting the
     * files that contain matches, write ONE small parquet of matched
-    * `(file_path, row_index)` positions and commit it as a layered
+    * `(file_path, row_index)` positions — each row's file found by its
+    * replay index (`__scan_seq`) and recorded in the log's own path
+    * text — and commit it as a layered
     * `mor_delete` snapshot. Data files are untouched — at 100 TB a
     * scattered-predicate delete costs one pushdown scan + a vector
     * write, not a file-set rewrite. Scans subtract the vector with a
@@ -1611,9 +1596,13 @@ final class LakehouseTable(
     // harmlessly; they are simply no longer visible to record — every
     // snapshot that lists this vector also lists that eq delete, which
     // only reset commits retire, so those rows stay deleted either way.)
+    import spark.implicits._
+    val paths = ordered.map(_.path).zipWithIndex
+      .map { case (p, i) => (i.toLong, p) }.toDF("__mor_seq", "__mor_path")
     val matched = assembleOrdered(ordered, _ => true, retainMeta = true)
       .filter(condition)
-      .select(col("__scan_file").as("file_path"),
+      .join(broadcast(paths), col("__scan_seq") === col("__mor_seq"))
+      .select(col("__mor_path").as("file_path"),
         col("__scan_pos").as("row_index"))
     val vecDir = catalog.dataDir(namespace, name)
       .resolve(s"delta-${java.util.UUID.randomUUID().toString.take(12)}")
@@ -3366,12 +3355,6 @@ object LakehouseTable {
   val ChangeTimestampCol = "_commit_timestamp"
   val ChangeInsert = "insert"
   val ChangeDelete = "delete"
-
-  /** Scheme prefix of a qualified file URI — ONE definition shared by
-    * the changelog's driver-side path canonicalization and its
-    * column-side `regexp_replace` (the two must stay byte-identical
-    * for the path→commit stamp join to be sound). */
-  val PathSchemeRe = "^[a-zA-Z][a-zA-Z0-9+.\\-]*:/+"
 
   def load(catalog: Catalog, spark: SparkSession, ns: String, name: String): LakehouseTable = {
     catalog.loadTable(ns, name) // fail fast if absent

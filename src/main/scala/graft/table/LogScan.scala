@@ -24,14 +24,16 @@ import graft.catalog.DataFileEntry
   * [[LogFileIndex]] (the log's paths and sizes, as `FileStatus`es) with
   * the caller's schema and reader options, so it plans the same
   * `FileSourceScanExec` — column pruning, filter pushdown, vectorized
-  * decode, `_metadata.file_path` / `_metadata.row_index` — and the
-  * same path text, since the statuses carry the same qualified paths
-  * a listing would return.
+  * decode, `_metadata.file_path` / `_metadata.row_index` (in the path
+  * text a listing reports) — without a listing's cost.
   *
   * Each file also carries one constant, `_metadata.graft_seq` ([[SeqCol]]):
-  * the caller's per-file number (a replay position for merge-on-read
-  * subtraction). It rides the file, not the plan, so plans whose
-  * positions differ only by commit compile to the same code. */
+  * the caller's per-file number. Merge-on-read reads set it to the
+  * file's index in the replay-ordered entry list, which is the file's
+  * identity on that read: equality deletes, position vectors, row
+  * lineage and the changelog all key on it, never on path text. It
+  * rides the file, not the plan, so plans whose indices differ only by
+  * commit compile to the same code. */
 object LogScan {
 
   /** Name of the per-file constant under `_metadata`. */
@@ -51,7 +53,8 @@ object LogScan {
     readSeq(spark, schema, files.map(_ -> 0L), options)
 
   /** `files` read under `schema` with reader `options`; each row's
-    * [[SeqCol]] is its file's paired number. */
+    * [[SeqCol]] is its file's paired number (a replay index when the
+    * read is merge-on-read, see [[EqDeletes]]). */
   def readSeq(spark: SparkSession, schema: StructType,
       files: Seq[(DataFileEntry, Long)],
       options: Map[String, String] = Map.empty): DataFrame = {

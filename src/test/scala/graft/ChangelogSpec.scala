@@ -202,6 +202,28 @@ class ChangelogSpec extends SparkSpec {
       (ChangeDelete, 13L, 3)) ++
       (13 to 14).map(i => (ChangeInsert, i.toLong + 1L, i))
     assert(got == exp.sorted)
+    // the lineage twin stamps commit ids and row ids from each file's
+    // log position, under a warehouse path a URI would percent-encode
+    val wh = Files.createTempDirectory("graft cl runs a=b").toString
+    assert(wh.contains(" ") && wh.contains("="))
+    val lt = LakehouseTable.create(new Snaplog(wh), spark, "ns", "linruns",
+      fixture(1).schema, properties = Map(Snaplog.RowLineageProp -> "true"))
+    (1 to 12).foreach(i => lt.append(fixture(i)))
+    lt.deleteEq("id", Seq(3))
+    (13 to 14).foreach(i => lt.append(fixture(i)))
+    val lin = lt.scanChangesLineage(0L)
+      .select(col(ChangeTypeCol), col(ChangeSnapshotCol), col("id"),
+        col("_row_id"), col("_last_updated_sequence_number"))
+      .collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getInt(2),
+        r.getLong(3), r.getLong(4)))
+      .toSeq.sorted
+    // one row per append: row id = rows before it, sequence = its commit
+    val linExp = ((1 to 12).map(i =>
+        (ChangeInsert, i.toLong, i, i - 1L, i.toLong)) :+
+      ((ChangeDelete, 13L, 3, 2L, 3L))) ++
+      (13 to 14).map(i => (ChangeInsert, i + 1L, i, i - 1L, i + 1L))
+    assert(lin == linExp.sorted, lin.toString)
   }
 
   test("changelog spanning a type widening emits consistently-wide rows") {

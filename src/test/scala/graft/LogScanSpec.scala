@@ -19,8 +19,9 @@ import graft.table.{EqDeletes, FileStats, LakehouseTable, LogScan}
 /** Scans planned from the log ([[LogScan]]): a merge-on-read read plans
   * the same scans at any equality-delete depth, building a read starts
   * no Spark job (no listing, no existence check, no schema inference),
-  * and the scanned path text is exactly what a listing reports — the
-  * text position vectors record and match on. */
+  * the scanned path text is exactly what a listing reports, and a
+  * position vector subtracts its rows whatever equivalent path form it
+  * records its data file in. */
 class LogScanSpec extends SparkSpec {
   import spark.implicits._
 
@@ -72,8 +73,9 @@ class LogScanSpec extends SparkSpec {
     * SQL read plan the same scans at both, building either starts no
     * job, SQL planning runs the same jobs at both, and the rows are
     * last-writer-wins. Then a position-vector layer over the equality
-    * deletes: both reads, and a SQL UPDATE rewriting files under both
-    * tiers, still match the model. */
+    * deletes, and two hand-written vectors recording their data files
+    * as `file:///…` and as a bare path: both reads, and a SQL UPDATE
+    * rewriting files under both tiers, still match the model. */
   private def depthInvariant(cat: Catalog, sqlName: String): Unit = {
     val tbl = LakehouseTable.create(cat, spark, "ns", "t", schema)
     val model = scala.collection.mutable.Map.empty[Long, String]
@@ -109,6 +111,28 @@ class LogScanSpec extends SparkSpec {
     tbl.deleteMor(col("id") === 7L || col("id") === 25L)
     model --= Seq(7L, 25L)
     assert(cat.liveDeleteFiles("ns", "t").exists(EqDeletes.isPos))
+    probe()
+    // a vector may record its data file in any equivalent path form:
+    // one as `file:///…`, one as the bare path, both subtract
+    val live = cat.liveFiles("ns", "t")
+    def recorded(id: Long, form: String => String): Unit = {
+      val (path, pos) = spark.read.schema(schema).parquet(live.map(_.path): _*)
+        .filter(col("id") === id && col("v") === model(id))
+        .select(col("_metadata.file_path"), col("_metadata.row_index"))
+        .as[(String, Long)].collect().toSeq match {
+          case Seq(one) => one
+          case other => fail(s"id $id visible in ${other.size} files")
+        }
+      val vecDir = cat.dataDir("ns", "t").resolve(s"hand-vector-$id").toString
+      Seq((form(FileStats.normalizePath(path)), pos)).toDF("file_path", "row_index")
+        .coalesce(1).write.parquet(vecDir)
+      cat.commit("ns", "t", Snaplog.OpMorDelete,
+        FileStats.listParquet(vecDir).map(p =>
+          FileStats.stat(spark, p, Map.empty).copy(deleteFile = Some(true))))
+      model -= id
+    }
+    recorded(5L, bare => s"file://$bare")
+    recorded(30L, identity)
     probe()
     spark.sql(s"UPDATE $sqlName.ns.t SET v = concat(v, '-u') WHERE id IN (1, 3, 20)")
     model ++= Seq(1L, 3L, 20L).map(k => k -> s"${model(k)}-u")
@@ -175,9 +199,21 @@ class LogScanSpec extends SparkSpec {
     cat.commit("ns", "p", Snaplog.OpMorDelete,
       FileStats.listParquet(vecDir).map(p =>
         FileStats.stat(spark, p, Map.empty).copy(deleteFile = Some(true))))
+    // one recording the bare path, with its literal space, as well
+    val bareDir = s"$wh/bare-vector"
+    listed.filter(col("id") === 7L)
+      .select(col("_metadata.file_path"), col("_metadata.row_index"))
+      .as[(String, Long)].collect().toSeq
+      .map { case (p, pos) => (FileStats.normalizePath(p), pos) }
+      .toDF("file_path", "row_index").coalesce(1).write.parquet(bareDir)
+    assert(spark.read.parquet(bareDir).as[(String, Long)].head()._1.contains(" "))
+    cat.commit("ns", "p", Snaplog.OpMorDelete,
+      FileStats.listParquet(bareDir).map(p =>
+        FileStats.stat(spark, p, Map.empty).copy(deleteFile = Some(true))))
     // and one written by deleteMor subtracts exactly its rows
     tbl.deleteMor(col("id") % 3 === 0)
-    val expect = (1L to 20L).filterNot(i => i == 2L || i == 15L || i % 3 == 0)
+    val expect = (1L to 20L)
+      .filterNot(i => i == 2L || i == 7L || i == 15L || i % 3 == 0)
       .map(i => (i, s"v$i"))
     assert(rows(tbl.scan()) == expect)
     registerSql("glogpath", wh)
