@@ -91,13 +91,18 @@ object StreamingIngest {
     *
     * Maintenance cadence: each micro-batch lands as a delta-sized
     * merge-on-read commit ([[LakehouseTable.mergeDelta]]) carrying one
-    * equality-delete key file, and scans pay one broadcast anti-join
-    * per OUTSTANDING key file — so a long-running sink should
-    * consolidate periodically. `consolidateAfterDeletes = N` (0 = off)
+    * equality-delete key file and, on a partitioned table, one data
+    * file per partition value the batch touches (hash-clustered unless
+    * the table sets `write.distribution-mode`), so the files every read
+    * and consolidation opens grow by that count per trigger, not by
+    * write tasks × values. Scans read every OUTSTANDING key file (one
+    * key scan and one broadcast join per key-column set) besides the
+    * data files — so a long-running sink should consolidate
+    * periodically. `consolidateAfterDeletes = N` (0 = off)
     * compacts the table whenever the outstanding delete-entry count
     * reaches N: the rewrite materializes every subtraction, retires
-    * the key files, and resets the replay window, bounding read-side
-    * anti-join depth to N at any stream length. Compaction is a
+    * the key files, and resets the replay window, bounding the key
+    * files a read scans to N at any stream length. Compaction is a
     * `replace` (content no-op for the changelog), but like any reset
     * commit it breaks OTHER streams tailing this table — size N to
     * your read topology (Iceberg streaming upserts carry the same

@@ -189,8 +189,12 @@ object EqDeletes {
   }
 
   /** Recorded vector paths in one form ([[FileStats.normalizePath]]),
-    * the definition touch attribution ([[vectorPaths]]) uses too. */
-  private val normalized = udf((p: String) => FileStats.normalizePath(p))
+    * the definition touch attribution ([[vectorPaths]]) uses too.
+    * Non-nullable (a recorded path is never null): otherwise Spark
+    * infers `isnotnull(UDF(file_path))` from the join on its result
+    * and evaluates the normalization twice per vector row. */
+  private val normalized =
+    udf((p: String) => FileStats.normalizePath(p)).asNonNullable()
 
   /** `scanned` (carrying `__scan_seq` / `__scan_pos`, the file's index
     * in `ordered` and the row's position) joined with `joinType`

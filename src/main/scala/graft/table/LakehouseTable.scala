@@ -874,8 +874,9 @@ final class LakehouseTable(
   /** Shared delete+insert → update-image pairing over a change stream
     * (`dataCols` = the payload columns the images carry; `cols` = the
     * pairing key). One full-outer join on (commit, key) — change-set-
-    * sized, never table-sized. */
-  private def pairChanges(changes: DataFrame, cols: Seq[String],
+    * sized, never table-sized. The input carries only `insert` and
+    * `delete` rows; any other change type fails the read. */
+  private[graft] def pairChanges(changes: DataFrame, cols: Seq[String],
       dataCols: Seq[String], label: String): DataFrame = {
     // both join sides derive from this one plan — persist so the
     // changelog (per-commit scans, anti/semi joins) executes once, not
@@ -888,6 +889,12 @@ final class LakehouseTable(
     // a new keyed-changelog read evicts the previous read's cache
     // (the evicted plan stays correct — it just recomputes).
     val ch = changes
+      .withColumn(ChangeTypeCol,
+        when(col(ChangeTypeCol).isin(ChangeInsert, ChangeDelete),
+          col(ChangeTypeCol))
+          .otherwise(raise_error(concat(lit(s"$label: change type '"),
+            coalesce(col(ChangeTypeCol), lit("null")),
+            lit(s"' is neither '$ChangeInsert' nor '$ChangeDelete'")))))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     locally {
       val key = s"${System.identityHashCode(catalog)}:$namespace.$name"
@@ -1420,6 +1427,16 @@ final class LakehouseTable(
     * ([[EqDeletes]]); [[compact]]/[[rewriteDataFiles]]
     * materializes and retires them on the usual maintenance cadence.
     *
+    * On a partitioned table the batch's data files are hash-clustered
+    * by partition value (`write.distribution-mode=hash`, the layout
+    * Iceberg's Spark writer uses under that mode) unless the table
+    * sets the property: ONE file per partition value per commit,
+    * whatever task split the caller's dedup shuffle left, so a stream
+    * of small triggers does not leave tasks × values footer-dominated
+    * files for every later read and compaction to open. The batch is
+    * delta-sized, so the extra shuffle is too. An explicit
+    * `write.distribution-mode` (`none` included) still decides.
+    *
     * `rows` must be batch-deduplicated to one row per key tuple
     * (callers: [[graft.pipeline.Upsert.dedupIncoming]]); null-keyed
     * rows append WITHOUT deleting anything (equality is null-rejecting
@@ -1475,9 +1492,9 @@ final class LakehouseTable(
         meta.properties.get(Snaplog.RowLineageProp).contains("true") &&
           delFiles.nonEmpty
       val dataFiles =
-        if (!lineageMode) stageDataFiles(Seq(batch))
+        if (!lineageMode) stageDataFiles(Seq(batch), defaultDistribution = "hash")
         else stageDataFiles(Seq(carryMergeRowIds(names, batch, delFiles)),
-          carriedRowId = true)
+          carriedRowId = true, defaultDistribution = "hash")
       catalog.commit(namespace, name, Snaplog.OpEqDelete,
         delFiles ++ dataFiles,
         summary ++ Map("equality-key" -> encodedKey,
@@ -2973,10 +2990,12 @@ final class LakehouseTable(
     * the outputs. Shared by [[writeCommit]] and [[mergeDelta]] (which
     * commits data files together with a delete entry).
     * `withLineageCols` materializes the row-lineage columns and marks
-    * the returned entries `lineageInFile`. */
+    * the returned entries `lineageInFile`. `defaultDistribution` is the
+    * `write.distribution-mode` a table without the property gets. */
   private def stageDataFiles(dfs: Seq[DataFrame],
       withLineageCols: Boolean = false,
-      carriedRowId: Boolean = false): Seq[DataFileEntry] = {
+      carriedRowId: Boolean = false,
+      defaultDistribution: String = "none"): Seq[DataFileEntry] = {
     val m = meta
     // stamp registry field ids into every managed write (files carry ids
     // from birth, so a later rename/drop finds id-bearing files); reads
@@ -3055,14 +3074,18 @@ final class LakehouseTable(
     // task (one file per partition value per commit — at 1000 input
     // tasks × 100 partitions the difference between 100 files and
     // 100,000), `range` range-partitions by (partition, sort key) for
-    // globally disjoint bounds across files, `none` (default) keeps the
-    // caller's partitioning — existing layouts and file-count contracts
-    // stand. Transform-partitioned writes ALWAYS cluster at least by
+    // globally disjoint bounds across files, `none` keeps the caller's
+    // partitioning — existing layouts and file-count contracts stand.
+    // Without the property the mode is `defaultDistribution`: `none`
+    // for appends, overwrites and rewrites, `hash` for [[mergeDelta]],
+    // whose batch is delta-sized (one small shuffle buys one file per
+    // partition value instead of one per task and value on every
+    // trigger). Transform-partitioned writes ALWAYS cluster at least by
     // the layout expressions: a days×bucket spec crossed with N input
     // tasks would otherwise fan out to N × |dirs| small files (and as
     // many log entries) per commit.
     val distMode = m.properties
-      .getOrElse("write.distribution-mode", "none")
+      .getOrElse("write.distribution-mode", defaultDistribution)
       .toLowerCase(java.util.Locale.ROOT)
     require(Set("none", "hash", "range")(distMode),
       s"write.distribution-mode '$distMode' — expected none|hash|range")
@@ -3091,7 +3114,7 @@ final class LakehouseTable(
           if (partFields.forall(_.isInstanceOf[IdentityField])) normalized
           else normalized.repartition(writeTasks, layoutExprs: _*)
       }
-    // sort application: an explicit distribution mode (or a transform
+    // sort application: a hash or range distribution (or a transform
     // layout) already owns the clustering, so the sort applies within
     // those partitions only; identity tables under the default mode
     // keep the original whole-write range shuffle on the sort key

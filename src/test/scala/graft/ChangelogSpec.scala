@@ -192,6 +192,25 @@ class ChangelogSpec extends SparkSpec {
     assert(got == Seq(("insert", 1), ("insert", 2)))
   }
 
+  test("keyed pairing refuses a change type other than insert or delete") {
+    val t = freshTable("keyedtype")
+    t.append(fixture(1, 2)) // 1
+    val ok = t.scanChanges(0L)
+    val cols = fixture(1).columns.toSeq
+    assert(t.pairChanges(ok, Seq("id"), cols, "probe").count() == 2)
+    // one row typed as an image the pairing itself emits: it must not
+    // fold into the insert side (nor pass through when its key is null)
+    val retyped = ok.withColumn(ChangeTypeCol,
+      when(col("id") === 2, lit("update_preimage")).otherwise(col(ChangeTypeCol)))
+    Seq(retyped, retyped.withColumn("id", lit(null).cast("int"))).foreach { bad =>
+      val err = intercept[Exception](
+        t.pairChanges(bad, Seq("id"), cols, "probe").collect())
+      val msgs = Iterator.iterate[Throwable](err)(_.getCause)
+        .takeWhile(_ != null).map(e => String.valueOf(e.getMessage)).mkString("\n")
+      assert(msgs.contains("probe: change type 'update_preimage'"), msgs)
+    }
+  }
+
   test("long append runs collapse into one stamped scan, ids exact") {
     val t = freshTable("runs")
     (1 to 12).foreach(i => t.append(fixture(i))) // >= 8: batched path

@@ -8,6 +8,7 @@ import org.apache.spark.SpecBus
 import org.apache.spark.rdd.RDD
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.ScalaUDF
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.datasources.FileScanRDD
 import org.apache.spark.sql.functions._
@@ -216,6 +217,11 @@ class LogScanSpec extends SparkSpec {
       .filterNot(i => i == 2L || i == 7L || i == 15L || i % 3 == 0)
       .map(i => (i, s"v$i"))
     assert(rows(tbl.scan()) == expect)
+    // the vector build evaluates the path normalizer once per vector
+    // row: no inferred `isnotnull(UDF(file_path))` filter beside it
+    val udfs = tbl.scan().queryExecution.sparkPlan.flatMap(
+      _.expressions.flatMap(_.collect { case u: ScalaUDF => u }))
+    assert(udfs.size == 1, s"vector build plans ${udfs.size} normalizer calls")
     registerSql("glogpath", wh)
     assert(rows(spark.table("glogpath.ns.p")) == expect)
     // a copy-on-write delete attributes its matches to the right files

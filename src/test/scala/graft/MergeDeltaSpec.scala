@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.catalog.Snaplog
+import graft.catalog.{Catalog, Snaplog, Snapshot}
 import graft.pipeline.Upsert
 import graft.table.LakehouseTable
 
@@ -25,6 +25,49 @@ class MergeDeltaSpec extends SparkSpec {
     (new Snaplog(wh),
       LakehouseTable.create(new Snaplog(wh), spark, "ns", name, fixture().schema))
   }
+
+  /** 60 rows, then an upsert of 30 (15 updated keys, 15 new) over
+    * partition values A, B and C, fed in 4 tasks with AQE off, as a
+    * streaming micro-batch runs it: the dedup shuffle's 4-task split
+    * reaches the write uncoalesced. `beforeMerge` runs between the
+    * two. Checks the visible rows and returns the merge commit. */
+  private def clusteredMerge(tbl: LakehouseTable,
+      beforeMerge: () => Unit = () => ()): Snapshot = {
+    def rows(ids: Range, tag: Int) =
+      ids.map(i => (i, Seq("A", "B", "C")(i % 3), i * 0.5f, i * 10 + tag))
+        .toDF("id", "group", "value1", "value2")
+    tbl.append(rows(0 until 60, 0))
+    beforeMerge()
+    val aqe = "spark.sql.adaptive.enabled"
+    val prev = spark.conf.getOption(aqe)
+    spark.conf.set(aqe, "false")
+    val snap =
+      try Upsert.upsertTable(tbl, rows(45 until 75, 1).repartition(4), Seq("id"))
+      finally prev.fold(spark.conf.unset(aqe))(spark.conf.set(aqe, _))
+    val got = tbl.scan().select("id", "value2").collect()
+      .map(r => r.getInt(0) -> r.getInt(1)).sorted.toSeq
+    assert(got == (0 until 45).map(i => i -> i * 10) ++
+      (45 until 75).map(i => i -> (i * 10 + 1)))
+    assert(snap.summary("merge-rows") == "30")
+    snap
+  }
+
+  /** The merge commit wrote exactly one data file per partition value. */
+  private def assertOneFilePerValue(snap: Snapshot): Unit = {
+    val data = snap.files.filterNot(_.deleteFile.contains(true))
+    assert(snap.summary("merge-files") == "3" && data.size == 3,
+      s"merge wrote ${data.size} files: ${data.map(_.partitionValues)}")
+    assert(data.flatMap(_.partitionValues.get("group")).sorted ==
+      Seq("A", "B", "C"))
+  }
+
+  private def partitioned(cat: Catalog, name: String,
+      properties: Map[String, String] = Map.empty) =
+    LakehouseTable.create(cat, spark, "ns", name, fixture().schema,
+      Seq("group"), properties)
+
+  private def snaplog(name: String) =
+    new Snaplog(Files.createTempDirectory(s"graft-md-$name").toString)
 
   test("upsertTable commits batch-sized: prior data files carried untouched") {
     val (cat, tbl) = fresh("size")
@@ -178,6 +221,18 @@ class MergeDeltaSpec extends SparkSpec {
     assert(got == Seq((1, 10), (2, 222)))
   }
 
+  test("a merge writes one file per partition value unless the table says none") {
+    val cat = snaplog("clus")
+    assertOneFilePerValue(clusteredMerge(partitioned(cat, "clus")))
+    // an explicit write.distribution-mode=none keeps the task fan-out
+    val snap = clusteredMerge(partitioned(cat, "clusnone",
+      Map("write.distribution-mode" -> "none")))
+    val data = snap.files.filterNot(_.deleteFile.contains(true))
+    assert(data.forall(_.partitionValues.contains("group")))
+    assert(snap.summary("merge-files").toInt == data.size && data.size > 3,
+      s"none must keep the 4-task fan-out over 3 values, got ${data.size} files")
+  }
+
   test("composite-key mergeDelta: tuple semantics end-to-end") {
     val wh = Files.createTempDirectory("graft-md-comp").toString
     val cat = new Snaplog(wh)
@@ -324,6 +379,8 @@ class MergeDeltaSpec extends SparkSpec {
     assert(tbl.scan().orderBy("id").collect()
       .map(r => (r.getInt(0), r.getInt(3))).toSeq ==
       Seq((1, 10), (2, 222), (3, 30), (4, 40), (5, 50)))
+    // a partitioned merge writes one file per partition value here too
+    assertOneFilePerValue(clusteredMerge(partitioned(cat, "mjp")))
   }
 
   test("per-batch commit cost stays batch-sized across a micro-batch sequence") {
@@ -362,11 +419,11 @@ class MergeDeltaSpec extends SparkSpec {
   // the written image (materialized nullable column under the reserved
   // field id); inserts stay null and draw fresh commit-time ids.
 
-  private def freshLineage(name: String) = {
+  private def freshLineage(name: String, partitionColumns: Seq[String] = Seq.empty) = {
     val wh = Files.createTempDirectory(s"graft-md-$name").toString
     val cat = new Snaplog(wh)
     (cat, LakehouseTable.create(cat, spark, "ns", name, fixture().schema,
-      properties = Map(Snaplog.RowLineageProp -> "true")))
+      partitionColumns, Map(Snaplog.RowLineageProp -> "true")))
   }
 
   private def lineageOf(tbl: LakehouseTable) = tbl.scanLineage()
@@ -398,6 +455,21 @@ class MergeDeltaSpec extends SparkSpec {
       "visible row ids must stay unique")
     // the carry never leaks into the plain read surface
     assert(!tbl.scan().columns.contains("_row_id"))
+  }
+
+  test("a lineage merge writes one file per partition value, ids carried") {
+    val (_, tbl) = freshLineage("linclus", Seq("group"))
+    var before = Map.empty[Int, Long]
+    val snap = clusteredMerge(tbl,
+      () => before = lineageOf(tbl).map(x => x._1 -> x._2).toMap)
+    assertOneFilePerValue(snap)
+    val after = lineageOf(tbl).map(x => x._1 -> x._2).toMap
+    assert(before.size == 60 && after.size == 75)
+    assert(after.values.toSeq.distinct.size == 75,
+      "visible row ids must stay unique")
+    // untouched and updated keys keep their ids; new keys draw fresh ones
+    (0 until 60).foreach(k => assert(after(k) == before(k), s"key $k"))
+    assert((60 until 75).forall(k => !before.values.toSet(after(k))))
   }
 
   test("lineage applyChanges: upserts carry identity, deletes end it") {
