@@ -19,7 +19,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.catalog.{Catalog, DataFileEntry, JdbcCatalog, Snaplog}
-import graft.table.{FileStats, LakehouseTable, ManagedParquetFormat}
+import graft.table.{FilePrune, FileStats, LakehouseTable, ManagedParquetFormat, PruneScope}
 
 /** Snaplog-backed DSv2 table. Scanning delegates to Spark's vectorized
   * parquet DSv2, but the FILE LIST is pruned first from log metadata —
@@ -495,26 +495,20 @@ private[sql] final class GraftRowLevelOperation(
   private val scanFilters =
     new java.util.concurrent.ConcurrentHashMap[AnyRef, Seq[Expression]]()
 
-  /** Lowercase column names whose stats were poisoned by an evolution
-    * rebinding (drop+re-add / rename onto a freed name): group filters
-    * touching them must not prune — old files' name-keyed bounds
-    * describe a different column, and a wrongly-carried file is a
-    * silently-lost UPDATE. */
-  private val statsUnsafe: Set[String] = graft.types.FieldIds.namesSet(
-    tableProps, graft.types.FieldIds.StatsUnsafeProp)
+  /** The table's pruning scope. Its stats-unsafe names (rebound by an
+    * evolution: drop+re-add / rename onto a freed name) stop group
+    * filters from pruning — old files' name-keyed bounds describe a
+    * different column, and a wrongly-carried file is a silently-lost
+    * UPDATE. */
+  private val scope = PruneScope(partitionCols, graft.types.FieldIds.namesSet(
+    tableProps, graft.types.FieldIds.StatsUnsafeProp))
 
   /** Data files this branch's group filters cannot prove rowless —
     * plus, under outstanding MOR vectors, every vector-touched file:
     * the COW commit is a RESET that retires vectors, so a touched file
     * must be rewritten (carrying it would resurrect its deleted rows). */
   private def affectedFiles(filters: Seq[Expression]): Seq[DataFileEntry] = {
-    val usable = filters.filter(_.references.forall(a =>
-      !statsUnsafe(a.name.toLowerCase(java.util.Locale.ROOT))))
-    val tfields = graft.table.PartitionTransforms.parseAll(partitionCols)
-      .filterNot(_.isInstanceOf[graft.table.IdentityField])
-    val base = files.filter(f => usable.forall(e =>
-      FilePrune.mayMatch(f, e) &&
-        graft.table.PartitionTransforms.mayMatch(f, e, tfields)))
+    val base = files.filter(FilePrune.keep(filters, scope))
     if (deleteFiles.isEmpty) base
     else {
       val keep = base.map(_.path).toSet
@@ -874,24 +868,24 @@ private[sql] final class GraftScanBuilder(
   private var required: StructType = tableSchema
   private var pushedAgg: Option[Aggregation] = None
 
-  /** Non-identity transform fields of the partition spec — consulted as
-    * an EXTRA conservative pruning pass (hidden partitioning: the
-    * pushed predicate names the source column, the file records the
-    * transformed value). Empty for identity-only tables. */
+  /** Non-identity transform fields of the partition spec — what
+    * transform-exact consumption (hidden partitioning: the pushed
+    * predicate names the source column, the file records the
+    * transformed value) is judged against. Empty for identity-only
+    * tables. */
   private lazy val transformFields: Seq[graft.table.PartField] =
     graft.table.PartitionTransforms.parseAll(partitionCols)
       .filterNot(_.isInstanceOf[graft.table.IdentityField])
 
-  // memoized: the full prune pass is O(files x filters) driver work and
-  // build() consults it up to three times per plan (pushFilters gate,
-  // branch guard, branch body); exprs are final after pushFilters, which
-  // invalidates the memo on (re-)push
+  private val scope = PruneScope(partitionCols, statsUnsafe)
+
+  // memoized: the full prune pass is O(files x filters) driver work
+  // consulted several times per plan (pushFilters gate, metadata
+  // aggregates, build's branch guard and body); exprs are final after
+  // pushFilters, which invalidates the memo on (re-)push
   private var keptFilesMemo: Seq[DataFileEntry] = null
   private def keptFiles: Seq[DataFileEntry] = {
-    if (keptFilesMemo == null)
-      keptFilesMemo = files.filter(f => prunable.forall(e =>
-        FilePrune.mayMatch(f, e) &&
-          graft.table.PartitionTransforms.mayMatch(f, e, transformFields)))
+    if (keptFilesMemo == null) keptFilesMemo = files.filter(FilePrune.keep(exprs, scope))
     keptFilesMemo
   }
 
@@ -1039,22 +1033,15 @@ private[sql] final class GraftScanBuilder(
       case _ => None
     }
 
-  /** Files that answer the aggregate: all of them when no filters are
-    * pushed, the exactly-pruned subset under partition-exact /
-    * transform-exact filters (both pruning passes must apply — the
-    * transform pass is what drops out-of-window files). */
-  private def aggFiles: Seq[DataFileEntry] =
-    files.filter(f => exprs.forall(e =>
-      FilePrune.mayMatch(f, e) &&
-        graft.table.PartitionTransforms.mayMatch(f, e, transformFields)))
-
   private def canAnswerFromMetadata(agg: Aggregation): Boolean =
       exprs.forall(e =>
         FilePrune.partitionExact(e, partitionCols.toSet, files) ||
           graft.table.PartitionTransforms.rangeExact(e, transformFields, files)) &&
       agg.groupByExpressions.isEmpty &&
       agg.aggregateExpressions.nonEmpty && {
-        val answering = aggFiles
+        // under partition-exact / transform-exact filters the kept
+        // files hold exactly the matching rows
+        val answering = keptFiles
         // logged row counts and bounds ignore MOR-deleted rows — but a
         // file NO outstanding delete can touch (touchedByDeletes) keeps
         // them exact, so the claim narrows to provably-untouched
@@ -1094,7 +1081,7 @@ private[sql] final class GraftScanBuilder(
 
   private def metadataAggScan(agg: Aggregation): Scan = {
     import org.apache.spark.sql.types._
-    val answering = aggFiles
+    val answering = keptFiles
     val (values, fields) = agg.aggregateExpressions.zipWithIndex.map {
       case (_: CountStar, i) =>
         (answering.map(_.rowCount).sum: Any,
@@ -1135,15 +1122,6 @@ private[sql] final class GraftScanBuilder(
     case (x: Long, y: Long) => x < y
     case _ => false
   }
-
-  /** Predicates usable for FILE PRUNING: every referenced column's
-    * stats must be trustworthy (partition values always are — partition
-    * columns cannot evolve). Unsafe predicates still row-filter
-    * (residual); they just stop pruning. */
-  private def prunable: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =
-    if (statsUnsafe.isEmpty) exprs
-    else exprs.filter(_.references.forall(a =>
-      !statsUnsafe(a.name.toLowerCase(java.util.Locale.ROOT))))
 
   override def build(): Scan = pushedAgg match {
     case Some(agg) => metadataAggScan(agg)
@@ -1226,245 +1204,6 @@ private[sql] final class MetadataAggScan(
   override def readSchema(): StructType = schema
   override def rows(): Array[org.apache.spark.sql.catalyst.InternalRow] = Array(row)
   override def description(): String = s"GraftMetadataAgg${schema.fieldNames.mkString("[", ",", "]")}"
-}
-
-/** Conservative may-match test of a pushed catalyst predicate against
-  * one file's log metadata. `true` always safe (file is read, rows
-  * re-filtered by the residual); `false` only when partition value or
-  * [min,max] bounds PROVE no row can match. Mirrors
-  * LakehouseTable.selectFiles semantics. */
-private[sql] object FilePrune {
-  import org.apache.spark.sql.catalyst.expressions.{And => CAnd, AttributeReference, EqualTo => CEq, Expression, GreaterThan => CGt, GreaterThanOrEqual => CGte, In => CIn, IsNotNull => CIsNotNull, IsNull => CIsNull, LessThan => CLt, LessThanOrEqual => CLte, Literal, Or => COr}
-
-
-  /** Is `e` a PARTITION-EXACT predicate — one whose per-file may-match
-    * answer is exact, not conservative? True only for predicate trees
-    * over identity-partition columns whose value every file records:
-    * identity partitioning means a file holds exactly the rows of its
-    * recorded value, so pruning by it selects exactly the matching
-    * rows. This is what licenses answering aggregates from the pruned
-    * file set.
-    *
-    * Literal-type gate: only values whose EXTERNAL text form
-    * round-trips exactly through the (unescaped) directory-name
-    * encoding qualify — strings and integrals. Dates / timestamps /
-    * floats have catalyst-internal forms (days, micros, IEEE bits)
-    * that do not textually match the stored segment, so predicates on
-    * them are never consumed (they still prune conservatively through
-    * column stats, where a miss only costs an extra file read).
-    * Range predicates (`>`, `BETWEEN`, …) qualify only for INTEGRAL
-    * partition values, where the numeric in-range test is exact. */
-  def partitionExact(e: Expression, partCols: Set[String],
-      files: Seq[DataFileEntry]): Boolean = {
-    def exactCol(c: String): Boolean =
-      partCols.contains(c) && files.forall(_.partitionValues.contains(c))
-    def exactLit(l: Literal): Boolean = l.dataType match {
-      case org.apache.spark.sql.types.StringType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.LongType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.ByteType => true
-      case _ => false
-    }
-    def integralLit(l: Literal): Boolean = l.dataType match {
-      case org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.LongType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.ByteType => true
-      case _ => false
-    }
-    def rangeExact(a: AttributeReference, l: Literal): Boolean =
-      exactCol(a.name) && integralLit(l) &&
-        files.forall(f => f.partitionValues.get(a.name)
-          .forall(s => s == Snaplog.HiveDefaultPartition ||
-            scala.util.Try(s.toLong).isSuccess))
-    e match {
-      case CEq(a: AttributeReference, l: Literal) => exactCol(a.name) && exactLit(l)
-      case CEq(l: Literal, a: AttributeReference) => exactCol(a.name) && exactLit(l)
-      case CIn(a: AttributeReference, vs) if vs.forall(_.isInstanceOf[Literal]) =>
-        exactCol(a.name) && vs.forall(v => exactLit(v.asInstanceOf[Literal]))
-      case CIsNotNull(a: AttributeReference) => exactCol(a.name)
-      case CGt(a: AttributeReference, l: Literal) => rangeExact(a, l)
-      case CGt(l: Literal, a: AttributeReference) => rangeExact(a, l)
-      case CGte(a: AttributeReference, l: Literal) => rangeExact(a, l)
-      case CGte(l: Literal, a: AttributeReference) => rangeExact(a, l)
-      case CLt(a: AttributeReference, l: Literal) => rangeExact(a, l)
-      case CLt(l: Literal, a: AttributeReference) => rangeExact(a, l)
-      case CLte(a: AttributeReference, l: Literal) => rangeExact(a, l)
-      case CLte(l: Literal, a: AttributeReference) => rangeExact(a, l)
-      case CAnd(l, r) =>
-        partitionExact(l, partCols, files) && partitionExact(r, partCols, files)
-      case COr(l, r) =>
-        partitionExact(l, partCols, files) && partitionExact(r, partCols, files)
-      case _ => false
-    }
-  }
-
-  /** Literal's internal value as a plain JVM value (UTF8String → String). */
-  private def litVal(l: Literal): Any = l.value match {
-    case null => null
-    case u: org.apache.spark.unsafe.types.UTF8String => u.toString
-    case other => other
-  }
-
-  /** Column reference usable as a stat/partition key: a top-level
-    * attribute by name, or a struct-LEAF extraction chain
-    * (`props.x`, any depth) by its dot path — exactly the key the
-    * stat writer records for struct leaves ([[FileStats.stat]]).
-    * Map/array extractions don't extract (no per-leaf file bounds
-    * exist for them). A leaf path colliding with a literal dotted
-    * flat name is fine to EXTRACT — the writer refused to record the
-    * ambiguous key, so lookups miss and nothing prunes. */
-  private object RefName {
-    def unapply(e: Expression): Option[String] = e match {
-      case a: AttributeReference => Some(a.name)
-      case g: org.apache.spark.sql.catalyst.expressions.GetStructField =>
-        unapply(g.child).map(p => s"$p.${g.extractFieldName}")
-      case _ => None
-    }
-  }
-
-  def mayMatch(f: DataFileEntry, e: Expression): Boolean = if (f.rowCount == 0L) false else e match {
-    case CEq(RefName(c), l: Literal) => eqAllows(f, c, litVal(l))
-    case CEq(l: Literal, RefName(c)) => eqAllows(f, c, litVal(l))
-    case CIn(RefName(c), vs) if vs.forall(_.isInstanceOf[Literal]) =>
-      vs.exists(v => eqAllows(f, c, litVal(v.asInstanceOf[Literal])))
-    // Range predicates consult the recorded identity-partition value
-    // FIRST (exact, strictness-aware — required for partition-exact
-    // range aggregates), then fall back to conservative [min,max]
-    // bounds. Struct-leaf refs never have a partition value, so they
-    // fall straight through to their recorded leaf bounds.
-    case CGt(RefName(c), l: Literal) =>
-      partitionCmp(f, c, litVal(l))(_ > _)
-        .getOrElse(boundsAllow(f, c, lo = Some(litVal(l)), hi = None))
-    case CGte(RefName(c), l: Literal) =>
-      partitionCmp(f, c, litVal(l))(_ >= _)
-        .getOrElse(boundsAllow(f, c, lo = Some(litVal(l)), hi = None))
-    case CLt(RefName(c), l: Literal) =>
-      partitionCmp(f, c, litVal(l))(_ < _)
-        .getOrElse(boundsAllow(f, c, lo = None, hi = Some(litVal(l))))
-    case CLte(RefName(c), l: Literal) =>
-      partitionCmp(f, c, litVal(l))(_ <= _)
-        .getOrElse(boundsAllow(f, c, lo = None, hi = Some(litVal(l))))
-    // mirrored literal-first comparisons flip the bound
-    case CGt(l: Literal, RefName(c)) =>
-      partitionCmp(f, c, litVal(l))(_ < _)
-        .getOrElse(boundsAllow(f, c, lo = None, hi = Some(litVal(l))))
-    case CGte(l: Literal, RefName(c)) =>
-      partitionCmp(f, c, litVal(l))(_ <= _)
-        .getOrElse(boundsAllow(f, c, lo = None, hi = Some(litVal(l))))
-    case CLt(l: Literal, RefName(c)) =>
-      partitionCmp(f, c, litVal(l))(_ > _)
-        .getOrElse(boundsAllow(f, c, lo = Some(litVal(l)), hi = None))
-    case CLte(l: Literal, RefName(c)) =>
-      partitionCmp(f, c, litVal(l))(_ >= _)
-        .getOrElse(boundsAllow(f, c, lo = Some(litVal(l)), hi = None))
-    case CAnd(l, r) => mayMatch(f, l) && mayMatch(f, r)
-    case COr(l, r) => mayMatch(f, l) || mayMatch(f, r)
-    // a file recorded under the null-partition sentinel holds ONLY
-    // null values for that column — IsNotNull excludes it exactly;
-    // a recorded null count equal to the row count proves the same
-    // (for a struct LEAF the recorded count includes rows where an
-    // ancestor struct is null — parquet definition levels — so
-    // count==rows still proves no row satisfies IS NOT NULL)
-    case CIsNotNull(RefName(c)) =>
-      !f.partitionValues.get(c).contains(Snaplog.HiveDefaultPartition) &&
-        !f.nullCounts.flatMap(_.get(c)).contains(f.rowCount)
-    // IS NULL prunes a file PROVEN all-non-null: identity partition
-    // value recorded under a real (non-sentinel) value, or a recorded
-    // null count of zero
-    case CIsNull(RefName(c)) =>
-      !f.partitionValues.get(c).exists(_ != Snaplog.HiveDefaultPartition) &&
-        !f.nullCounts.flatMap(_.get(c)).contains(0L)
-    case _ => true // unknown / null-semantics predicates: never prune
-  }
-
-  private def eqAllows(f: DataFileEntry, c: String, v: Any): Boolean =
-    partitionAllows(f, c, v) && boundsAllow(f, c, Some(v), Some(v))
-
-  /** Identity-partition equality: prune only when the file RECORDS a
-    * value for the column, the literal's external text form round-trips
-    * the stored (unescaped) segment exactly — strings and integrals —
-    * and the two differ. Date/timestamp/float literals arrive as
-    * catalyst-INTERNAL values (days, micros, IEEE) whose text never
-    * matches the stored external form, so they must not prune here
-    * (stats still prune them conservatively). A null-partition file can
-    * never satisfy an equality. */
-  private def partitionAllows(f: DataFileEntry, c: String, v: Any): Boolean =
-    f.partitionValues.get(c) match {
-      case Some(Snaplog.HiveDefaultPartition) => false
-      case Some(stored) => v match {
-        case null => false
-        case _: String | _: Int | _: Long | _: Short | _: Byte =>
-          stored == String.valueOf(v)
-        case _ => true
-      }
-      case None => true
-    }
-
-  /** Exact strictness-aware range test against a recorded identity-
-    * partition value, when both sides are integral. `None` = cannot
-    * decide exactly here (no recorded value, non-integral operand,
-    * unparseable segment) — the caller falls back to conservative
-    * bounds. A null-partition file fails every range comparison. */
-  private def partitionCmp(f: DataFileEntry, c: String, v: Any)(
-      cmp: (Long, Long) => Boolean): Option[Boolean] =
-    f.partitionValues.get(c) match {
-      case Some(Snaplog.HiveDefaultPartition) => Some(false)
-      case Some(stored) => (scala.util.Try(stored.toLong).toOption, asLong(v)) match {
-        case (Some(s), Some(l)) => Some(cmp(s, l))
-        case _ => None
-      }
-      case None => None
-    }
-
-  private def asLong(v: Any): Option[Long] = v match {
-    case i: Int => Some(i.toLong)
-    case l: Long => Some(l)
-    case s: Short => Some(s.toLong)
-    case b: Byte => Some(b.toLong)
-    case _ => None
-  }
-
-  /** Column [min,max] bounds vs a requested [lo,hi]. Numeric literals
-    * compare as doubles, strings lexicographically — exactly the
-    * contract under which the bounds were collected. Missing bounds or
-    * unparseable combinations never prune. */
-  private def boundsAllow(f: DataFileEntry, c: String,
-      lo: Option[Any], hi: Option[Any]): Boolean =
-    f.columnStats.flatMap(_.get(c)) match {
-      case None => true
-      case Some(b) => (lo, hi) match {
-        case _ if numeric(lo) || numeric(hi) =>
-          (try Some((b.min.toDouble, b.max.toDouble))
-          catch { case _: NumberFormatException => None }) match {
-            case None => true
-            // NaN-poisoned bounds (parquet stat behavior with NaN data
-            // is undefined) must never prune — comparisons with NaN
-            // are all false, which would wrongly drop the file
-            case Some((mn, mx)) if mn.isNaN || mx.isNaN => true
-            case Some((mn, mx)) =>
-              lo.forall(v => asDouble(v).forall(_ <= mx)) &&
-                hi.forall(v => asDouble(v).forall(_ >= mn))
-          }
-        case (Some(_: String), _) | (_, Some(_: String)) =>
-          // UTF-8 byte order — the order parquet chose the bounds in
-          // (String.compareTo misorders supplementary characters,
-          // which could false-prune a file containing the value)
-          lo.forall(v => graft.table.FileStats.utf8Compare(
-            v.asInstanceOf[String], b.max) <= 0) &&
-            hi.forall(v => graft.table.FileStats.utf8Compare(
-              v.asInstanceOf[String], b.min) >= 0)
-        case _ => true
-      }
-    }
-
-  private def numeric(v: Option[Any]): Boolean = v.exists(asDouble(_).isDefined)
-
-  private def asDouble(v: Any): Option[Double] = v match {
-    case n: Number => Some(n.doubleValue())
-    case _ => None
-  }
 }
 
 /** Spark DataSource-v2 `TableCatalog` over a graft [[Catalog]] — the

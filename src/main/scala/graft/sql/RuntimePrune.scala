@@ -12,10 +12,11 @@ import graft.catalog.DataFileEntry
   * `false` only when the recorded identity value or a re-run of the
   * writer's transform PROVES no candidate value lands in the file.
   *
-  * Identity fields prune by exact external-text round-trip
-  * (string/integral literals only — dates/floats arrive in
-  * catalyst-internal forms and never prune here); transform fields
-  * (bucket/truncate/days/…) re-evaluate the writer's transform on each
+  * Identity fields prune by the file pruner's identity rule
+  * ([[graft.table.FilePrune.identityText]]: exact external-text
+  * round-trip of string/integral literals — dates/floats arrive in
+  * catalyst-internal forms and never prune here); column bounds are
+  * not consulted. Transform fields (bucket/truncate/days/…) re-evaluate the writer's transform on each
   * candidate literal through [[graft.table.PartitionTransforms.mayMatch]]
   * (the catalyst-internal literal IS the transform's input form).
   * Anything unrecognized keeps the file. Shared by the row-level COW
@@ -27,19 +28,6 @@ private[sql] object RuntimePrune {
     def colOf(e: V2Expression): Option[String] = e match {
       case nr: NamedReference if nr.fieldNames().length == 1 =>
         Some(nr.fieldNames()(0))
-      case _ => None
-    }
-    def litText(e: V2Expression): Option[String] = e match {
-      case l: V2Literal[_] =>
-        l.dataType() match {
-          case org.apache.spark.sql.types.StringType |
-               org.apache.spark.sql.types.IntegerType |
-               org.apache.spark.sql.types.LongType |
-               org.apache.spark.sql.types.ShortType |
-               org.apache.spark.sql.types.ByteType =>
-            Option(l.value()).map(String.valueOf)
-          case _ => None
-        }
       case _ => None
     }
     def catalystLits(es: Seq[V2Expression])
@@ -58,25 +46,20 @@ private[sql] object RuntimePrune {
     val ch = p.children()
     p.name() match {
       case "IN" | "=" if ch.nonEmpty =>
-        val identityOk = (colOf(ch(0)), ch.drop(1).toSeq.map(litText)) match {
-          case (Some(c), vals) if vals.nonEmpty && vals.forall(_.isDefined) =>
-            f.partitionValues.get(c) match {
-              case Some(stored) => vals.flatten.contains(stored)
-              case None => true // no recorded value: cannot prune
-            }
+        (colOf(ch(0)), catalystLits(ch.drop(1).toSeq)) match {
+          case (Some(c), Some(lits)) if lits.nonEmpty =>
+            val texts = lits.map(graft.table.FilePrune.identityText)
+            val identityOk = !texts.forall(_.isDefined) ||
+              f.partitionValues.get(c).forall(texts.flatten.contains)
+            val transformOk = !transformFields.exists(_.source.equalsIgnoreCase(c)) ||
+              graft.table.PartitionTransforms.mayMatch(f,
+                org.apache.spark.sql.catalyst.expressions.In(
+                  org.apache.spark.sql.catalyst.expressions
+                    .AttributeReference(c, lits.head.dataType)(), lits),
+                transformFields)
+            identityOk && transformOk
           case _ => true
         }
-        val transformOk = (colOf(ch(0)), catalystLits(ch.drop(1).toSeq)) match {
-          case (Some(c), Some(lits)) if lits.nonEmpty &&
-              transformFields.exists(_.source.equalsIgnoreCase(c)) =>
-            val attr = org.apache.spark.sql.catalyst.expressions
-              .AttributeReference(c, lits.head.dataType)()
-            graft.table.PartitionTransforms.mayMatch(f,
-              org.apache.spark.sql.catalyst.expressions.In(attr, lits),
-              transformFields)
-          case _ => true
-        }
-        identityOk && transformOk
       case _ => true
     }
   }

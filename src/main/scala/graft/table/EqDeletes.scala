@@ -162,10 +162,14 @@ object EqDeletes {
     * `(index, row position)` ([[joinVectors]]). `withMeta` keeps
     * `__scan_seq` / `__scan_pos` (the file's index and the row's
     * position in it) on the result. An empty selection is an empty
-    * frame with the same columns. */
+    * frame with the same columns. With the table's pruning `scope`, the
+    * data read also skips the data files that filters Catalyst pushes
+    * down to it rule out ([[LogFileIndex]]). The delete reads carry no
+    * scope, so no filter can drop a delete. */
   def visible(spark: SparkSession, readSchema: StructType,
       ordered: Seq[DataFileEntry], keep: DataFileEntry => Boolean,
-      withMeta: Boolean, readerOptions: Map[String, String] = Map.empty): DataFrame = {
+      withMeta: Boolean, readerOptions: Map[String, String] = Map.empty,
+      scope: Option[PruneScope] = None): DataFrame = {
     val indexed = ordered.zipWithIndex.map { case (f, i) => f -> i.toLong }
     val data = indexed.filter { case (f, _) => !f.deleteFile.contains(true) && keep(f) }
     if (data.isEmpty)
@@ -177,7 +181,7 @@ object EqDeletes {
     val dels = indexed.filter { case (f, i) => isEq(f) && i > data.head._2 }
     val vectors = ordered.filter(isPos)
     val meta = withMeta || vectors.nonEmpty
-    val scanned = LogScan.readSeq(spark, readSchema, data, readerOptions)
+    val scanned = LogScan.readSeq(spark, readSchema, data, readerOptions, scope)
     if (!meta && dels.isEmpty) return scanned
     val survivors = subtractEq(spark, scanned.select(col("*") +:
       col(LogScan.SeqCol).as("__scan_seq") +:

@@ -55,6 +55,10 @@ final class LakehouseTable(
     * @param partitionFilter identity-partition equality pruning done on
     *             log metadata — files from other partitions are never
     *             given to Spark at all.
+    * @param rangeFilter per-column [lo, hi] file skipping, judged by the
+    *             same pruner ([[FilePrune.keep]]) a filter on the
+    *             returned frame runs inside the log's file index; it
+    *             prunes files only and filters no row.
     */
   def scan(
       asOf: Option[Long] = None,
@@ -65,8 +69,10 @@ final class LakehouseTable(
     // order equality deletes key off; metadata pruning applies to the
     // data entries without disturbing the sequence
     val ordered = catalog.liveEntriesOrdered(namespace, name, asOf)
+    val m = meta
     residualPartitionFilter(
-      assembleOrdered(ordered, dataKeep(partitionFilter, rangeFilter)),
+      assembleOrdered(ordered, dataKeep(m, partitionFilter, rangeFilter),
+        scope = pruneScope(m)),
       ordered, partitionFilter)
   }
 
@@ -330,57 +336,47 @@ final class LakehouseTable(
     * outstanding-vector subtraction has already run. */
   private def assembleOrdered(ordered: Seq[DataFileEntry],
       keep: DataFileEntry => Boolean, retainMeta: Boolean = false,
-      schemaOverride: Option[StructType] = None): DataFrame =
+      schemaOverride: Option[StructType] = None,
+      scope: PruneScope = pruneScope(meta)): DataFrame =
     EqDeletes.visible(readSession, schemaOverride.getOrElse(readSchema),
-      ordered, keep, withMeta = retainMeta, readerOptions = readOptions)
+      ordered, keep, withMeta = retainMeta, readerOptions = readOptions,
+      scope = Some(scope))
+
+  /** The table's pruning scope: its partition spec and the names whose
+    * stats an evolution rebinding poisoned. */
+  private def pruneScope(m: TableMetadata): PruneScope = PruneScope(m.partitionColumns,
+    graft.types.FieldIds.namesSet(m.properties, graft.types.FieldIds.StatsUnsafeProp))
 
   /** Metadata pruning predicate over one data file — the filter
     * [[selectFiles]] applies, extracted so sequence-aware assembly can
-    * prune without re-replaying the log. */
-  private def dataKeep(
+    * prune without re-replaying the log. `partitionFilter` selects by
+    * recorded identity value; each `rangeFilter` entry becomes `>=` /
+    * `<=` predicates judged by [[FilePrune.keep]], for columns whose
+    * bounds were collected in a numeric domain only: string columns
+    * record lexicographic min/max ({"1","100","20"} records
+    * ["1","20"]) and decimal bounds are unscaled, so a range naming
+    * such a column never prunes. */
+  private def dataKeep(m: TableMetadata,
       partitionFilter: Map[String, String],
       rangeFilter: Map[String, (Option[Double], Option[Double])])
       : DataFileEntry => Boolean = {
-    val statsUnsafe = graft.types.FieldIds.namesSet(
-      meta.properties, graft.types.FieldIds.StatsUnsafeProp)
-    // a numeric range is only sound against bounds COLLECTED in a
-    // numeric domain: string columns record lexicographic min/max
-    // whose numeric parse can invert or exclude contained values
-    // ({"1","100","20"} records ["1","20"]), and decimal bounds are
-    // unscaled — a range filter naming such a column never prunes
-    val numericBounded: String => Boolean = {
-      import org.apache.spark.sql.types._
-      val m = meta.schema
-      c => m.fields.find(_.name.equalsIgnoreCase(c)).map(_.dataType).exists {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, GreaterThanOrEqual, LessThanOrEqual, Literal}
+    val ranges = rangeFilter.toSeq.flatMap { case (c, (lo, hi)) =>
+      m.schema.fields.find(_.name.equalsIgnoreCase(c)).map(_.dataType).filter {
         case IntegerType | LongType | ShortType | ByteType | FloatType |
              DoubleType | DateType | TimestampType | TimestampNTZType => true
         case _ => false
+      }.toSeq.flatMap { dt =>
+        val a = AttributeReference(c, dt)()
+        lo.map(v => GreaterThanOrEqual(a, Literal(v))) ++ hi.map(v => LessThanOrEqual(a, Literal(v)))
       }
     }
-    f => {
-      // a file with NO recorded value for the field predates the
-      // current spec (partition evolution) — pruning must keep it;
-      // scan() restores exactness with a residual row filter
-      val partOk = partitionFilter.forall { case (k, v) =>
-        f.partitionValues.get(k).forall(_ == v)
-      }
-      partOk && rangeFilter.forall {
-        case (c, _) if statsUnsafe(c.toLowerCase(java.util.Locale.ROOT)) ||
-          !numericBounded(c) => true
-        case (c, (lo, hi)) =>
-          f.columnStats.flatMap(_.get(c)) match {
-            case Some(b) =>
-              val parsed =
-                try Some((b.min.toDouble, b.max.toDouble))
-                catch { case _: NumberFormatException => None }
-              parsed.forall { case (mn, mx) =>
-                mn.isNaN || mx.isNaN ||
-                  (lo.forall(_ <= mx) && hi.forall(_ >= mn))
-              }
-            case None => true
-          }
-      }
-    }
+    val inRange = FilePrune.keep(ranges, pruneScope(m))
+    // a file with NO recorded value for the field predates the
+    // current spec (partition evolution) — pruning must keep it;
+    // scan() restores exactness with a residual row filter
+    f => partitionFilter.forall { case (k, v) => f.partitionValues.get(k).forall(_ == v) } &&
+      inRange(f)
   }
 
   /** The file set `scan` with the same arguments would read — partition
@@ -393,16 +389,14 @@ final class LakehouseTable(
       rangeFilter: Map[String, (Option[Double], Option[Double])] = Map.empty)
       : Seq[DataFileEntry] = {
     // Partition pruning then stat-based file skipping (Iceberg manifest
-    // pruning): drop files whose recorded identity value / [min,max]
-    // cannot match. Files without metadata for a column always survive —
-    // pruning is an optimization, never a correctness filter, so callers
-    // still apply the row-level predicate. Columns whose NAME was
-    // rebound by evolution (drop+re-add / rename onto a freed name)
-    // never prune: old files' name-keyed stats describe the
-    // previously-bound column. NaN-poisoned bounds never prune either
-    // (every comparison with NaN is false).
+    // pruning) through FilePrune.keep, the pruner every read shares:
+    // drop files whose recorded identity value / [min,max] cannot
+    // match. Files without metadata for a column always survive —
+    // pruning is an optimization, never a correctness filter, so
+    // callers still apply the row-level predicate. Columns whose NAME
+    // was rebound by evolution never prune, nor do NaN-poisoned bounds.
     catalog.liveFiles(namespace, name, asOf)
-      .filter(dataKeep(partitionFilter, rangeFilter))
+      .filter(dataKeep(meta, partitionFilter, rangeFilter))
   }
 
   /** Tag the current (or a given) snapshot with an immutable name —

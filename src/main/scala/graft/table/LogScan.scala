@@ -23,7 +23,8 @@ import graft.catalog.DataFileEntry
   * inference job per call. A log read is a `HadoopFsRelation` over
   * [[LogFileIndex]] (the log's paths and sizes, as `FileStatus`es) with
   * the caller's schema and reader options, so it plans the same
-  * `FileSourceScanExec` — column pruning, filter pushdown, vectorized
+  * `FileSourceScanExec` — file pruning on a table's data read (see
+  * [[LogFileIndex]]), column pruning, filter pushdown, vectorized
   * decode, `_metadata.file_path` / `_metadata.row_index` (in the path
   * text a listing reports) — without a listing's cost.
   *
@@ -54,21 +55,26 @@ object LogScan {
 
   /** `files` read under `schema` with reader `options`; each row's
     * [[SeqCol]] is its file's paired number (a replay index when the
-    * read is merge-on-read, see [[EqDeletes]]). */
+    * read is merge-on-read, see [[EqDeletes]]). A read of a table's
+    * data files passes its `scope`, and then the index lists only the
+    * files [[FilePrune.keep]] allows under the filters Spark pushes to
+    * the scan; key-file, vector and other log reads pass none and list
+    * every file. */
   def readSeq(spark: SparkSession, schema: StructType,
       files: Seq[(DataFileEntry, Long)],
-      options: Map[String, String] = Map.empty): DataFrame = {
+      options: Map[String, String] = Map.empty,
+      scope: Option[PruneScope] = None): DataFrame = {
     val conf = spark.sessionState.newHadoopConf()
     val fsFor = scala.collection.mutable.HashMap.empty[(String, String), FileSystem]
     val logged = files.map { case (f, seq) =>
       val p = new Path(f.path)
       val u = p.toUri
       val fs = fsFor.getOrElseUpdate((u.getScheme, u.getAuthority), p.getFileSystem(conf))
-      LogFile(fs.makeQualified(p), f.sizeBytes, seq)
+      LogFile(fs.makeQualified(p), f, seq)
     }
     // nullable like every file-source read: a file may lack a column
     // the table schema declares non-null (evolution null-fills it)
-    val relation = HadoopFsRelation(LogFileIndex(logged), StructType(Nil),
+    val relation = HadoopFsRelation(LogFileIndex(logged, scope), StructType(Nil),
       org.apache.spark.sql.GraftStreamingShim.nullable(schema), None,
       new LogParquetFormat, options)(spark)
     spark.baseRelationToDataFrame(relation)
@@ -120,26 +126,41 @@ object LogScan {
     }
   }
 
-  private[table] final case class LogFile(path: Path, size: Long, seq: Long)
+  private[table] final case class LogFile(path: Path, entry: DataFileEntry, seq: Long)
 }
 
 /** A fixed file list from the log: no listing, no existence check, one
   * partition directory with no partition values. Value equality, so
   * two reads of the same files at the same positions are the same plan
-  * (cache and exchange reuse see through it). */
-private[table] final case class LogFileIndex(files: Seq[LogScan.LogFile])
-    extends FileIndex {
+  * (cache and exchange reuse see through it).
+  *
+  * With a `scope` (a table's data read), `listFiles` prunes: it lists
+  * only the files [[FilePrune.keep]] allows under Spark's data filters,
+  * so a filter on the read skips files by their log metadata the way
+  * the SQL scan does. Pruning is conservative and Spark re-applies
+  * every filter above the scan, so it changes no row; the scan node's
+  * `numFiles` metric shows it, while [[inputFiles]] still names every
+  * file. Without a scope every file is listed. */
+private[table] final case class LogFileIndex(files: Seq[LogScan.LogFile],
+    scope: Option[PruneScope] = None) extends FileIndex {
   @transient private lazy val statuses = files.map { f =>
-    FileStatusWithMetadata(new FileStatus(f.size, false, 1, 0L, 0L, f.path),
+    FileStatusWithMetadata(new FileStatus(f.entry.sizeBytes, false, 1, 0L, 0L, f.path),
       Map(LogScan.SeqField -> f.seq))
   }
   override def rootPaths: Seq[Path] = files.map(_.path)
   override def listFiles(partitionFilters: Seq[Expression],
-      dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
-    Seq(PartitionDirectory(InternalRow.empty, statuses))
+      dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+    val listed = scope match {
+      case Some(s) if dataFilters.nonEmpty =>
+        val keep = FilePrune.keep(dataFilters, s)
+        files.zip(statuses).collect { case (f, st) if keep(f.entry) => st }
+      case _ => statuses
+    }
+    Seq(PartitionDirectory(InternalRow.empty, listed))
+  }
   override def inputFiles: Array[String] = files.map(_.path.toUri.toString).toArray
   override def refresh(): Unit = ()
-  override def sizeInBytes: Long = files.map(_.size).sum
+  override def sizeInBytes: Long = files.map(_.entry.sizeBytes).sum
   override def partitionSchema: StructType = StructType(Nil)
 }
 

@@ -213,6 +213,9 @@ class FieldEvolutionSpec extends SparkSpec {
     // native range-filter pruning is equally guarded
     assert(tbl.scan(rangeFilter = Map("value2" -> (Some(100.0), None)))
       .filter($"value2" >= 100).count() == 4)
+    // …and so is the pruning the log's file index does under a plain
+    // filter on the native scan
+    assert(tbl.scan().filter($"value2" >= 100).count() == 4)
   }
 
   test("delete on an evolved table resolves the renamed column by id") {

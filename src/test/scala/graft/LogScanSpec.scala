@@ -10,6 +10,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.ScalaUDF
 import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.FileScanRDD
 import org.apache.spark.sql.functions._
 
@@ -27,6 +28,8 @@ class LogScanSpec extends SparkSpec {
   import spark.implicits._
 
   private val schema = Seq((0L, "")).toDF("id", "v").schema
+
+  private object PlanWalk extends AdaptiveSparkPlanHelper
 
   /** `body`'s result and the descriptions of the Spark jobs it started. */
   private def jobsDuring[T](body: => T): (T, Seq[String]) = {
@@ -148,6 +151,49 @@ class LogScanSpec extends SparkSpec {
     val url = s"jdbc:derby:$dir/cat;create=true"
     registerSql("glogdepthj", s"$dir/wh", Some(url))
     depthInvariant(new JdbcCatalog(url, s"$dir/wh"), "glogdepthj")
+  }
+
+  /** The data scans of an executed frame (the file scans reading the
+    * `v` column, not key or vector files), through adaptive stages. */
+  private def dataScans(df: DataFrame): Seq[FileSourceScanExec] =
+    PlanWalk.collect(df.queryExecution.executedPlan) {
+      case s: FileSourceScanExec if s.output.exists(_.name == "v") => s
+    }
+
+  /** A point lookup through the native scan's filter lists one file of
+    * twenty: 20 single-file appends of disjoint 100-key ranges, then
+    * `id = 150` plans a data scan whose `numFiles` metric is 1 (the
+    * frame's `inputFiles` still names the whole index). Under an
+    * outstanding equality delete and then a position vector the rows
+    * still equal the model, building the read starts no job, and the
+    * data scan lists only the two files whose bounds hold 150. */
+  private def pointLookup(cat: Catalog): Unit = {
+    val tbl = LakehouseTable.create(cat, spark, "ns", "p1", schema)
+    (0L until 20L).foreach(b => tbl.append(
+      (b * 100L until (b + 1) * 100L).map(i => (i, s"v$i")).toDF("id", "v").coalesce(1)))
+    assert(cat.liveFiles("ns", "p1").size == 20)
+    def lookup(expect: Seq[(Long, String)]): Long = {
+      val (df, jobs) = jobsDuring(tbl.scan().filter(col("id") === 150L))
+      assert(jobs.isEmpty, s"building the lookup started jobs: $jobs")
+      assert(df.collect().map(r => (r.getLong(0), r.getString(1))).toSeq == expect)
+      dataScans(df) match {
+        case Seq(scan) => scan.metrics("numFiles").value
+        case other => fail(s"expected one data scan, planned ${other.size}")
+      }
+    }
+    assert(lookup(Seq((150L, "v150"))) == 1)
+    tbl.mergeDelta(Seq("id"), Seq((150L, "u"), (1234L, "w")).toDF("id", "v"))
+    assert(cat.liveDeleteFiles("ns", "p1").exists(EqDeletes.isEq))
+    assert(lookup(Seq((150L, "u"))) == 2)
+    tbl.deleteMor(col("id") === 150L)
+    assert(cat.liveDeleteFiles("ns", "p1").exists(EqDeletes.isPos))
+    assert(lookup(Nil) == 2)
+  }
+
+  test("a filter on the native scan prunes files in the log's index (Snaplog and JDBC)") {
+    pointLookup(new Snaplog(Files.createTempDirectory("graft-logscan-p1").toString))
+    val dir = Files.createTempDirectory("graft-logscan-p1-jdbc")
+    pointLookup(new JdbcCatalog(s"jdbc:derby:$dir/cat;create=true", s"$dir/wh"))
   }
 
   test("a read of more than 32 files runs no listing job") {

@@ -1673,4 +1673,68 @@ class SqlCatalogSpec extends SparkSpec {
     assert(tbl.scan().agg(sum(col("v"))).head().getLong(0) ==
       (0L until 1000L).map(i => (i * 7919) % 1000).sum)
   }
+
+  test("DATE and TIMESTAMP identity partitions prune by value in SQL and natively") {
+    val wh = Files.createTempDirectory("graft-sqlcat-temporal").toString
+    val cat = new Snaplog(wh)
+    spark.conf.set("spark.sql.catalog.gsqltemporal", classOf[GraftSqlCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gsqltemporal.warehouse", wh)
+    // one row per partition value of `p`; `lit(i)` is the SQL literal
+    // of row i's value
+    def check(name: String, lit: Int => String): Unit = {
+      val rows = spark.sql(s"SELECT * FROM VALUES (1, 10, ${lit(0)}), " +
+        s"(2, 20, ${lit(1)}), (3, 30, ${lit(2)}) AS v(id, x, p)")
+      val tbl = LakehouseTable.create(cat, spark, "ns", name, rows.schema, Seq("p"))
+      tbl.append(rows)
+      assert(cat.liveFiles("ns", name).size == 3)
+      val t = s"gsqltemporal.ns.$name"
+      def ids(where: String): Seq[Int] =
+        spark.sql(s"SELECT id FROM $t WHERE $where").collect().map(_.getInt(0)).sorted.toSeq
+      assert(ids(s"p = ${lit(1)}") == Seq(2))
+      assert(ids(s"p IN (${lit(1)}, ${lit(2)})") == Seq(2, 3))
+      assert(ids(s"p = ${lit(1)} AND x >= 0") == Seq(2))
+      assert(ids(s"p IN (${lit(0)}, ${lit(2)}) AND x > 15") == Seq(3))
+      val p1 = spark.sql(s"SELECT ${lit(1)}").head().get(0)
+      val p2 = spark.sql(s"SELECT ${lit(2)}").head().get(0)
+      def native(df: org.apache.spark.sql.DataFrame): Seq[Int] =
+        df.select("id").collect().map(_.getInt(0)).sorted.toSeq
+      assert(native(tbl.scan().filter(col("p") === p1)) == Seq(2))
+      assert(native(tbl.scan().filter(col("p").isin(p1, p2))) == Seq(2, 3))
+      assert(native(tbl.scan().filter(col("p") === p1 && col("x") >= 0)) == Seq(2))
+      spark.sql(s"UPDATE $t SET x = 9 WHERE p = ${lit(1)}")
+      assert(spark.sql(s"SELECT id, x FROM $t").collect()
+        .map(r => (r.getInt(0), r.getInt(1))).sorted.toSeq == Seq((1, 10), (2, 9), (3, 30)))
+      spark.sql(s"DELETE FROM $t WHERE p = ${lit(2)}")
+      assert(ids("true") == Seq(1, 2))
+      assert(native(tbl.scan()) == Seq(1, 2))
+    }
+    check("d", i => s"DATE '2024-01-0${4 + i}'")
+    check("ts", i => s"TIMESTAMP '2024-01-0${4 + i} 10:30:00'")
+  }
+
+  test("an empty string shares the null partition and is never pruned away") {
+    val wh = Files.createTempDirectory("graft-sqlcat-emptystr").toString
+    val cat = new Snaplog(wh)
+    spark.conf.set("spark.sql.catalog.gsqlempty", classOf[GraftSqlCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gsqlempty.warehouse", wh)
+    val rows = Seq((1, Some("a")), (2, Some("")), (3, None)).toDF("id", "s")
+    val tbl = LakehouseTable.create(cat, spark, "ns", "e", rows.schema, Seq("s"))
+    tbl.append(rows)
+    def ids(where: String): Seq[Int] =
+      spark.sql(s"SELECT id FROM gsqlempty.ns.e WHERE $where").collect()
+        .map(_.getInt(0)).sorted.toSeq
+    def count(where: String): Long =
+      spark.sql(s"SELECT COUNT(*) FROM gsqlempty.ns.e WHERE $where").head().getLong(0)
+    assert(ids("s = ''") == Seq(2))
+    assert(ids("s IN ('', 'a')") == Seq(1, 2))
+    assert(ids("s IS NOT NULL") == Seq(1, 2))
+    assert(ids("s < 'a'") == Seq(2))
+    assert(count("s = ''") == 1)
+    assert(count("s IS NOT NULL") == 2)
+    def native(c: org.apache.spark.sql.Column): Seq[Int] =
+      tbl.scan().filter(c).select("id").collect().map(_.getInt(0)).sorted.toSeq
+    assert(native(col("s") === "") == Seq(2))
+    assert(native(col("s").isNotNull) == Seq(1, 2))
+    assert(native(col("s") < "a") == Seq(2))
+  }
 }
