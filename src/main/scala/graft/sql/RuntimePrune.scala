@@ -16,8 +16,9 @@ import graft.catalog.DataFileEntry
   * ([[graft.table.FilePrune.identityText]]: exact external-text
   * round-trip of string/integral literals — dates/floats arrive in
   * catalyst-internal forms and never prune here); column bounds are
-  * not consulted. Transform fields (bucket/truncate/days/…) re-evaluate the writer's transform on each
-  * candidate literal through [[graft.table.PartitionTransforms.mayMatch]]
+  * not consulted. Transform fields (bucket/truncate/days/…)
+  * re-evaluate the writer's transform on each candidate literal
+  * through [[graft.table.PartitionTransforms.mayMatch]]
   * (the catalyst-internal literal IS the transform's input form).
   * Anything unrecognized keeps the file. Shared by the row-level COW
   * scan (runtime group filtering for MERGE/UPDATE/DELETE) and the batch
